@@ -84,62 +84,24 @@ object HnswIndex {
     (HnswGraph.fromAdjacency(flat, dim, n, hp, adj), sorted)
   }
 
-  /** Executor-resident rebuilt shard graphs — the HNSW twin of
-    * [[VamanaIndex.ShardGraphCache]] (same (index token, partition)
-    * keying, same zero-deserialization hit path, same rationale: a
-    * serving executor loads the graph once). Shares the Vamana tier's
-    * rebuild-per-run degradation past the byte cap. Cleared by
-    * [[release]]. */
-  private[graft] object GraphCache {
-    private val log = org.slf4j.LoggerFactory.getLogger("graft.HnswGraphCache")
-    private val cache = TrieMap.empty[(String, Int),
-      (Map[Int, (HnswGraph, Array[HnswRow])], Long)]
-    private val bytesUsed = new java.util.concurrent.atomic.AtomicLong(0L)
-    private def capBytes: Long =
-      sys.env.get("GRAFT_GRAPH_CACHE_MB")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .map(_ << 20).getOrElse(4096L << 20)
-
-    /** See [[VamanaIndex.ShardGraphCache.getOrRebuild]] — same
-      * superseded-token eviction + reserve-then-rollback accounting. */
-    def getOrRebuild(token: String, pid: Int, it: Iterator[HnswRow],
-        hp: HnswParams): Map[Int, (HnswGraph, Array[HnswRow])] =
-      cache.get((token, pid)) match {
-        case Some((m, _)) => m
-        case None =>
-          val prefix = token.substring(0, token.lastIndexOf(':') + 1)
-          cache.keysIterator
-            .filter(k => k._1 != token && k._1.startsWith(prefix))
-            .foreach(k => cache.remove(k)
-              .foreach { case (_, e) => bytesUsed.addAndGet(-e) })
-          val rows = it.toArray
-          val m = rows.groupBy(_.shard).map { case (sh, group) =>
-            sh -> rebuildShardGraph(group, hp)
-          }
-          val est = rows.iterator.map(r =>
-            64L + 8L * r.embedding.length +
-              16L * r.layers.iterator.map(_.length.toLong).sum).sum
-          if (bytesUsed.addAndGet(est) <= capBytes) {
-            if (cache.putIfAbsent((token, pid), (m, est)).isEmpty)
-              log.info(s"miss: rebuilt ${m.size} HNSW shard graphs for " +
-                s"($token, p$pid), cached ${est >> 20} MiB")
-            else bytesUsed.addAndGet(-est)
-          } else {
-            bytesUsed.addAndGet(-est)
-            log.warn(s"miss over cap: serving ($token, p$pid) uncached — " +
-              "resident tier is degrading to rebuild-per-run")
-          }
-          m
+  /** This partition's shard graphs from the warm tier
+    * ([[GraphCache]], shared with [[VamanaIndex]] under one byte
+    * budget), rebuilt from `it` on a miss. */
+  private[graft] def residentShards(token: String, pid: Int, it: Iterator[HnswRow],
+      hp: HnswParams): Map[Int, (HnswGraph, Array[HnswRow])] =
+    GraphCache.getOrLoad(token, pid) {
+      val rows = it.toArray
+      val m = rows.groupBy(_.shard).map { case (sh, group) =>
+        sh -> rebuildShardGraph(group, hp)
       }
-
-    def clear(): Unit = { cache.clear(); bytesUsed.set(0L) }
-    private[graft] def size: Int = cache.size
-    private[graft] def bytes: Long = bytesUsed.get()
-  }
+      (m, rows.iterator.map(r =>
+        64L + 8L * r.embedding.length +
+          16L * r.layers.iterator.map(_.length.toLong).sum).sum)
+    }
 
   /** Batch search, identical harness shape to [[VamanaIndex.search]]:
     * broadcast queries, per-shard ef-search, bounded TopK merge.
-    * `resident` routes through [[GraphCache]] (see
+    * `resident` routes through [[residentShards]] (see
     * [[VamanaIndex.search]]'s twin parameter). */
   def search(
       index: Dataset[HnswRow],
@@ -165,7 +127,7 @@ object HnswIndex {
       case Some(token) =>
         index.mapPartitions { it =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
-          GraphCache.getOrRebuild(token, pid, it, hp).iterator
+          residentShards(token, pid, it, hp).iterator
             .flatMap { case (_, (g, sorted)) => serveShard(g, sorted) }
         }
       case None =>

@@ -195,109 +195,33 @@ object PqCodebook {
   }
 }
 
-/** PQ-guided best-first beam search — the DiskANN traversal: the
-  * frontier and working set are ordered by ADC distances computed
-  * from the in-memory codes; only the final working set (≤ beamWidth
-  * candidates) is reranked with full-precision distances. Same
-  * working-set insert and termination rules as [[VamanaGraph]]'s and
-  * [[MmapIndex]]'s exact beam search, so the traversal differs from
-  * them ONLY in the distance used to steer it. */
+/** Two-tier best-first beam search — the DiskANN traversal: the
+  * [[BestFirst]] kernel is steered by a RESIDENT approximate distance
+  * (ADC lookups over in-memory PQ codes, or xor+popcount over sign
+  * bits), and only the final working set (≤ beamWidth candidates) is
+  * reranked with full-precision distances. The traversal differs from
+  * [[MmapIndex.search]] ONLY in the distance used to steer it. */
 object PqSearch {
 
-  /** @param adjFill fill-style adjacency accessor: writes row's
-    *                out-neighbors into the caller's buffer, returns
-    *                the count — allocation-free on the hot path (the
-    *                traversal visits hundreds of rows per query; an
-    *                Array-returning accessor was pure GC pressure)
-    * @param maxDegree sizes the reused neighbor buffer
-    * @param entry   start node (the index's medoid)
-    * @param lutArr  the query's ADC table ([[PqCodebook.lut]])
-    * @param codes   resident n·m code array
-    * @param cb      the codebook that produced both
-    * @param exact   full-precision distance to the query (rerank only)
+  /** @param n      row count of the graph (ids in [0, n))
+    * @param adj    adjacency fill ([[BestFirst.Adjacency]])
+    * @param entry  start node (the index's medoid)
+    * @param approx resident approximate distance of a row (steering)
+    * @param exact  full-precision distance to the query (rerank only)
     * @return top-k (local row, EXACT distance) ascending by (dist, id)
     */
-  def search(
-      adjFill: (Int, Array[Int]) => Int, maxDegree: Int, entry: Int,
-      lutArr: Array[Double], codes: Array[Byte], cb: PqCodebook,
-      exact: Int => Double, k: Int, beamWidth: Int): Array[(Int, Double)] =
-    searchSteered(adjFill, maxDegree, entry,
-      j => cb.adc(lutArr, codes, j), exact, k, beamWidth)
-
-  /** The two-tier traversal with the STEERING metric abstracted: the
-    * PQ tier steers by ADC lookups, the binary tier by xor+popcount
-    * Hamming — identical frontier/working-set/rerank mechanics either
-    * way, so the kernels cannot drift. `approx` is the resident
-    * approximate distance of a local row; `exact` is the
-    * full-precision rerank (file-backed). */
   def searchSteered(
-      adjFill: (Int, Array[Int]) => Int, maxDegree: Int, entry: Int,
+      n: Int, adj: BestFirst.Adjacency, entry: Int,
       approx: Int => Double,
       exact: Int => Double, k: Int, beamWidth: Int): Array[(Int, Double)] = {
-    val bw = math.max(beamWidth, k)
-    val wIds = new Array[Int](bw)
-    val wDists = new Array[Double](bw)
-    var wLen = 0
-    @inline def worstD = if (wLen == 0) Double.PositiveInfinity else wDists(wLen - 1)
-    def wInsert(id: Int, d: Double): Unit = {
-      var pos = wLen
-      while (pos > 0 && (wDists(pos - 1) > d || (wDists(pos - 1) == d && wIds(pos - 1) > id))) pos -= 1
-      if (pos >= bw) return
-      val newLen = math.min(wLen + 1, bw)
-      var x = newLen - 1
-      while (x > pos) { wIds(x) = wIds(x - 1); wDists(x) = wDists(x - 1); x -= 1 }
-      wIds(pos) = id; wDists(pos) = d
-      wLen = newLen
-    }
-
-    val nbrBuf = new Array[Int](maxDegree)
-    val visited = new java.util.HashSet[Integer](bw * 4)
-    val frontier = new java.util.PriorityQueue[Array[Double]](64,
-      (a: Array[Double], b: Array[Double]) => {
-        val c = java.lang.Double.compare(a(0), b(0))
-        if (c != 0) c else java.lang.Double.compare(a(1), b(1))
-      })
-
-    val d0 = approx(entry)
-    visited.add(entry); wInsert(entry, d0); frontier.add(Array(d0, entry.toDouble))
-
-    var done = false
-    while (!done && !frontier.isEmpty) {
-      val top = frontier.peek()
-      if (wLen >= bw && top(0) >= worstD) done = true
-      else {
-        frontier.poll()
-        val cnt = adjFill(top(1).toInt, nbrBuf)
-        var t = 0
-        while (t < cnt) {
-          val nb = nbrBuf(t)
-          if (visited.add(nb)) {
-            val d = approx(nb)
-            if (wLen < bw || d < worstD || (d == worstD && nb < wIds(wLen - 1))) {
-              wInsert(nb, d); frontier.add(Array(d, nb.toDouble))
-            }
-          }
-          t += 1
-        }
-      }
-    }
-
+    val s = BestFirst.scratch()
+    val wLen = BestFirst.search(s, n, entry, math.max(beamWidth, k), adj, approx)
     // full-precision rerank of the working set only (≤ bw candidates)
-    val rIds = new Array[Int](wLen)
+    val rIds = JArrays.copyOf(s.wIds, wLen)
     val rDists = new Array[Double](wLen)
     var i = 0
-    while (i < wLen) { rIds(i) = wIds(i); rDists(i) = exact(wIds(i)); i += 1 }
-    // insertion sort by (exact dist, id) — wLen ≤ bw is small
-    i = 1
-    while (i < wLen) {
-      val id = rIds(i); val d = rDists(i)
-      var j = i - 1
-      while (j >= 0 && (rDists(j) > d || (rDists(j) == d && rIds(j) > id))) {
-        rIds(j + 1) = rIds(j); rDists(j + 1) = rDists(j); j -= 1
-      }
-      rIds(j + 1) = id; rDists(j + 1) = d
-      i += 1
-    }
+    while (i < wLen) { rDists(i) = exact(rIds(i)); i += 1 }
+    BestFirst.sortPairs(rIds, rDists, 0, wLen - 1)
     val out = new Array[(Int, Double)](math.min(k, wLen))
     i = 0
     while (i < out.length) { out(i) = (rIds(i), rDists(i)); i += 1 }

@@ -42,6 +42,49 @@ object SingleFileIndex {
 
   private val Pad: Int = -1 // 0xFFFFFFFF as u32 (reference PAD_U32, lib.rs:51)
 
+  /** Decode adjacency row `row` — `maxDegree` u32 LE ids starting at
+    * byte `off` of `bb`, 0xFFFFFFFF padding skipped — into `out` and
+    * return the neighbor count; ids past `out.length` are counted but
+    * not written (the [[BestFirst.Adjacency]] contract). The ONE
+    * decoder behind [[importLocal]], [[importLocalU8]] and
+    * [[MmapIndex]]: any other id outside [0, n) is rejected here,
+    * naming the file, row and slot, because the search's epoch marks
+    * index by neighbor id. */
+  private[index] def decodeRow(bb: ByteBuffer, off: Int, maxDegree: Int, n: Int,
+      path: String, row: Int, out: Array[Int]): Int = {
+    var cnt = 0
+    var t = 0
+    while (t < maxDegree) {
+      val nb = bb.getInt(off + 4 * t)
+      if (nb != Pad) {
+        if (nb < 0 || nb >= n)
+          throw new IllegalArgumentException(
+            s"corrupt adjacency in $path: row $row slot $t holds neighbor id " +
+              s"${Integer.toUnsignedString(nb)}, outside [0, $n)")
+        if (cnt < out.length) out(cnt) = nb
+        cnt += 1
+      }
+      t += 1
+    }
+    cnt
+  }
+
+  /** Read the whole adjacency region of a file into heap lists. */
+  private def readAdjacency(raf: RandomAccessFile, meta: FileMeta, path: String,
+      graph: Array[Array[Int]]): Unit = {
+    raf.seek(meta.adjacencyOffset)
+    val adjBytes = new Array[Byte](4 * meta.maxDegree)
+    val bb = ByteBuffer.wrap(adjBytes).order(ByteOrder.LITTLE_ENDIAN)
+    val row = new Array[Int](meta.maxDegree)
+    var i = 0
+    while (i < meta.numVectors) {
+      raf.readFully(adjBytes)
+      val cnt = decodeRow(bb, 0, meta.maxDegree, meta.numVectors, path, i, row)
+      graph(i) = java.util.Arrays.copyOf(row, cnt)
+      i += 1
+    }
+  }
+
   /** Fixed gap before the vectors region (reference lib.rs:558). */
   val VectorsOffset: Long = 1L << 20
 
@@ -386,8 +429,7 @@ object SingleFileIndex {
   }
 
   /** Distributed serving straight off a reference-layout single file:
-    * each task memory-maps the file once (an [[MmapIndex]] instance is
-    * single-threaded, and a Spark task is one thread) and serves its
+    * each task memory-maps the file once and serves its
     * partition of queries — cluster-parallel queries over one mmap'd
     * index, the engine analog of the reference's rayon concurrent
     * queries (README "Parallel query processing"). The file must be
@@ -845,22 +887,7 @@ object SingleFileIndex {
           best
         }
       val g = new U8Graph(codes, dim, n, entry)
-      raf.seek(meta.adjacencyOffset)
-      val adjBytes = new Array[Byte](4 * meta.maxDegree)
-      var i = 0
-      while (i < n) {
-        raf.readFully(adjBytes)
-        val bb = ByteBuffer.wrap(adjBytes).order(ByteOrder.LITTLE_ENDIAN)
-        val lst = new scala.collection.mutable.ArrayBuffer[Int](meta.maxDegree)
-        var t = 0
-        while (t < meta.maxDegree) {
-          val p = bb.getInt
-          if (p != Pad) lst += p
-          t += 1
-        }
-        g.graph(i) = lst.toArray
-        i += 1
-      }
+      readAdjacency(raf, meta, path, g.graph)
       (g, loadIds(path, n), VamanaParams(maxDegree = meta.maxDegree, metric = metricName))
     } finally raf.close()
   }
@@ -946,22 +973,7 @@ object SingleFileIndex {
       // of the SAME file would start from different entries and could
       // return different results
       if (meta.medoidId >= 0 && meta.medoidId < n) g.entryOverride = meta.medoidId
-      raf.seek(meta.adjacencyOffset)
-      val adjBytes = new Array[Byte](4 * meta.maxDegree)
-      i = 0
-      while (i < n) {
-        raf.readFully(adjBytes)
-        val bb = ByteBuffer.wrap(adjBytes).order(ByteOrder.LITTLE_ENDIAN)
-        val lst = new scala.collection.mutable.ArrayBuffer[Int](meta.maxDegree)
-        var t = 0
-        while (t < meta.maxDegree) {
-          val p = bb.getInt
-          if (p != Pad) lst += p
-          t += 1
-        }
-        g.graph(i) = lst.toArray
-        i += 1
-      }
+      readAdjacency(raf, meta, path, g.graph)
       (g, loadIds(path, n), params)
     } finally raf.close()
   }
@@ -987,8 +999,8 @@ object SingleFileIndex {
   * into the graph), so the equivalence holds for reference-written
   * files too, whose random-pivot medoid graft would not recompute.
   *
-  * One instance serves one thread (it reuses a per-row scratch
-  * buffer), same contract as VamanaGraph's serving scratch.
+  * The search is [[BestFirst]], and every per-query buffer lives in
+  * the call, so one instance can be searched by many threads at once.
   *
   * Files beyond 2 GiB — a Java `MappedByteBuffer` is int-indexed —
   * are served through ROW-ALIGNED SEGMENTED mappings: the vector and
@@ -1060,12 +1072,10 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
 
   private val metric = Metric.byName(metricName0)
   private val isCos = metric eq Metric.Cosine
-  private val rowScratch = new Array[Float](dim)
-  private val packedQ = if (packed) new Array[Long](meta.dim) else null
   /** Native u8 integer-L2 path (the reference's generic-element
     * serving: examples/bigann.rs runs the whole search in u8):
     * when the file is u8/L2 and the query itself is exactly
-    * u8-valued, the hot loop bulk-copies the candidate's dim bytes
+    * u8-valued, each evaluation bulk-copies the candidate's dim bytes
     * off the mapping once and accumulates (a−b)² in an int over
     * primitive arrays — no per-slot float conversion, 1/4 the
     * memory traffic of the f32 loop, and a loop shape the JIT can
@@ -1075,9 +1085,10 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     * sqrt. Int accumulation is exact for dim ≤ 8192 (8192·255² <
     * 2³¹); larger dims fall back to the widened path. */
   private val u8L2 = u8 && (metric eq Metric.L2) && dim <= 8192
-  private val qInt = if (u8L2) new Array[Int](dim) else null
-  private val byteScratch = if (u8L2) new Array[Byte](dim) else null
-  private var qIntValid = false
+
+  private val adjacency: BestFirst.Adjacency = (row, buf) =>
+    SingleFileIndex.decodeRow(adjMap.bufOf(row), adjMap.offOf(row), meta.maxDegree, n,
+      path, row, buf)
 
   /** Serving entry point: the file's stored medoid when valid. A
     * foreign file carrying the reference's 0xFFFFFFFF no-medoid
@@ -1093,15 +1104,12 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       val np = math.min(64, n)
       val step = math.max(1, n / np)
       val pivots = (0 until np).map(_ * step % n).distinct.toArray
-      val pvecs = pivots.map(vector)
+      val pdist = pivots.map(p => queryDist(vector(p)))
       var best = 0; var bestScore = Double.MaxValue
       var i = 0
       while (i < n) {
         var s = 0.0; var p = 0
-        while (p < pvecs.length) {
-          val qn = prepQuery(pvecs(p))
-          s += distQ(pvecs(p), qn, i); p += 1
-        }
+        while (p < pdist.length) { s += pdist(p)(i); p += 1 }
         if (s < bestScore) { bestScore = s; best = i }
         i += 1
       }
@@ -1134,12 +1142,6 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
   @inline private def slot(b: MappedByteBuffer, off: Int, d: Int): Float =
     if (u8) (b.get(off + d) & 0xff).toFloat else b.getFloat(off + 4 * d)
 
-  @inline private def loadRow(i: Int): Unit = {
-    val vb = vecMap.bufOf(i); val off = vecMap.offOf(i)
-    var d = 0
-    while (d < dim) { rowScratch(d) = slot(vb, off, d); d += 1 }
-  }
-
   /** cosine norms cached once (same floored form as VamanaGraph). */
   private val norms: Array[Double] =
     if (!isCos) null
@@ -1156,132 +1158,72 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       out
     }
 
-  @inline private def distQ(q: Array[Float], qNorm: Double, j: Int): Double =
+  /** Cosine query norm, floored like the row norms. */
+  private def queryNorm(q: Array[Float]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < q.length) { acc += q(i).toDouble * q(i).toDouble; i += 1 }
+    math.max(math.sqrt(acc), java.lang.Double.MIN_NORMAL)
+  }
+
+  /** Exact distance from `q` to any row. The query's per-call state —
+    * packed hamming words, the u8 integer copy, the row buffer — is
+    * captured here, never stored in the instance. */
+  private def queryDist(q: Array[Float]): Int => Double = {
+    require(q.length == dim, s"query dim ${q.length} != index dim $dim")
     if (packed) {
       // reference serving math: popcount over xor'd u64 words, equal
       // to the unpacked differing-slot count for {0,1} vectors
-      val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
-      var c = 0; var w = 0
-      while (w < meta.dim) {
-        c += java.lang.Long.bitCount(packedQ(w) ^ vb.getLong(off + 8 * w))
-        w += 1
-      }
-      c.toDouble
-    } else if (isCos) {
-      val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
-      var dot = 0.0; var i = 0
-      while (i < dim) { dot += q(i).toDouble * slot(vb, off, i).toDouble; i += 1 }
-      1.0 - dot / (qNorm * norms(j))
-    } else if (qIntValid) {
-      vecMap.bufOf(j).get(vecMap.offOf(j), byteScratch, 0, dim)
-      var acc = 0; var i = 0
-      while (i < dim) {
-        val d = qInt(i) - (byteScratch(i) & 0xff)
-        acc += d * d; i += 1
-      }
-      math.sqrt(acc.toDouble)
-    } else {
-      loadRow(j)
-      metric.eval(q, 0, rowScratch, 0, dim)
-    }
-
-  /** Per-query state shared by [[search]] and [[searchPq]]: arms the
-    * u8 integer path when the query is exactly u8-valued, packs a
-    * hamming query into words, and returns the cosine norm. */
-  private def prepQuery(q: Array[Float]): Double = {
-    require(q.length == dim, s"query dim ${q.length} != index dim $dim")
-    // u8/L2: take the integer path when every query slot is exactly
-    // u8-valued (the BigANN case); a fractional or out-of-range query
-    // falls back to the widened-float loop with identical semantics.
-    qIntValid = u8L2 && {
-      var i = 0; var ok = true
-      while (ok && i < dim) {
-        val v = q(i); val vi = v.toInt
-        if (v == vi.toFloat && vi >= 0 && vi <= 255) { qInt(i) = vi; i += 1 }
-        else ok = false
-      }
-      ok
-    }
-    if (packed) {
+      val qw = new Array[Long](meta.dim)
       var w = 0
       while (w < meta.dim) {
-        var word = 0L
         var b = 0
-        while (b < 64) { if (q(w * 64 + b) != 0f) word |= (1L << b); b += 1 }
-        packedQ(w) = word
+        while (b < 64) { if (q(w * 64 + b) != 0f) qw(w) |= (1L << b); b += 1 }
         w += 1
       }
-    }
-    if (isCos) {
-      var acc = 0.0; var i = 0
-      while (i < q.length) { acc += q(i).toDouble * q(i).toDouble; i += 1 }
-      math.max(math.sqrt(acc), java.lang.Double.MIN_NORMAL)
-    } else 0.0
-  }
-
-  /** Beam search straight off the mapping — same working-set insert
-    * and termination rules as [[VamanaGraph.search]], so the results
-    * match the heap-resident graph exactly. Returns (global id, dist)
-    * ascending. */
-  def search(q: Array[Float], k: Int, beamWidth: Int): Array[(Long, Double)] = {
-    val bw = math.max(beamWidth, k)
-    // force the (possibly fallback-computed) entry BEFORE prepQuery:
-    // the fallback scan preps pivot queries and would clobber the
-    // cached query state prepQuery is about to set
-    val entry = entryPoint
-    val qNorm = prepQuery(q)
-
-    val wIds = new Array[Int](bw)
-    val wDists = new Array[Double](bw)
-    var wLen = 0
-    @inline def worstD = if (wLen == 0) Double.PositiveInfinity else wDists(wLen - 1)
-    def wInsert(id: Int, d: Double): Unit = {
-      var pos = wLen
-      while (pos > 0 && (wDists(pos - 1) > d || (wDists(pos - 1) == d && wIds(pos - 1) > id))) pos -= 1
-      if (pos >= bw) return
-      val newLen = math.min(wLen + 1, bw)
-      var m = newLen - 1
-      while (m > pos) { wIds(m) = wIds(m - 1); wDists(m) = wDists(m - 1); m -= 1 }
-      wIds(pos) = id; wDists(pos) = d
-      wLen = newLen
-    }
-
-    val visited = new java.util.HashSet[Integer](bw * 4)
-    val frontier = new java.util.PriorityQueue[Array[Double]](64,
-      (a: Array[Double], b: Array[Double]) => {
-        val c = java.lang.Double.compare(a(0), b(0))
-        if (c != 0) c else java.lang.Double.compare(a(1), b(1))
-      })
-
-    val d0 = distQ(q, qNorm, entry)
-    visited.add(entry); wInsert(entry, d0); frontier.add(Array(d0, entry.toDouble))
-
-    var done = false
-    while (!done && !frontier.isEmpty) {
-      val top = frontier.peek()
-      if (wLen >= bw && top(0) >= worstD) done = true
-      else {
-        frontier.poll()
-        val cur = top(1).toInt
-        val ab = adjMap.bufOf(cur); val aOff = adjMap.offOf(cur)
-        var t = 0
-        while (t < meta.maxDegree) {
-          val nb = ab.getInt(aOff + 4 * t)
-          if (nb != -1 && visited.add(nb)) {
-            val d = distQ(q, qNorm, nb)
-            if (wLen < bw || d < worstD || (d == worstD && nb < wIds(wLen - 1))) {
-              wInsert(nb, d); frontier.add(Array(d, nb.toDouble))
-            }
-          }
-          t += 1
+      j => {
+        val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
+        var c = 0; var w = 0
+        while (w < meta.dim) {
+          c += java.lang.Long.bitCount(qw(w) ^ vb.getLong(off + 8 * w))
+          w += 1
+        }
+        c.toDouble
+      }
+    } else if (isCos) {
+      val qNorm = queryNorm(q)
+      j => {
+        val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
+        var dot = 0.0; var i = 0
+        while (i < dim) { dot += q(i).toDouble * slot(vb, off, i).toDouble; i += 1 }
+        1.0 - dot / (qNorm * norms(j))
+      }
+    } else {
+      val qInt = if (u8L2) U8Graph.intQuery(q) else null
+      if (qInt != null) {
+        val bytes = new Array[Byte](dim)
+        j => {
+          vecMap.bufOf(j).get(vecMap.offOf(j), bytes, 0, dim)
+          math.sqrt(U8Graph.intL2(qInt, bytes, 0).toDouble)
+        }
+      } else {
+        val row = new Array[Float](dim)
+        j => {
+          val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
+          var d = 0
+          while (d < dim) { row(d) = slot(vb, off, d); d += 1 }
+          metric.eval(q, 0, row, 0, dim)
         }
       }
     }
-    val out = new Array[(Long, Double)](math.min(k, wLen))
-    var i = 0
-    while (i < out.length) { out(i) = (ids(wIds(i)), wDists(i)); i += 1 }
-    out
   }
+
+  /** Beam search straight off the mapping through [[BestFirst]] —
+    * the kernel [[VamanaGraph.search]] runs, so the results match the
+    * heap-resident graph exactly. Returns (global id, dist)
+    * ascending. */
+  def search(q: Array[Float], k: Int, beamWidth: Int): Array[(Long, Double)] =
+    BestFirst.topK(n, entryPoint, k, beamWidth, adjacency, queryDist(q))
+      .map { case (row, d) => (ids(row), d) }
 
   // ----------------------------------------------------- PQ-guided serving
 
@@ -1385,14 +1327,10 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       words: Array[Long], wpv: Int, rotation: Array[Float]): Array[(Long, Double)] = {
     require(words.length == n.toLong * wpv,
       s"words length ${words.length} != n($n)·wpv($wpv) — state from another file?")
-    val entry = entryPoint // force before prepQuery (see search)
-    val qNorm = prepQuery(q)
-    val qSteer0 =
-      if (!isCos) q
-      else { val inv = 1.0 / qNorm; Array.tabulate(dim)(i => (q(i) * inv).toFloat) }
+    val exact = queryDist(q)
     val qSteer =
-      if (rotation == null) qSteer0
-      else graft.operators.Opq.rotateOf(qSteer0, rotation, dim)
+      if (rotation == null) steerQuery(q)
+      else graft.operators.Opq.rotateOf(steerQuery(q), rotation, dim)
     val qw = new Array[Long](wpv)
     packSignBits(qSteer, qw, 0)
     @inline def hamming(j: Int): Double = {
@@ -1401,25 +1339,15 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       while (t < wpv) { h += java.lang.Long.bitCount(words(base + t) ^ qw(t)); t += 1 }
       h.toDouble
     }
-    PqSearch.searchSteered(adjacencyInto, meta.maxDegree, entry,
-        hamming, j => distQ(q, qNorm, j), k, math.max(beamWidth, k))
+    PqSearch.searchSteered(n, adjacency, entryPoint, hamming, exact, k, beamWidth)
       .map { case (rowId, d) => (ids(rowId), d) }
   }
 
-  /** Out-neighbors of row `cur` (padding stripped) read off the
-    * mapping into the caller's buffer — allocation-free, the same
-    * inline-read discipline as [[search]]'s own adjacency loop. */
-  private def adjacencyInto(cur: Int, out: Array[Int]): Int = {
-    val ab = adjMap.bufOf(cur); val aOff = adjMap.offOf(cur)
-    var cnt = 0
-    var t = 0
-    while (t < meta.maxDegree) {
-      val nb = ab.getInt(aOff + 4 * t)
-      if (nb != -1) { out(cnt) = nb; cnt += 1 }
-      t += 1
-    }
-    cnt
-  }
+  /** The query as the resident codes see it: L2-normalized for cosine
+    * files (the [[loadPqRow]] geometry), as given otherwise. */
+  private def steerQuery(q: Array[Float]): Array[Float] =
+    if (!isCos) q
+    else { val inv = 1.0 / queryNorm(q); Array.tabulate(dim)(i => (q(i) * inv).toFloat) }
 
   /** Two-tier beam search (the DiskANN serving split): traversal is
     * steered by ADC distances over the RESIDENT `codes` array — the
@@ -1433,16 +1361,10 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       cb: PqCodebook, codes: Array[Byte]): Array[(Long, Double)] = {
     require(codes.length == n.toLong * cb.m,
       s"codes length ${codes.length} != n($n)·m(${cb.m}) — state from another file?")
-    val entry = entryPoint // force before prepQuery (see search)
-    val qNorm = prepQuery(q)
-    val qSteer =
-      if (!isCos) q
-      else {
-        val inv = 1.0 / qNorm
-        Array.tabulate(dim)(i => (q(i) * inv).toFloat)
-      }
-    PqSearch.search(adjacencyInto, meta.maxDegree, entry, cb.lut(qSteer), codes, cb,
-        j => distQ(q, qNorm, j), k, math.max(beamWidth, k))
+    val exact = queryDist(q)
+    val lut = cb.lut(steerQuery(q))
+    PqSearch.searchSteered(n, adjacency, entryPoint, j => cb.adc(lut, codes, j), exact,
+        k, beamWidth)
       .map { case (rowId, d) => (ids(rowId), d) }
   }
 

@@ -293,7 +293,7 @@ object StitchedIndex {
     * full filter + shuffle + per-cell graph rebuild of the label's
     * rows on EVERY query batch. A serving fleet pins its hot labels
     * exactly like this: the label partition loads once, its cell
-    * graphs stay executor-resident ([[VamanaIndex.ShardGraphCache]]),
+    * graphs stay executor-resident ([[GraphCache]]),
     * and a query batch pays only beam search + the top-k merge.
     * Cold labels keep the one-shot [[search]] path. */
   private val servedLabelCache =

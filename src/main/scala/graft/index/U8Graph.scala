@@ -1,28 +1,24 @@
 package graft.index
 
-import java.util.{Arrays => JArrays}
-
 /** Heap-resident u8 serving graph — the reference's generic-element
   * index kept byte-resident (the reference is generic over element
   * type, lib.rs:7-8, and examples/bigann.rs builds AND serves u8
   * natively). [[SingleFileIndex.importLocal]] widens codes to f32 —
   * lossless, but 4× the heap — and at 100 TB the widened form caps
   * how many shard graphs fit per serving executor; this variant keeps
-  * the raw codes and runs the beam-search distance loop in integer
-  * arithmetic, so a BigANN-style index never widens in EITHER serving
-  * mode (disk-resident u8 lives in [[MmapIndex]]).
+  * the raw codes and evaluates distances in integer arithmetic, so a
+  * BigANN-style index never widens in EITHER serving mode
+  * (disk-resident u8 lives in [[MmapIndex]]).
   *
   * Serving-only: builds stay in [[VamanaGraph]] — u8 values are exact
   * in f32, so build-time math is identical either way and there is
-  * nothing to re-derive. The search is the same working-set algorithm
-  * as [[VamanaGraph.search]]: equal distances (integer squares are
-  * exact in double, same final sqrt) and the same insert/termination/
-  * tie rules, so result lists match element-for-element —
-  * SingleFileIndexSpec pins that equivalence on real files. L2 only:
-  * the metric of the reference's u8 examples.
-  *
-  * One instance serves one task thread (epoch-marked scratch reuse),
-  * the same contract as [[VamanaGraph]]'s serving scratch.
+  * nothing to re-derive. The search is [[BestFirst]], as for
+  * [[VamanaGraph.search]], and the distances are equal (integer
+  * squares are exact in double, same final sqrt), so result lists
+  * match element-for-element — SingleFileIndexSpec pins that
+  * equivalence on real files. L2 only: the metric of the reference's
+  * u8 examples. The instance holds no per-query state, so any number
+  * of threads can search it at once.
   */
 final class U8Graph(
     val codes: Array[Byte], // n × dim, row-major u8 codes
@@ -36,129 +32,53 @@ final class U8Graph(
   /** adjacency (local ids) — filled by the importer. */
   val graph: Array[Array[Int]] = new Array[Array[Int]](n)
 
-  private val qInt = new Array[Int](dim)
-  private var qIntValid = false
-
-  @inline private def distQ(q: Array[Float], j: Int): Double = {
-    val off = j * dim
-    if (qIntValid) {
-      var acc = 0; var i = 0
-      while (i < dim) { val d = qInt(i) - (codes(off + i) & 0xff); acc += d * d; i += 1 }
-      math.sqrt(acc.toDouble)
-    } else {
-      // fractional query: double accumulation over the same values —
-      // identical to Metric.L2 over the widened codes
-      var acc = 0.0; var i = 0
-      while (i < dim) {
-        val d = q(i).toDouble - (codes(off + i) & 0xff).toDouble
-        acc += d * d; i += 1
-      }
-      math.sqrt(acc)
-    }
-  }
-
-  // ---------------------------------------------------------- scratch
-
-  private val mark = new Array[Int](n)
-  private var epoch = 0
-
-  // frontier: sorted DESCENDING by (dist, id) — best candidate at end
-  // (same layout as VamanaGraph.Scratch)
-  private var fIds = new Array[Int](256)
-  private var fDists = new Array[Double](256)
-  private var fLen = 0
-
-  private def fPush(id: Int, d: Double): Unit = {
-    if (fLen == fIds.length) {
-      fIds = JArrays.copyOf(fIds, fLen * 2)
-      fDists = JArrays.copyOf(fDists, fLen * 2)
-    }
-    var lo = 0; var hi = fLen
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (fDists(mid) > d || (fDists(mid) == d && fIds(mid) > id)) lo = mid + 1 else hi = mid
-    }
-    System.arraycopy(fIds, lo, fIds, lo + 1, fLen - lo)
-    System.arraycopy(fDists, lo, fDists, lo + 1, fLen - lo)
-    fIds(lo) = id; fDists(lo) = d; fLen += 1
-  }
-
-  // ----------------------------------------------------------- search
-
   /** Top-k (local idx, dist) ascending by (dist, id) — same output
-    * contract and same working-set rules as [[VamanaGraph.search]]. */
+    * contract as [[VamanaGraph.search]]. */
   def search(q: Array[Float], k: Int, beamWidth: Int): Array[(Int, Double)] = {
     require(q.length == dim, s"query dim ${q.length} != index dim $dim")
-    val bw = math.max(beamWidth, k)
-    // integer fast path when every query slot is exactly u8-valued
-    qIntValid = {
-      var i = 0; var ok = true
-      while (ok && i < dim) {
-        val v = q(i); val vi = v.toInt
-        if (v == vi.toFloat && vi >= 0 && vi <= 255) { qInt(i) = vi; i += 1 }
-        else ok = false
-      }
-      ok
-    }
-
-    epoch += 1
-    if (epoch == Int.MaxValue) { JArrays.fill(mark, 0); epoch = 1 }
-    fLen = 0
-    val wIds = new Array[Int](bw)
-    val wDists = new Array[Double](bw)
-    var wLen = 0
-
-    @inline def worstD: Double = if (wLen == 0) Double.MaxValue else wDists(wLen - 1)
-
-    @inline def wInsert(id: Int, d: Double): Unit = {
-      var lo = 0; var hi = wLen
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (wDists(mid) < d || (wDists(mid) == d && wIds(mid) < id)) lo = mid + 1 else hi = mid
-      }
-      if (lo < bw) {
-        val newLen = math.min(wLen + 1, bw)
-        val tail = newLen - lo - 1
-        if (tail > 0) {
-          System.arraycopy(wIds, lo, wIds, lo + 1, tail)
-          System.arraycopy(wDists, lo, wDists, lo + 1, tail)
+    val qInt = U8Graph.intQuery(q)
+    val dist: Int => Double =
+      if (qInt != null) j => math.sqrt(U8Graph.intL2(qInt, codes, j * dim).toDouble)
+      else j => {
+        // fractional query: double accumulation over the same values —
+        // identical to Metric.L2 over the widened codes
+        val off = j * dim
+        var acc = 0.0; var i = 0
+        while (i < dim) {
+          val d = q(i).toDouble - (codes(off + i) & 0xff).toDouble
+          acc += d * d; i += 1
         }
-        wIds(lo) = id; wDists(lo) = d
-        wLen = newLen
+        math.sqrt(acc)
       }
-    }
+    BestFirst.topK(n, entry, k, beamWidth, BestFirst.lists(graph), dist)
+  }
+}
 
-    val d0 = distQ(q, entry)
-    mark(entry) = epoch
-    wInsert(entry, d0); fPush(entry, d0)
+object U8Graph {
 
-    while (fLen > 0) {
-      val bestD = fDists(fLen - 1)
-      if (wLen >= bw && bestD >= worstD) {
-        fLen = 0
-      } else {
-        val cur = fIds(fLen - 1)
-        fLen -= 1
-        val nbrs = graph(cur)
-        if (nbrs != null) {
-          var t = 0
-          while (t < nbrs.length) {
-            val nb = nbrs(t)
-            if (mark(nb) != epoch) {
-              val d = distQ(q, nb)
-              mark(nb) = epoch
-              if (wLen < bw || d < worstD || (d == worstD && nb < wIds(wLen - 1))) {
-                wInsert(nb, d); fPush(nb, d)
-              }
-            }
-            t += 1
-          }
-        }
-      }
-    }
-    val out = new Array[(Int, Double)](math.min(k, wLen))
+  /** The query as ints when every slot is exactly u8-valued (the
+    * BigANN case), else null: a fractional or out-of-range query takes
+    * the widened-float loop, with identical semantics. */
+  def intQuery(q: Array[Float]): Array[Int] = {
+    val out = new Array[Int](q.length)
     var i = 0
-    while (i < out.length) { out(i) = (wIds(i), wDists(i)); i += 1 }
+    while (i < q.length) {
+      val v = q(i); val vi = v.toInt
+      if (v == vi.toFloat && vi >= 0 && vi <= 255) out(i) = vi
+      else return null
+      i += 1
+    }
     out
+  }
+
+  /** Σ (qInt(i) − codes(off + i))² over `qInt.length` unsigned bytes,
+    * in int — exact for dim ≤ 8192 (8192·255² < 2³¹). */
+  def intL2(qInt: Array[Int], codes: Array[Byte], off: Int): Int = {
+    var acc = 0; var i = 0
+    while (i < qInt.length) {
+      val d = qInt(i) - (codes(off + i) & 0xff)
+      acc += d * d; i += 1
+    }
+    acc
   }
 }

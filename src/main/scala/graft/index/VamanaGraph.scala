@@ -189,7 +189,8 @@ case class VamanaParams(
   *     (ref lib.rs:1013-1020)
   *  3. per node: greedy beam search from the medoid (+ extraSeeds
   *     deterministic restarts) collecting all visited candidates
-  *     (ref lib.rs:1140-1198), then robust α-prune with nearest
+  *     (ref lib.rs:1140-1198; the [[BestFirst]] kernel with its
+  *     visited log), then robust α-prune with nearest
   *     backfill (ref lib.rs:1201-1279)
   *  4. reverse edges merged; lists over `slackLimit` are re-pruned
   *     (ref lib.rs:784-914)
@@ -288,37 +289,16 @@ final class VamanaGraph(
     }
   }
 
-  // ------------------------------------------------------------- scratch
+  // ------------------------------------------------------------- prune pool
 
-  /** Grow-only primitive scratch reused across searches/nodes. */
-  private final class Scratch {
-    val mark = new Array[Int](n)
-    var epoch = 0
+  /** Build-only candidate pool for [[pruneCandidates]], with its own
+    * dedup marks; the beam search's scratch lives in [[BestFirst]]. */
+  private final class Pool {
     val dedupMark = new Array[Int](n)
     var dedupEpoch = 0
-
-    // visited log
-    var visIds = new Array[Int](256)
-    var visDists = new Array[Double](256)
-    var visLen = 0
-
-    // frontier: sorted DESCENDING by (dist, id) — best candidate at end
-    var fIds = new Array[Int](256)
-    var fDists = new Array[Double](256)
-    var fLen = 0
-
-    // candidate pool for prune
     var candIds = new Array[Int](512)
     var candDists = new Array[Double](512)
     var candLen = 0
-
-    def visPush(id: Int, d: Double): Unit = {
-      if (visLen == visIds.length) {
-        visIds = JArrays.copyOf(visIds, visLen * 2)
-        visDists = JArrays.copyOf(visDists, visLen * 2)
-      }
-      visIds(visLen) = id; visDists(visLen) = d; visLen += 1
-    }
 
     def candPush(id: Int, d: Double): Unit = {
       if (candLen == candIds.length) {
@@ -327,135 +307,18 @@ final class VamanaGraph(
       }
       candIds(candLen) = id; candDists(candLen) = d; candLen += 1
     }
-
-    def fPush(id: Int, d: Double): Unit = {
-      if (fLen == fIds.length) {
-        fIds = JArrays.copyOf(fIds, fLen * 2)
-        fDists = JArrays.copyOf(fDists, fLen * 2)
-      }
-      // binary search in descending order: position where d fits
-      var lo = 0; var hi = fLen
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (fDists(mid) > d || (fDists(mid) == d && fIds(mid) > id)) lo = mid + 1 else hi = mid
-      }
-      System.arraycopy(fIds, lo, fIds, lo + 1, fLen - lo)
-      System.arraycopy(fDists, lo, fDists, lo + 1, fLen - lo)
-      fIds(lo) = id; fDists(lo) = d; fLen += 1
-    }
   }
 
   // ------------------------------------------------------------- search
 
-  /** Greedy best-first beam search. Visited (id, dist) pairs are logged
-    * into the scratch when `collect` is set (build path). The final
-    * working set is returned through `wIds/wDists` (serving path);
-    * returns the working-set length. */
-  private def beamSearch(
-      qIdx: Int, q: Array[Float], qNorm: Double, entry: Int, beamWidth: Int,
-      s: Scratch, collect: Boolean,
-      wIds: Array[Int], wDists: Array[Double]): Int = {
-    s.epoch += 1
-    if (s.epoch == Int.MaxValue) { JArrays.fill(s.mark, 0); s.epoch = 1 }
-    s.visLen = 0
-    s.fLen = 0
-    var wLen = 0
-
-    @inline def worstD: Double = if (wLen == 0) Double.MaxValue else wDists(wLen - 1)
-
-    @inline def wInsert(id: Int, d: Double): Unit = {
-      var lo = 0; var hi = wLen
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (wDists(mid) < d || (wDists(mid) == d && wIds(mid) < id)) lo = mid + 1 else hi = mid
-      }
-      if (lo >= beamWidth) return
-      val newLen = math.min(wLen + 1, beamWidth)
-      val tail = newLen - lo - 1
-      if (tail > 0) {
-        System.arraycopy(wIds, lo, wIds, lo + 1, tail)
-        System.arraycopy(wDists, lo, wDists, lo + 1, tail)
-      }
-      wIds(lo) = id; wDists(lo) = d
-      wLen = newLen
-    }
-
-    @inline def visit(id: Int, d: Double): Unit = {
-      s.mark(id) = s.epoch
-      if (collect) s.visPush(id, d)
-    }
-
-    @inline def qd(j: Int): Double =
-      if (qIdx >= 0) dist(qIdx, j) else distQ(q, qNorm, j)
-
-    val d0 = qd(entry)
-    visit(entry, d0); wInsert(entry, d0); s.fPush(entry, d0)
-
-    while (s.fLen > 0) {
-      val bestD = s.fDists(s.fLen - 1)
-      if (wLen >= beamWidth && bestD >= worstD) {
-        s.fLen = 0
-      } else {
-        val cur = s.fIds(s.fLen - 1)
-        s.fLen -= 1
-        val nbrs = graph(cur)
-        if (nbrs != null) {
-          var t = 0
-          while (t < nbrs.length) {
-            val nb = nbrs(t)
-            if (s.mark(nb) != s.epoch) {
-              val d = qd(nb)
-              visit(nb, d)
-              if (wLen < beamWidth || d < worstD || (d == worstD && nb < wIds(wLen - 1))) {
-                wInsert(nb, d); s.fPush(nb, d)
-              }
-            }
-            t += 1
-          }
-        }
-      }
-    }
-    wLen
-  }
-
-  /** Serving scratch, reused across queries (the epoch marks make
-    * reuse allocation-free). Thread-LOCAL, not per-instance: a graph
-    * held in [[VamanaIndex.ShardGraphCache]] outlives one task and
-    * can be searched by several task threads concurrently — a shared
-    * Scratch would race on the epoch marks and frontier arrays.
-    * Soft-referenced: a Scratch holds two Array[Int](n) (~8n bytes),
-    * so a cache-resident graph could otherwise retain one copy per
-    * idle task thread for the cache lifetime — memory the
-    * GRAFT_GRAPH_CACHE_MB accounting does not see (32 threads × a
-    * 100k-node shard ≈ 25 MiB per graph). Under memory pressure the
-    * GC reclaims idle copies; an active search just reallocates. */
-  private val servingScratch =
-    ThreadLocal.withInitial[java.lang.ref.SoftReference[Scratch]](
-      () => new java.lang.ref.SoftReference(new Scratch))
-
-  private def servingScratchGet(): Scratch = {
-    val s = servingScratch.get().get()
-    if (s != null) s
-    else {
-      val fresh = new Scratch
-      servingScratch.set(new java.lang.ref.SoftReference(fresh))
-      fresh
-    }
-  }
-
   /** Serving-path search: top-k (local idx, dist) for an external query
-    * vector (reference lib.rs:635-701). */
+    * vector (reference lib.rs:635-701), run by [[BestFirst]]. Its
+    * scratch is one per thread, shared by every graph that thread
+    * searches, so a graph held in [[GraphCache]] can be searched by
+    * several task threads at once. */
   def search(q: Array[Float], k: Int, beamWidth: Int): Array[(Int, Double)] = {
-    val s = servingScratchGet()
-    val bw = math.max(beamWidth, k)
-    val wIds = new Array[Int](bw)
-    val wDists = new Array[Double](bw)
     val qNorm = queryNorm(q)
-    val wLen = beamSearch(-1, q, qNorm, medoid, bw, s, collect = false, wIds, wDists)
-    val out = new Array[(Int, Double)](math.min(k, wLen))
-    var i = 0
-    while (i < out.length) { out(i) = (wIds(i), wDists(i)); i += 1 }
-    out
+    BestFirst.topK(n, medoid, k, beamWidth, BestFirst.lists(graph), j => distQ(q, qNorm, j))
   }
 
   /** Cosine query norm with the MIN_NORMAL floor (NaN guard) — ONE
@@ -480,12 +343,10 @@ final class VamanaGraph(
     * floors). */
   def searchFiltered(q: Array[Float], k: Int, beamWidth: Int,
       allow: Int => Boolean): Array[(Int, Double)] = {
-    val s = servingScratchGet()
-    val bw = math.max(beamWidth, k)
-    val wIds = new Array[Int](bw)
-    val wDists = new Array[Double](bw)
+    val s = BestFirst.scratch()
     val qNorm = queryNorm(q)
-    beamSearch(-1, q, qNorm, medoid, bw, s, collect = true, wIds, wDists)
+    BestFirst.search(s, n, medoid, math.max(beamWidth, k), BestFirst.lists(graph),
+      j => distQ(q, qNorm, j), collect = true)
     // compact the allowed prefix of the visited log in place (the log
     // is duplicate-free — epoch marks — and reset by the next search)
     var m = 0
@@ -496,63 +357,20 @@ final class VamanaGraph(
       }
       i += 1
     }
-    sortPairs(s.visIds, s.visDists, 0, m - 1)
+    BestFirst.sortPairs(s.visIds, s.visDists, 0, m - 1)
     val out = new Array[(Int, Double)](math.min(k, m))
     i = 0
     while (i < out.length) { out(i) = (s.visIds(i), s.visDists(i)); i += 1 }
     out
   }
 
-  // ------------------------------------------------------------- sorting
-
-  /** quicksort of parallel (dists, ids) by ascending (dist, id). */
-  private def sortPairs(ids: Array[Int], ds: Array[Double], lo0: Int, hi0: Int): Unit = {
-    @inline def less(i: Int, j: Int): Boolean =
-      ds(i) < ds(j) || (ds(i) == ds(j) && ids(i) < ids(j))
-    @inline def swap(i: Int, j: Int): Unit = {
-      val td = ds(i); ds(i) = ds(j); ds(j) = td
-      val ti = ids(i); ids(i) = ids(j); ids(j) = ti
-    }
-    def qs(lo: Int, hi: Int): Unit = {
-      if (hi - lo < 12) {
-        var i = lo + 1
-        while (i <= hi) {
-          var j = i
-          while (j > lo && less(j, j - 1)) { swap(j, j - 1); j -= 1 }
-          i += 1
-        }
-        return
-      }
-      val mid = (lo + hi) >>> 1
-      if (less(mid, lo)) swap(mid, lo)
-      if (less(hi, lo)) swap(hi, lo)
-      if (less(hi, mid)) swap(hi, mid)
-      swap(mid, hi - 1) // pivot at hi-1
-      val p = hi - 1
-      var i = lo; var j = p
-      while (true) {
-        i += 1
-        while (less(i, p)) i += 1
-        j -= 1
-        while (less(p, j)) j -= 1
-        if (i >= j) {
-          swap(i, p)
-          qs(lo, i - 1); qs(i + 1, hi)
-          return
-        }
-        swap(i, j)
-      }
-    }
-    if (hi0 > lo0) qs(lo0, hi0)
-  }
-
   // ------------------------------------------------------------- prune
 
   /** Robust α-prune with nearest backfill (ref lib.rs:1201-1279) over
-    * the scratch candidate pool: sorts by (dist, id), dedups keeping
+    * the candidate pool: sorts by (dist, id), dedups keeping
     * the nearest occurrence per id (epoch marks), excludes self. */
-  private def pruneCandidates(u: Int, s: Scratch, maxDeg: Int, alpha: Double): Array[Int] = {
-    sortPairs(s.candIds, s.candDists, 0, s.candLen - 1)
+  private def pruneCandidates(u: Int, s: Pool, maxDeg: Int, alpha: Double): Array[Int] = {
+    BestFirst.sortPairs(s.candIds, s.candDists, 0, s.candLen - 1)
     s.dedupEpoch += 1
     if (s.dedupEpoch == Int.MaxValue) { JArrays.fill(s.dedupMark, 0); s.dedupEpoch = 1 }
     // compact unique, self-free prefix in place
@@ -623,9 +441,9 @@ final class VamanaGraph(
       u += 1
     }
 
-    val scratch = new Scratch
-    val wIds = new Array[Int](params.buildBeamWidth)
-    val wDists = new Array[Double](params.buildBeamWidth)
+    val pool = new Pool
+    val beam = BestFirst.scratch()
+    val adj = BestFirst.lists(graph)
     val chunkSize = 256
     val passes = math.max(1, params.passes)
 
@@ -650,11 +468,11 @@ final class VamanaGraph(
         var ci = cs
         while (ci < ce) {
           val node = order(ci)
-          scratch.candLen = 0
+          pool.candLen = 0
           val cur = graph(node)
           var t = 0
           while (t < cur.length) {
-            scratch.candPush(cur(t), dist(node, cur(t))); t += 1
+            pool.candPush(cur(t), dist(node, cur(t))); t += 1
           }
           // greedy from medoid + deterministic extra seeds
           var si = 0
@@ -662,15 +480,15 @@ final class VamanaGraph(
             val entry =
               if (si == 0) medoid
               else rngInt(params.seed ^ 0xabcdL ^ (node.toLong << 8) ^ (pass.toLong << 40) ^ si.toLong, n)
-            beamSearch(node, null, 0.0, entry, params.buildBeamWidth, scratch,
-              collect = true, wIds, wDists)
+            BestFirst.search(beam, n, entry, params.buildBeamWidth, adj,
+              j => dist(node, j), collect = true)
             var v = 0
-            while (v < scratch.visLen) {
-              scratch.candPush(scratch.visIds(v), scratch.visDists(v)); v += 1
+            while (v < beam.visLen) {
+              pool.candPush(beam.visIds(v), beam.visDists(v)); v += 1
             }
             si += 1
           }
-          newLists(ci - cs) = pruneCandidates(node, scratch, maxDeg, passAlpha)
+          newLists(ci - cs) = pruneCandidates(node, pool, maxDeg, passAlpha)
           ci += 1
         }
         // merge chunk: commit outgoing, add reverse edges, slack re-prune
@@ -694,11 +512,11 @@ final class VamanaGraph(
                 merged(cur.length) = src
                 graph(dst) = merged
               } else {
-                scratch.candLen = 0
+                pool.candLen = 0
                 var y = 0
-                while (y < cur.length) { scratch.candPush(cur(y), dist(dst, cur(y))); y += 1 }
-                scratch.candPush(src, dist(dst, src))
-                graph(dst) = pruneCandidates(dst, scratch, maxDeg, passAlpha)
+                while (y < cur.length) { pool.candPush(cur(y), dist(dst, cur(y))); y += 1 }
+                pool.candPush(src, dist(dst, src))
+                graph(dst) = pruneCandidates(dst, pool, maxDeg, passAlpha)
               }
             }
             t += 1
@@ -714,12 +532,12 @@ final class VamanaGraph(
     u = 0
     while (u < n) {
       if (graph(u).length > maxDeg) {
-        scratch.candLen = 0
+        pool.candLen = 0
         var t = 0
         while (t < graph(u).length) {
-          scratch.candPush(graph(u)(t), dist(u, graph(u)(t))); t += 1
+          pool.candPush(graph(u)(t), dist(u, graph(u)(t))); t += 1
         }
-        graph(u) = pruneCandidates(u, scratch, maxDeg, params.alpha)
+        graph(u) = pruneCandidates(u, pool, maxDeg, params.alpha)
       }
       u += 1
     }

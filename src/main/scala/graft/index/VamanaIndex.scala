@@ -783,100 +783,21 @@ object VamanaIndex {
     (g, sorted)
   }
 
-  /** Executor-resident shard-graph cache — the warm serving tier of
-    * the Spark job path. Every serve job used to pay deserialization
-    * of the persisted rows PLUS [[rebuildShardGraph]] per shard per
-    * run; a long-lived serving executor does that work ONCE (the same
-    * "build once, serve many" economics as the reference loading
-    * `index.db` once — and as this repo's own resident file handle,
-    * whose per-query cost is ~300× below the job path's).
-    *
-    * Keyed by (index token, partition id): a token names one
-    * immutable materialized index ([[cachedIndex]] /
-    * [[cachedOverlapIndex]] mint one per build), and a persisted
-    * Dataset's partition contents are deterministic, so the cached
-    * graphs are exactly what re-scanning would rebuild. On a hit the
-    * task never consumes its input iterator — no row deserialization
-    * at all. On a cluster each executor warms its own partitions'
-    * entries (tasks are partition-affine under locality scheduling;
-    * a migrated task just rebuilds once on its new executor).
-    *
-    * Bounded: entries stop being added past `GRAFT_GRAPH_CACHE_MB`
-    * (default 4 GiB, ~2× the sf-×1000 rehearsal index) — past the cap
-    * serves degrade to rebuild-per-run, never OOM. Cleared by
-    * [[releaseCaches]] alongside the plan caches it shadows. */
-  private[graft] object ShardGraphCache {
-    private val log = org.slf4j.LoggerFactory.getLogger("graft.ShardGraphCache")
-    // value carries its byte estimate so eviction can decrement the
-    // shared counter exactly
-    private val cache = TrieMap.empty[(String, Int),
-      (Map[Int, (VamanaGraph, Array[IndexRow])], Long)]
-    private val bytesUsed = new java.util.concurrent.atomic.AtomicLong(0L)
-    private def capBytes: Long =
-      sys.env.get("GRAFT_GRAPH_CACHE_MB")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .map(_ << 20).getOrElse(4096L << 20)
-
-    /** Graphs for this partition: cached, or rebuilt from `it` (and
-      * cached when under the byte cap).
-      *
-      * Superseded-build eviction: tokens are `kind:dir:counter`, so a
-      * cached entry sharing this token's `kind:dir:` prefix under a
-      * DIFFERENT counter names an older materialization of the same
-      * index. Executor JVMs on a real cluster never see the driver's
-      * [[releaseCaches]]; without eviction here, rebuilt indexes would
-      * pin dead graphs until the cap filled and resident serving
-      * silently degraded to rebuild-per-run. Correctness never
-      * depended on this (tokens already prevent stale serves) — only
-      * memory does. */
-    def getOrRebuild(token: String, pid: Int, it: Iterator[IndexRow],
-        params: VamanaParams): Map[Int, (VamanaGraph, Array[IndexRow])] =
-      cache.get((token, pid)) match {
-        case Some((m, _)) => m
-        case None =>
-          val prefix = token.substring(0, token.lastIndexOf(':') + 1)
-          cache.keysIterator
-            .filter(k => k._1 != token && k._1.startsWith(prefix))
-            .foreach(k => cache.remove(k)
-              .foreach { case (_, e) => bytesUsed.addAndGet(-e) })
-          val rows = it.toArray
-          val m = rows.groupBy(_.shard).map { case (sh, group) =>
-            sh -> rebuildShardGraph(group, params)
-          }
-          // flat vectors + adjacency are held twice (rows + graph);
-          // the serving scratch is soft-referenced (VamanaGraph), so
-          // it needs no allowance here — GC reclaims idle copies
-          val est = rows.iterator.map(r =>
-            64L + 8L * r.embedding.length + 16L * r.neighbors.length).sum
-          // reserve first (addAndGet), roll back on cap-exceed or lost
-          // putIfAbsent race — check-then-act across two atomics let
-          // concurrent misses collectively overshoot the cap
-          if (bytesUsed.addAndGet(est) <= capBytes) {
-            if (cache.putIfAbsent((token, pid), (m, est)).isEmpty)
-              log.info(s"miss: rebuilt ${m.size} shard graphs for " +
-                s"($token, p$pid), cached ${est >> 20} MiB " +
-                s"(${bytesUsed.get() >> 20}/${capBytes >> 20} MiB used)")
-            else bytesUsed.addAndGet(-est)
-          } else {
-            bytesUsed.addAndGet(-est)
-            log.warn(s"miss over cap: serving ($token, p$pid) uncached " +
-              s"— ${est >> 20} MiB would exceed the " +
-              s"${capBytes >> 20} MiB GRAFT_GRAPH_CACHE_MB bound; " +
-              "resident tier is degrading to rebuild-per-run")
-          }
-          m
+  /** This partition's shard graphs from the warm tier
+    * ([[GraphCache]]), rebuilt from `it` on a miss. */
+  private[graft] def residentShards(token: String, pid: Int, it: Iterator[IndexRow],
+      params: VamanaParams): Map[Int, (VamanaGraph, Array[IndexRow])] =
+    GraphCache.getOrLoad(token, pid) {
+      val rows = it.toArray
+      val m = rows.groupBy(_.shard).map { case (sh, group) =>
+        sh -> rebuildShardGraph(group, params)
       }
-
-    def clear(): Unit = { cache.clear(); bytesUsed.set(0L) }
-
-    /** Entry count — test observability (ProbedSearchSpec pins that
-      * the serving queries actually populate the warm tier). */
-    private[graft] def size: Int = cache.size
-
-    /** Byte-accounting observability — ProbedSearchSpec pins that
-      * superseded-token eviction returns its bytes. */
-    private[graft] def bytes: Long = bytesUsed.get()
-  }
+      // flat vectors + adjacency are held twice (rows + graph); the
+      // search scratch is per thread (BestFirst), not per graph, so it
+      // needs no allowance here
+      (m, rows.iterator.map(r =>
+        64L + 8L * r.embedding.length + 16L * r.neighbors.length).sum)
+    }
 
   // ---------------------------------------------------------------- search
 
@@ -913,14 +834,14 @@ object VamanaIndex {
       }
     }
     val perShard = (resident match {
-      // warm tier: graphs come from ShardGraphCache (a hit never
+      // warm tier: graphs come from GraphCache (a hit never
       // consumes `it` — zero deserialization); shard pruning moves
       // inside the closure so partition contents stay filter-free
       // (the cache key is (token, pid), which must name ONE content)
       case Some(token) =>
         index.mapPartitions { it =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
-          ShardGraphCache.getOrRebuild(token, pid, it, params).iterator
+          residentShards(token, pid, it, params).iterator
             .filter { case (sh, _) => probeShards.forall(_.contains(sh)) }
             .flatMap { case (sh, (g, sorted)) => serveShard(sh, g, sorted) }
         }
@@ -1155,14 +1076,14 @@ object VamanaIndex {
           }
       }
     val perShard = (resident match {
-      // warm tier (see [[ShardGraphCache]]): no shard filter on the
+      // warm tier (see [[GraphCache]]): no shard filter on the
       // scan — (token, pid) must name one immutable content — and the
       // per-shard query routing inside the closure prunes work
       // instead; a cache hit consumes nothing from `it`
       case Some(token) =>
         index.mapPartitions { it =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
-          ShardGraphCache.getOrRebuild(token, pid, it, params).iterator
+          residentShards(token, pid, it, params).iterator
             .flatMap { case (sh, (g, sorted)) => serveShard(sh, g, sorted) }
         }
       case None =>
@@ -1205,7 +1126,7 @@ object VamanaIndex {
     })
 
   /** Resident-tier tokens, minted once per materialized cached index
-    * (plain/overlap per dir) — they key [[ShardGraphCache]] entries to
+    * (plain/overlap per dir) — they key [[GraphCache]] entries to
     * ONE immutable build, so a re-built index after [[releaseCaches]]
     * can never be served stale graphs. */
   private val residentTokens = TrieMap.empty[String, String]
@@ -1280,7 +1201,7 @@ object VamanaIndex {
     }
     routingCache.clear(); overlapRoutingCache.clear()
     pivotCache.clear(); overlapPivotCache.clear(); overlapSplitCache.clear()
-    ShardGraphCache.clear(); residentTokens.clear(); queriesCache.clear()
+    GraphCache.clear(); residentTokens.clear(); queriesCache.clear()
   }
 
   /** The standard serving query batch, memoized per sf dir: a serving

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.{HnswGraph, HnswIndex, HnswParams}
+import graft.index.{GraphCache, HnswGraph, HnswIndex, HnswParams}
 
 /** HNSW comparison baseline (reference examples/hnsw_sift.rs ships
   * HNSW side-by-side with DiskANN so users can weigh index families):
@@ -109,13 +109,13 @@ class HnswSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select($"q_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     val miss = pairs(HnswIndex.qHnswSearch(spark, SparkSpecBase.sf001))
-    assert(HnswIndex.GraphCache.size > 0,
+    assert(GraphCache.size > 0,
       "qHnswSearch did not populate the resident graph cache")
     val hit = pairs(HnswIndex.qHnswSearch(spark, SparkSpecBase.sf001))
     assert(miss == hit,
       s"warm tier drifted: ${miss.diff(hit).size} lost, ${hit.diff(miss).size} gained")
     HnswIndex.release()
-    assert(HnswIndex.GraphCache.size == 0,
+    assert(GraphCache.size == 0,
       "release left resident HNSW graphs behind")
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.{IndexRow, VamanaIndex, VamanaParams}
+import graft.index.{GraphCache, HnswGraph, HnswIndex, HnswParams, HnswRow, IndexRow,
+  VamanaIndex, VamanaParams}
 
 /** Routed (nprobe) search quality: recall must rise monotonically with
   * probed shards and reach 1.0 when all shards are probed (routing
@@ -180,7 +181,7 @@ class ProbedSearchSpec extends AnyFunSuite {
   }
 
   test("resident tier: repeat serves hit the shard-graph cache and are row-identical") {
-    // the warm serving tier (ShardGraphCache) must be a pure cache:
+    // the warm serving tier (GraphCache) must be a pure cache:
     // run 1 populates it (miss path), run 2 serves from it (hit path,
     // zero row deserialization) — identical rows, or the tier is
     // changing answers. Also pins that the serving queries actually
@@ -191,7 +192,7 @@ class ProbedSearchSpec extends AnyFunSuite {
       def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet
       val miss = pairs(VamanaIndex.qOverlapServe(spark, dir))
-      assert(VamanaIndex.ShardGraphCache.size > 0,
+      assert(GraphCache.size > 0,
         "qOverlapServe did not populate the resident shard-graph cache")
       val hit = pairs(VamanaIndex.qOverlapServe(spark, dir))
       assert(miss == hit,
@@ -200,7 +201,7 @@ class ProbedSearchSpec extends AnyFunSuite {
       val hitP = pairs(VamanaIndex.qVamanaProbed(spark, dir))
       assert(missP == hitP, "plain probed tier drifted across cache hit")
     } finally VamanaIndex.releaseCaches()
-    assert(VamanaIndex.ShardGraphCache.size == 0,
+    assert(GraphCache.size == 0,
       "releaseCaches left resident shard graphs behind")
   }
 
@@ -215,23 +216,33 @@ class ProbedSearchSpec extends AnyFunSuite {
         shard = i % 2, neighbors = Array((i + 1L) % 16))
     }
     def serve(token: String) =
-      VamanaIndex.ShardGraphCache.getOrRebuild(token, 0, rows.iterator, params)
-    VamanaIndex.ShardGraphCache.clear()
+      VamanaIndex.residentShards(token, 0, rows.iterator, params)
+    GraphCache.clear()
     try {
       serve("plain:/specdir:1")
-      val b1 = VamanaIndex.ShardGraphCache.bytes
-      assert(VamanaIndex.ShardGraphCache.size == 1 && b1 > 0,
+      val b1 = GraphCache.bytes
+      assert(GraphCache.size == 1 && b1 > 0,
         "miss path did not cache under the cap")
       serve("plain:/specdir:2") // supersedes counter 1, same kind:dir
-      assert(VamanaIndex.ShardGraphCache.size == 1,
+      assert(GraphCache.size == 1,
         "superseded-token entry was not evicted on insert")
-      assert(VamanaIndex.ShardGraphCache.bytes == b1,
+      assert(GraphCache.bytes == b1,
         "eviction did not return the superseded entry's bytes")
       serve("overlap:/specdir:1") // different kind — must coexist
-      assert(VamanaIndex.ShardGraphCache.size == 2,
+      assert(GraphCache.size == 2,
         "eviction crossed the kind:dir prefix boundary")
-    } finally VamanaIndex.ShardGraphCache.clear()
-    assert(VamanaIndex.ShardGraphCache.bytes == 0L,
+      // one budget for both index families: an HNSW entry adds to the
+      // same byte counter the Vamana entries fill
+      val b2 = GraphCache.bytes
+      val hp = HnswParams(m = 4, efConstruction = 8, metric = "l2")
+      val hg = new HnswGraph(rows.flatMap(_.embedding), 4, rows.length, hp).build()
+      val hnswRows = rows.indices.map(i => HnswRow(rows(i).vec_id, rows(i).embedding,
+        0, hg.layers(i).map(_.map(_.toLong))))
+      HnswIndex.residentShards("hnsw:/specdir:1", 0, hnswRows.iterator, hp)
+      assert(GraphCache.size == 3 && GraphCache.bytes > b2,
+        s"HNSW entry did not count against the shared budget: ${GraphCache.bytes} vs $b2")
+    } finally GraphCache.clear()
+    assert(GraphCache.bytes == 0L,
       "clear() left the byte counter non-zero")
   }
 

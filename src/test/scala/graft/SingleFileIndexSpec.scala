@@ -308,6 +308,39 @@ class SingleFileIndexSpec extends AnyFunSuite {
     } finally mm.close()
   }
 
+  test("a corrupt adjacency id fails loudly in all three openers, naming file, row and slot") {
+    // epoch marks index by neighbor id: an id outside [0, n) must be
+    // rejected by the row decoder, never reach a search as an
+    // ArrayIndexOutOfBounds. Patch slot 0 of the entry row (the first
+    // row any mmap search expands) to n + 5 in a copied u8 file.
+    val src = "/tmp/graft_u8_a.idx"
+    if (!Files.exists(Paths.get(src))) cancel("u8 export test must run first")
+    val patched = "/tmp/graft_u8_badadj.idx"
+    Files.copy(Paths.get(src), Paths.get(patched),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(Paths.get(patched + ".ids"))
+    val meta = SingleFileIndex.readMeta(patched)
+    val row = meta.medoidId
+    val raf = new java.io.RandomAccessFile(patched, "rw")
+    try {
+      raf.seek(meta.adjacencyOffset + 4L * meta.maxDegree * row)
+      raf.write(ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+        .putInt(meta.numVectors + 5).array())
+    } finally raf.close()
+    def check(e: IllegalArgumentException): Unit = {
+      val m = e.getMessage
+      assert(m.contains(patched) && m.contains(s"row $row slot 0") &&
+        m.contains(s"${meta.numVectors + 5}"), m)
+    }
+    check(intercept[IllegalArgumentException](SingleFileIndex.importLocal(patched)))
+    check(intercept[IllegalArgumentException](SingleFileIndex.importLocalU8(patched)))
+    val mm = new MmapIndex(patched)
+    try {
+      val q = mm.vector(row)
+      check(intercept[IllegalArgumentException](mm.search(q, 5, 32)))
+    } finally mm.close()
+  }
+
   test("segmented mmap (tiny maxSegBytes) serves identically to one segment") {
     // row-aligned segmentation is how files beyond 2 GiB are served;
     // forcing ~3-row segments on a small file must change nothing
