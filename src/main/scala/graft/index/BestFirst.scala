@@ -197,6 +197,30 @@ object BestFirst {
     out
   }
 
+  /** The entry-point pivots of an n-row graph: `min(64, n)` evenly
+    * spaced rows 0, step, 2·step … — the sampled form of the
+    * reference's medoid (lib.rs:736-756). */
+  def medoidPivots(n: Int): Array[Int] = {
+    val np = math.min(64, n)
+    val step = math.max(1, n / np)
+    (0 until np).map(_ * step % n).distinct.toArray
+  }
+
+  /** The pivot medoid: the row with the least summed distance to the
+    * `np` pivots, summed in pivot order, the lowest row on a tie.
+    * `dist(row, p)` is the distance from `row` to pivot number `p`. */
+  def pivotMedoid(n: Int, np: Int, dist: (Int, Int) => Double): Int = {
+    var best = 0; var bestScore = Double.MaxValue
+    var i = 0
+    while (i < n) {
+      var s = 0.0; var p = 0
+      while (p < np) { s += dist(i, p); p += 1 }
+      if (s < bestScore) { bestScore = s; best = i }
+      i += 1
+    }
+    best
+  }
+
   /** Quicksort of parallel (dists, ids) by ascending (dist, id) — the
     * working set's order — over [lo0, hi0]. */
   def sortPairs(ids: Array[Int], ds: Array[Double], lo0: Int, hi0: Int): Unit = {

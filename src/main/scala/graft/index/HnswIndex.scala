@@ -20,9 +20,10 @@ case class HnswRow(
   * behind the SAME layout and harness as [[VamanaIndex]]: IVF-style
   * shard assignment, one [[HnswGraph]] built per cell inside
   * `mapPartitions` (the only shuffle is the repartition by shard),
-  * serving via broadcast queries + per-shard beam + bounded TopK
-  * merge. Letting both families share the assignment and harness is
-  * what makes the recall/QPS comparison Bench prints apples-to-apples.
+  * served by [[ShardServe]] (broadcast queries, per-shard search,
+  * bounded TopK merge). Letting both families share the assignment
+  * and harness is what makes the recall/QPS comparison Bench prints
+  * apples-to-apples.
   */
 object HnswIndex {
 
@@ -54,55 +55,35 @@ object HnswIndex {
   }
 
   /** Rebuild one shard's graph from stored rows — adjacency remapped
-    * to local ids, never re-running the build (mirrors
-    * [[VamanaIndex]]'s rebuildShardGraph). */
+    * to local ids ([[ShardServe.localize]]), never re-running the
+    * build (mirrors [[VamanaIndex]]'s rebuildShardGraph). */
   private def rebuildShardGraph(
       group: Array[HnswRow], hp: HnswParams): (HnswGraph, Array[HnswRow]) = {
-    val sorted = group.sortBy(_.vec_id)
-    val n = sorted.length
-    val dim = if (n == 0) 0 else sorted(0).embedding.length
-    val flat = new Array[Float](n * dim)
-    val g2l = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-    var i = 0
-    while (i < n) {
-      System.arraycopy(sorted(i).embedding, 0, flat, i * dim, dim)
-      g2l.put(sorted(i).vec_id, i)
-      i += 1
-    }
-    val adj = Array.tabulate(n) { li =>
-      sorted(li).layers.map { lvl =>
-        val out = new scala.collection.mutable.ArrayBuffer[Int](lvl.length)
-        var t = 0
-        while (t < lvl.length) {
-          val lo = g2l.get(lvl(t))
-          if (lo != null) out += lo.intValue()
-          t += 1
-        }
-        out.toArray
-      }
-    }
-    (HnswGraph.fromAdjacency(flat, dim, n, hp, adj), sorted)
+    val (sorted, dim, flat, local) = ShardServe.localize(group)(_.vec_id, _.embedding)
+    (HnswGraph.fromAdjacency(flat, dim, sorted.length, hp, sorted.map(_.layers.map(local))),
+      sorted)
   }
 
-  /** This partition's shard graphs from the warm tier
-    * ([[GraphCache]], shared with [[VamanaIndex]] under one byte
-    * budget), rebuilt from `it` on a miss. */
-  private[graft] def residentShards(token: String, pid: Int, it: Iterator[HnswRow],
-      hp: HnswParams): Map[Int, (HnswGraph, Array[HnswRow])] =
-    GraphCache.getOrLoad(token, pid) {
-      val rows = it.toArray
-      val m = rows.groupBy(_.shard).map { case (sh, group) =>
-        sh -> rebuildShardGraph(group, hp)
-      }
-      (m, rows.iterator.map(r =>
-        64L + 8L * r.embedding.length +
-          16L * r.layers.iterator.map(_.length.toLong).sum).sum)
-    }
+  /** This partition's shard graphs, each with its rows in local order
+    * ([[ShardServe.shardGraphs]]: resident in [[GraphCache]], under
+    * one byte budget shared with [[VamanaIndex]], or rebuilt on open). */
+  private[graft] def shardGraphs[A](it: Iterator[HnswRow], hp: HnswParams,
+      resident: Option[String])(open: ((HnswGraph, Array[HnswRow])) => A)
+      : Iterator[(Int, () => A)] =
+    ShardServe.shardGraphs(it, resident)(_.shard, rebuildShardGraph(_, hp), rowBytes)(open)
 
-  /** Batch search, identical harness shape to [[VamanaIndex.search]]:
-    * broadcast queries, per-shard ef-search, bounded TopK merge.
-    * `resident` routes through [[residentShards]] (see
-    * [[VamanaIndex.search]]'s twin parameter). */
+  private def rowBytes(r: HnswRow): Long =
+    64L + 8L * r.embedding.length + 16L * r.layers.iterator.map(_.length.toLong).sum
+
+  /** A [[ShardSearcher]] running ef-search over one HNSW graph whose
+    * local row `li` has global id `ids(li)`. */
+  private def graphSearcher(ef: Int)(g: HnswGraph, ids: Int => Long): ShardSearcher =
+    (q, k) => g.search(q, k, ef).map { case (li, d) => (ids(li), d) }
+
+  /** Batch search through [[ShardServe]], the harness every sharded
+    * family serves by: broadcast queries, per-shard ef-search, bounded
+    * TopK merge. `resident` reads the shard graphs from
+    * [[GraphCache]] (see [[shardGraphs]]). */
   def search(
       index: Dataset[HnswRow],
       queries: Array[(Long, Array[Float])],
@@ -110,37 +91,10 @@ object HnswIndex {
       ef: Int,
       hp: HnswParams,
       excludeSelf: Boolean = false,
-      resident: Option[String] = None): DataFrame = {
-    val s = index.sparkSession
-    import s.implicits._
-    val qB = s.sparkContext.broadcast(queries)
-    def serveShard(g: HnswGraph, sorted: Array[HnswRow])
-        : Iterator[(Long, Long, Double)] = {
-      val kLocal = if (excludeSelf) k + 1 else k
-      qB.value.iterator.flatMap { case (qid, qv) =>
-        g.search(qv, kLocal, ef).iterator
-          .map { case (li, d) => (qid, sorted(li).vec_id, d) }
-          .filter { case (q, nid, _) => !(excludeSelf && q == nid) }
-      }
+      resident: Option[String] = None): DataFrame =
+    ShardServe.serve(index, queries, k, excludeSelf = excludeSelf) { it =>
+      shardGraphs(it, hp, resident) { case (g, rows) => graphSearcher(ef)(g, rows(_).vec_id) }
     }
-    val perShard = (resident match {
-      case Some(token) =>
-        index.mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          residentShards(token, pid, it, hp).iterator
-            .flatMap { case (_, (g, sorted)) => serveShard(g, sorted) }
-        }
-      case None =>
-        index.mapPartitions { it =>
-          val rows = it.toArray
-          rows.groupBy(_.shard).iterator.flatMap { case (_, group) =>
-            val (g, sorted) = rebuildShardGraph(group, hp)
-            serveShard(g, sorted)
-          }
-        }
-    }).toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k)
-  }
 
   // ------------------------------------------------------------ persistence
 
@@ -376,8 +330,7 @@ object HnswIndex {
           "mismatched pair; serving it would silently drop unmatched edges")
       require(m == hp.m && ef == hp.efConstruction && seed == hp.seed,
         s"$graphPath params (m=$m, ef=$ef, seed=$seed) differ from the manifest's $hp")
-      val g2l = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-      ids.indices.foreach(i => g2l.put(ids(i), i))
+      val local = ShardServe.localIds(ids)
       val adj = Array.tabulate(n) { _ =>
         val layerCount = gIn.readIntLE()
         require(layerCount >= 0 && layerCount < 64, s"$graphPath: corrupt layer count")
@@ -389,14 +342,7 @@ object HnswIndex {
           // an oversized allocation instead of a clear error)
           require(cnt >= 0 && cnt <= n,
             s"$graphPath: corrupt neighbor count $cnt (n=$n)")
-          val out = new scala.collection.mutable.ArrayBuffer[Int](cnt)
-          var t = 0
-          while (t < cnt) {
-            val lo = g2l.get(gIn.readLongLE())
-            if (lo != null) out += lo.intValue()
-            t += 1
-          }
-          out.toArray
+          local(Array.fill(cnt)(gIn.readLongLE()))
         }
       }
       (HnswGraph.fromAdjacency(flat, dim, n, hp, adj), ids)
@@ -412,28 +358,23 @@ object HnswIndex {
   }
 
   /** Distributed serving over the exported files — one task per
-    * shard file pair, queries broadcast, bounded TopK merge: the
-    * files-tier twin of [[search]] and of [[SingleFileIndex
-    * .serveSharded]]. `dir` must be shared storage on a real
-    * cluster. */
+    * shard file pair, served by [[ShardServe]] like [[search]] and
+    * [[SingleFileIndex.serveSharded]]. `dir` must be shared storage on
+    * a real cluster. */
   def serveFiles(s: SparkSession, dir: String,
       queries: Array[(Long, Array[Float])], k: Int, ef: Int,
       excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
     val (hp, entries) = readManifest(s, dir)
-    val qB = s.sparkContext.broadcast(queries)
-    val perShard = s.sparkContext
-      .parallelize(entries.toIndexedSeq, entries.length)
-      .flatMap { case (_, dataFile, graphFile, _) =>
-        val (g, ids) = loadShardFiles(s"$dir/$dataFile", s"$dir/$graphFile", hp)
-        val kLocal = if (excludeSelf) k + 1 else k
-        qB.value.iterator.flatMap { case (qid, qv) =>
-          g.search(qv, kLocal, ef).iterator
-            .map { case (li, d) => (qid, ids(li), d) }
-            .filter { case (q, nid, _) => !(excludeSelf && q == nid) }
-        }
-      }.toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k)
+    val files = s.createDataset(s.sparkContext.parallelize(entries.toIndexedSeq, entries.length))
+    ShardServe.serve(files, queries, k, excludeSelf = excludeSelf) { it =>
+      it.map { case (sh, dataFile, graphFile, _) =>
+        (sh, () => {
+          val (g, ids) = loadShardFiles(s"$dir/$dataFile", s"$dir/$graphFile", hp)
+          graphSearcher(ef)(g, ids(_))
+        })
+      }
+    }
   }
 
   /** Driver-resident handle over the exported files — every shard

@@ -33,13 +33,19 @@ private[graft] object MetaJson {
     * writers emit Float.toString (shortest round-trip), and
     * double-parse → float restores the bit pattern. */
   def floats(n: JsonNode): Array[Float] = {
+    require(n != null && n.isArray, "expected an array of numbers")
     val out = new Array[Float](n.size())
     var i = 0
-    while (i < out.length) { out(i) = n.get(i).asDouble().toFloat; i += 1 }
+    while (i < out.length) {
+      val e = n.get(i)
+      require(e.isNumber, s"expected a number at [$i], got $e")
+      out(i) = e.asDouble().toFloat; i += 1
+    }
     out
   }
 
   def floatMatrix(n: JsonNode): Array[Array[Float]] = {
+    require(n != null && n.isArray, "expected an array of number arrays")
     val out = new Array[Array[Float]](n.size())
     var i = 0
     while (i < out.length) { out(i) = floats(n.get(i)); i += 1 }

@@ -277,11 +277,10 @@ object SingleFileIndex {
     val idToPos = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
     ids.zipWithIndex.foreach { case (id, p) => idToPos.put(id, p) }
 
-    // medoid pivots: VamanaGraph.medoid's deterministic evenly-spaced
-    // rule, so a heap reload recomputes the same entry point
-    val np = math.min(64, n)
-    val step = math.max(1, n / np)
-    val pivotPos = (0 until np).map(_ * step % n).distinct.toArray
+    // medoid pivots: VamanaGraph.medoid's rule, so a heap reload
+    // recomputes the same entry point; the argmin below streams the
+    // same per-row, pivot-ordered sum as BestFirst.pivotMedoid
+    val pivotPos = BestFirst.medoidPivots(n)
     val pivotIds = pivotPos.map(ids(_)).toSet
     val pivotById = sorted.filter($"vec_id".isin(pivotIds.toSeq: _*))
       .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toMap
@@ -438,18 +437,26 @@ object SingleFileIndex {
     * serving capacity scales with partitions of `queries` alone.
     * Returns (q_id, rank, neighbor_id, dist) like every other search
     * surface. */
-  def serve(queries: DataFrame, path: String, k: Int, beamWidth: Int): DataFrame = {
+  def serve(queries: DataFrame, path: String, k: Int, beamWidth: Int): DataFrame =
+    serveFile(queries, path)(mm => qv => mm.search(qv, k, beamWidth))
+
+  /** The per-task loop of every single-file surface ([[serve]],
+    * [[servePq]], [[serveBinary]]): map the file once per partition of
+    * `queries`, answer each query with `search(mm)`, and materialize
+    * the partition's ranked rows (dist rounded to 4 places) before
+    * closing the map. */
+  private def serveFile(queries: DataFrame, path: String)(
+      search: MmapIndex => Array[Float] => Array[(Long, Double)]): DataFrame = {
     val s = queries.sparkSession
     import s.implicits._
     queries.select("q_id", "qv").as[(Long, Array[Float])]
       .mapPartitions { it =>
         val mm = new MmapIndex(path)
         try {
-          // materialize the partition's results before closing the map
+          val one = search(mm)
           it.flatMap { case (qid, qv) =>
-            mm.search(qv, k, beamWidth).iterator.zipWithIndex.map {
-              case ((nid, d), r) =>
-                (qid, r + 1, nid, math.rint(d * 1e4) / 1e4)
+            one(qv).iterator.zipWithIndex.map {
+              case ((nid, d), r) => (qid, r + 1, nid, math.rint(d * 1e4) / 1e4)
             }
           }.toArray.iterator
         } finally mm.close()
@@ -469,7 +476,7 @@ object SingleFileIndex {
     * return IDENTICAL results (ShardedFilesSpec pins it). */
   private def writeShardFile(
       group: Array[IndexRow], params: VamanaParams, path: String): Unit = {
-    val (g, sorted) = VamanaIndex.rebuildShardGraph(group, params)
+    val (g, sorted) = VamanaIndex.rebuildShardGraph(group, params)(identity)
     val n = sorted.length
     require(n > 0, "cannot write an empty shard file")
     val dim = g.dim
@@ -649,11 +656,12 @@ object SingleFileIndex {
     }.toArray.sortBy(_._1)
   }
 
-  /** Serve queries over the sharded-files tier: each task mmaps only
-    * the shard files routed to it, searches its queries, and the
-    * bounded TopK merge combines per-shard results — the disk-
-    * resident twin of [[VamanaIndex.searchProbed]], with the same
-    * L2-to-seed routing rule, returning IDENTICAL rows (spec-pinned).
+  /** Serve queries over the sharded-files tier through
+    * [[ShardServe]]: each task mmaps only the shard files routed to it
+    * and searches its queries, and the bounded TopK merge combines
+    * per-shard results — the disk-resident twin of
+    * [[VamanaIndex.searchProbed]], with the same routing rule
+    * ([[ShardServe.probe]]), returning IDENTICAL rows (spec-pinned).
     * `nprobe ≤ 0` probes every shard (== [[VamanaIndex.search]]). */
   def serveSharded(queries: DataFrame, dir: String, k: Int, beamWidth: Int,
       nprobe: Int = 0, distinctMerge: Boolean = false): DataFrame = {
@@ -661,30 +669,22 @@ object SingleFileIndex {
     import s.implicits._
     val man = readManifestPivots(s, dir)
     val qArr = queries.select("q_id", "qv").as[(Long, Array[Float])].collect().sortBy(_._1)
-    val np = if (nprobe <= 0) man.length else nprobe
-    val routed: Map[Int, Array[(Long, Array[Float])]] = qArr.flatMap { case (qid, qv) =>
-      man.map { case (shard, _, pivots) =>
-        (shard, VamanaIndex.pivotDist(qv, pivots), qid, qv)
-      }.sortBy { case (shard, d, _, _) => (d, shard) }
-        .take(np)
-        .map { case (shard, _, q2, v2) => (shard, (q2, v2)) }
-    }.groupBy(_._1).map { case (shard, rows) => shard -> rows.map(_._2) }
-    val bc = s.sparkContext.broadcast(routed)
+    val routed = ShardServe.route(qArr, man.map { case (sh, _, pv) => (sh, pv) }, nprobe)
     val files = man.collect { case (sh, f, _) if routed.contains(sh) => (sh, f) }.toSeq
-    val perShard = files.toDF("shard", "file")
+    val shardFiles = files.toDF("shard", "file")
       .repartition(math.max(1, files.length), $"shard")
       .as[(Int, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (shard, file) =>
+    ShardServe.serve(shardFiles, qArr, k, Some(routed), distinctIds = distinctMerge) { it =>
+      it.map { case (shard, file) =>
+        (shard, () => {
           val mm = new MmapIndex(s"$dir/$file")
-          try {
-            bc.value(shard).iterator.flatMap { case (qid, qv) =>
-              mm.search(qv, k, beamWidth).iterator.map { case (nid, d) => (qid, nid, d) }
-            }.toArray.iterator
-          } finally mm.close()
-        }
-      }.toDF("q_id", "nid", "dist")
-    graft.operators.VectorQueries.topkExplode(perShard, k, distinctIds = distinctMerge)
+          new ShardSearcher {
+            def search(q: Array[Float], k: Int) = mm.search(q, k, beamWidth)
+            override def close(): Unit = mm.close()
+          }
+        })
+      }
+    }
   }
 
   /** Resident single-process handle over the sharded-files tier — the
@@ -694,7 +694,8 @@ object SingleFileIndex {
     * the reference's perf_test.rs measures per-query latency against a
     * resident handle, examples/perf_test.rs:40-80). This class opens
     * every shard's mmap ONCE and serves queries in-process: routing on
-    * the manifest pivot sets, per-shard [[MmapIndex.search]], and a
+    * the manifest pivot sets ([[ShardServe.probe]], the job path's
+    * rule), per-shard [[MmapIndex.search]], and a
     * merge with exactly [[graft.operators.TopKAgg]]'s (dist, id)
     * NaN-total order and the job path's round-half-up-4 — results are
     * spec-pinned identical to [[serveSharded]] (ShardedFilesSpec).
@@ -706,6 +707,8 @@ object SingleFileIndex {
       readManifestPivots(spark, dir).map { case (sh, f, pv) =>
         (sh, pv, new MmapIndex(s"$dir/$f"))
       }
+    private val shardIds = shards.map(_._1)
+    private val pivotSets = shards.map(_._2)
 
     /** Top-k (global id, dist) ascending; `nprobe <= 0` = all shards.
       * `distinctMerge` keeps one entry per id (for overlap-compacted
@@ -713,13 +716,10 @@ object SingleFileIndex {
       * mirrors [[graft.operators.TopKAgg]]'s distinct mode. */
     def search(q: Array[Float], k: Int, beamWidth: Int, nprobe: Int = 0,
         distinctMerge: Boolean = false): Array[(Long, Double)] = {
-      val np = if (nprobe <= 0) shards.length else math.min(nprobe, shards.length)
-      val ranked = shards
-        .map { case (sh, pv, mm) => (sh, VamanaIndex.pivotDist(q, pv), mm) }
-        .sortBy { case (sh, d, _) => (d, sh) }
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-      var i = 0
-      while (i < np) { out ++= ranked(i)._3.search(q, k, beamWidth); i += 1 }
+      ShardServe.probe(q, shardIds, pivotSets, nprobe).foreach { i =>
+        out ++= shards(i)._3.search(q, k, beamWidth)
+      }
       val sorted = out.toArray
         .sortWith { (a, b) =>
           val c = java.lang.Double.compare(a._2, b._2)
@@ -766,7 +766,6 @@ object SingleFileIndex {
   def servePq(queries: DataFrame, path: String, k: Int, beamWidth: Int,
       m: Int = 8, ksub: Int = 16, iters: Int = 5): DataFrame = {
     val s = queries.sparkSession
-    import s.implicits._
     val f = new java.io.File(path)
     val state = pqStateCache.getOrElseUpdate(
       (path, f.lastModified(), f.length(), m, ksub, iters), {
@@ -774,19 +773,10 @@ object SingleFileIndex {
       try mm.buildPqState(m, ksub, iters) finally mm.close()
     })
     val stateB = s.sparkContext.broadcast(state)
-    queries.select("q_id", "qv").as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val mm = new MmapIndex(path)
-        try {
-          val (cb, codes) = stateB.value
-          it.flatMap { case (qid, qv) =>
-            mm.searchPq(qv, k, beamWidth, cb, codes).iterator.zipWithIndex.map {
-              case ((nid, d), r) => (qid, r + 1, nid, math.rint(d * 1e4) / 1e4)
-            }
-          }.toArray.iterator
-        } finally mm.close()
-      }
-      .toDF("q_id", "rank", "neighbor_id", "dist")
+    serveFile(queries, path) { mm =>
+      val (cb, codes) = stateB.value
+      qv => mm.searchPq(qv, k, beamWidth, cb, codes)
+    }
   }
 
   /** Binary state per (file identity, rotate) and JVM — the
@@ -810,7 +800,6 @@ object SingleFileIndex {
   def serveBinary(queries: DataFrame, path: String, k: Int, beamWidth: Int,
       rotate: Boolean = true): DataFrame = {
     val s = queries.sparkSession
-    import s.implicits._
     val f = new java.io.File(path)
     val state = binStateCache.getOrElseUpdate(
       (path, f.lastModified(), f.length(), rotate), {
@@ -818,19 +807,10 @@ object SingleFileIndex {
       try mm.buildBinaryState(rotate) finally mm.close()
     })
     val stateB = s.sparkContext.broadcast(state)
-    queries.select("q_id", "qv").as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val mm = new MmapIndex(path)
-        try {
-          val (words, wpv, rot) = stateB.value
-          it.flatMap { case (qid, qv) =>
-            mm.searchBinary(qv, k, beamWidth, words, wpv, rot).iterator.zipWithIndex.map {
-              case ((nid, d), r) => (qid, r + 1, nid, math.rint(d * 1e4) / 1e4)
-            }
-          }.toArray.iterator
-        } finally mm.close()
-      }
-      .toDF("q_id", "rank", "neighbor_id", "dist")
+    serveFile(queries, path) { mm =>
+      val (words, wpv, rot) = stateB.value
+      qv => mm.searchBinary(qv, k, beamWidth, words, wpv, rot)
+    }
   }
 
   /** Load a u8/L2 single-file index into a byte-resident [[U8Graph]]
@@ -863,28 +843,18 @@ object SingleFileIndex {
       val entry =
         if (meta.medoidId >= 0 && meta.medoidId < n) meta.medoidId
         else {
-          // foreign file without a usable medoid: same deterministic
-          // pivot rule as VamanaGraph.medoid, integer distances
-          val np = math.min(64, n)
-          val step = math.max(1, n / np)
-          val pivots = (0 until np).map(_ * step % n).distinct.toArray
-          var best = 0; var bestScore = Double.MaxValue
-          var i = 0
-          while (i < n) {
-            var s = 0.0; var p = 0
-            while (p < pivots.length) {
-              var acc = 0; var d = 0
-              val ao = i * dim; val bo = pivots(p) * dim
-              while (d < dim) {
-                val df = (codes(ao + d) & 0xff) - (codes(bo + d) & 0xff)
-                acc += df * df; d += 1
-              }
-              s += math.sqrt(acc.toDouble); p += 1
+          // foreign file without a usable medoid: VamanaGraph.medoid's
+          // pivot rule, integer distances
+          val pivots = BestFirst.medoidPivots(n)
+          BestFirst.pivotMedoid(n, pivots.length, (i, p) => {
+            var acc = 0; var d = 0
+            val ao = i * dim; val bo = pivots(p) * dim
+            while (d < dim) {
+              val df = (codes(ao + d) & 0xff) - (codes(bo + d) & 0xff)
+              acc += df * df; d += 1
             }
-            if (s < bestScore) { bestScore = s; best = i }
-            i += 1
-          }
-          best
+            math.sqrt(acc.toDouble)
+          })
         }
       val g = new U8Graph(codes, dim, n, entry)
       readAdjacency(raf, meta, path, g.graph)
@@ -1092,28 +1062,15 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
 
   /** Serving entry point: the file's stored medoid when valid. A
     * foreign file carrying the reference's 0xFFFFFFFF no-medoid
-    * sentinel (or an out-of-range id) gets the same deterministic
-    * pivot-medoid fallback as [[SingleFileIndex.importLocalU8]],
-    * computed once off the mapping — previously such a file crashed
-    * every search with a negative mmap read. Same pivot rule and
-    * per-row pivot-ascending sum order as the u8 importer, so both
+    * sentinel (or an out-of-range id) gets the pivot medoid
+    * ([[BestFirst.pivotMedoid]]), computed once off the mapping, the
+    * same fallback [[SingleFileIndex.importLocalU8]] takes, so both
     * paths elect the same entry. */
   lazy val entryPoint: Int =
     if (meta.medoidId >= 0 && meta.medoidId < n) meta.medoidId
     else {
-      val np = math.min(64, n)
-      val step = math.max(1, n / np)
-      val pivots = (0 until np).map(_ * step % n).distinct.toArray
-      val pdist = pivots.map(p => queryDist(vector(p)))
-      var best = 0; var bestScore = Double.MaxValue
-      var i = 0
-      while (i < n) {
-        var s = 0.0; var p = 0
-        while (p < pdist.length) { s += pdist(p)(i); p += 1 }
-        if (s < bestScore) { bestScore = s; best = i }
-        i += 1
-      }
-      best
+      val pdist = BestFirst.medoidPivots(n).map(p => queryDist(vector(p)))
+      BestFirst.pivotMedoid(n, pdist.length, (i, p) => pdist(p)(i))
     }
 
   /** Copy row `i` into a fresh array (reference get_vector, lib.rs:724);

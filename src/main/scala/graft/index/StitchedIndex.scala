@@ -155,7 +155,7 @@ object StitchedIndex {
   /** Filtered top-k: a NORMAL beam over the target label's graphs
     * only. The label filter is a partition-prunable predicate on a
     * [[load]]ed index; the per-cell searches and the bounded TopK
-    * merge are the plain tier's. Beam needs k-headroom, not
+    * merge are the plain tier's ([[ShardServe]]). Beam needs k-headroom, not
     * 1/selectivity scaling — that is the entire point.
     *
     * `tombstones`: optional SORTED delete log, honored exactly as in
@@ -171,27 +171,19 @@ object StitchedIndex {
     val s = index.sparkSession
     import s.implicits._
     VamanaIndex.requireSortedTombstones(tombstones)
-    val qB = s.sparkContext.broadcast(queries)
     val exB = s.sparkContext.broadcast(tombstones)
-    val perShard = index.filter(col("label") === target)
+    val cells = index.filter(col("label") === target)
       .repartition(col("shard"))
       .as[StitchedIndexRow]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        val ex = exB.value
-        rows.groupBy(_.shard).iterator.flatMap { case (shard, group) =>
-          val (g, sorted) = VamanaIndex.rebuildShardGraph(
-            group.map(r => IndexRow(r.vec_id, r.embedding, shard, r.neighbors)),
-            params)
-          qB.value.iterator.flatMap { case (qid, qv) =>
-            (if (ex.length == 0) g.search(qv, k, beamWidth)
-             else g.searchFiltered(qv, k, beamWidth,
-               li => java.util.Arrays.binarySearch(ex, sorted(li).vec_id) < 0))
-              .iterator.map { case (li, d) => (qid, sorted(li).vec_id, d) }
-          }
-        }
-      }.toDF("q_id", "nid", "dist")
-    graft.operators.VectorQueries.topkExplode(perShard, k)
+    ShardServe.serve(cells, queries, k) { it =>
+      val ex = exB.value
+      val alive = VamanaIndex.live(ex)
+      VamanaIndex.shardGraphs(
+          it.map(r => IndexRow(r.vec_id, r.embedding, r.shard, r.neighbors)), params)(identity) {
+        case (g, rows) => VamanaIndex.graphSearcher(beamWidth,
+          if (ex.length == 0) None else Some(li => alive(rows(li).vec_id)))(g, rows(_).vec_id)
+      }
+    }
   }
 
   /** Persist partitioned by label — the layout that turns the label

@@ -1,5 +1,6 @@
 package graft.index
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -218,7 +219,7 @@ object StreamingIndex {
     val metricName = params.metric
     val maxDeg = params.maxDegree
     val alpha = params.alpha
-    val split = loadSplit(path)
+    val split = splitOf(metaOf(path), path)
     val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
       val tomb = bc.value
       val metric = Metric.byName(metricName)
@@ -265,14 +266,16 @@ object StreamingIndex {
     * below `limit` — the MAIN tier. Segment pivots (present after a
     * merge-family save ran over an ingested index) must never
     * attract inserts: segments are torn down, not grown. Pivot table
-    * when the save wrote one, else the seed-centroid routing table;
-    * both L2, the assignment metric. */
-  private def mainRouteTables(spark: org.apache.spark.sql.SparkSession,
-      path: String, op: String, limit: Int): Array[(Int, Array[Array[Float]])] = {
-    val t = (try VamanaIndex.loadPivots(spark, path)
-      catch { case _: Throwable =>
-        VamanaIndex.loadRouting(spark, path).map { case (sh, c) => (sh, Array(c)) } })
-      .filter(_._1 < limit)
+    * when the save wrote one, else (an index saved before pivots
+    * existed) the seed-centroid routing table; both L2, the
+    * assignment metric. A present but malformed field fails naming
+    * the file — it never falls back to a different routing geometry. */
+  private def mainRouteTables(meta: Option[JsonNode], path: String,
+      op: String, limit: Int): Array[(Int, Array[Array[Float]])] = {
+    val t = meta.fold(Array.empty[(Int, Array[Array[Float]])]) { m =>
+      if (m.has("pivots")) VamanaIndex.pivotsOf(m, path)
+      else VamanaIndex.routingOf(m, path).map { case (sh, c) => (sh, Array(c)) }
+    }.filter(_._1 < limit)
     require(t.nonEmpty,
       s"$op: index has no main-tier routing metadata (shards < $limit) — " +
         "run compact() to establish the main tier first")
@@ -293,15 +296,30 @@ object StreamingIndex {
       best
     }
 
+  /** The index's parsed metadata.json, or None when the directory has
+    * none (an ingest-only index never save()d, a foreign directory):
+    * then the split is 1 and there is no routing table, which only a
+    * non-empty insert batch needs. A file that exists but cannot be
+    * read or parsed fails naming it ([[VamanaIndex.readMetaJson]]). */
+  private def metaOf(path: String): Option[JsonNode] =
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/metadata.json")))
+      Some(VamanaIndex.readMetaJson(path))
+    else None
+
   /** The capped-overlap split factor persisted in metadata.json (1
-    * when absent) — preserved across every merge-family save so
-    * primary pivot sampling keeps grouping sibling sub-shards by
-    * parent cell. */
-  private def loadSplit(path: String): Int =
-    try {
-      val n = MetaJson.parse(VamanaIndex.loadMeta(path)).get("split")
-      if (n == null) 1 else n.asInt()
-    } catch { case _: Throwable => 1 }
+    * when absent, as in indexes saved before it existed) — preserved
+    * across every merge-family save so primary pivot sampling keeps
+    * grouping sibling sub-shards by parent cell. A malformed value
+    * fails naming the file. */
+  private def splitOf(meta: Option[JsonNode], path: String): Int = {
+    val n = meta.map(_.get("split")).orNull
+    if (n == null) 1
+    else {
+      require(n.isInt && n.asInt() > 0,
+        s"malformed 'split' in $path/metadata.json: $n")
+      n.asInt()
+    }
+  }
 
   /** The FreshDiskANN §4.2 delete patch over ONE shard's rows:
     * deleted rows drop; a live row with a deleted neighbor re-prunes
@@ -421,6 +439,7 @@ object StreamingIndex {
         "use ingest() (segment tier) or compact() for bulk loads")
     require(batch.map(_._1).distinct.length == batch.length,
       "insertMerge: duplicate vec_ids in the insert batch")
+    val meta = metaOf(path)
     // id-collision check against the live index: one broadcast
     // semi-join scan — a colliding id would otherwise alias two
     // vectors under one node and corrupt neighbor remapping silently
@@ -430,14 +449,14 @@ object StreamingIndex {
       .limit(1).count()
     require(clash == 0, "insertMerge: batch contains vec_ids already in the index")
     val byShard = routeBatch(batch,
-      mainRouteTables(spark, path, "insertMerge", ShardsPerBatchBase))
+      mainRouteTables(meta, path, "insertMerge", ShardsPerBatchBase))
     val insB = spark.sparkContext.broadcast(byShard)
     val metricName = params.metric
     val maxDeg = params.maxDegree
     val alpha = params.alpha
     val slack = params.slackLimit
     val bwL = bw
-    val split = loadSplit(path)
+    val split = splitOf(meta, path)
     val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
       val metric = Metric.byName(metricName)
       it.toArray.groupBy(_.shard).iterator.flatMap { case (shard, group) =>
@@ -608,6 +627,7 @@ object StreamingIndex {
         "use ingest() (segment tier) or compact() for bulk loads")
     require(batch.map(_._1).distinct.length == batch.length,
       "consolidate: duplicate vec_ids in the insert batch")
+    val meta = metaOf(path)
     // id-collision check against the POST-DELETE live set: a batch id
     // that is tombstoned is re-insertion (allowed); one that is live
     // would alias two vectors under one node (rejected). The check
@@ -631,7 +651,7 @@ object StreamingIndex {
     val byShard: Map[Int, Array[(Long, Array[Float])]] =
       if (batch.isEmpty) Map.empty
       else routeBatch(batch,
-        mainRouteTables(spark, path, "consolidate", ShardsPerBatchBase))
+        mainRouteTables(meta, path, "consolidate", ShardsPerBatchBase))
     val tombB = spark.sparkContext.broadcast(tomb)
     val insB = spark.sparkContext.broadcast(byShard)
     val metricName = params.metric
@@ -639,7 +659,7 @@ object StreamingIndex {
     val alpha = params.alpha
     val slack = params.slackLimit
     val bwL = bw
-    val split = loadSplit(path)
+    val split = splitOf(meta, path)
     val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
       val metric = Metric.byName(metricName)
       val tombA = tombB.value
@@ -723,6 +743,7 @@ object StreamingIndex {
       "absorbSegments: duplicate vec_ids across segments — the stream " +
         "ingested an id twice; run compact() (collapses to the latest " +
         "batch's copy) or delete one copy first")
+    val meta = metaOf(path)
     // the check stays bounded at any clash size: tombstone exclusion
     // is an anti-join and only the first few offenders reach the driver
     if (batch.nonEmpty) {
@@ -744,7 +765,7 @@ object StreamingIndex {
     val byShard: Map[Int, Array[(Long, Array[Float])]] =
       if (batch.isEmpty) Map.empty
       else routeBatch(batch,
-        mainRouteTables(spark, path, "absorbSegments", mainShards))
+        mainRouteTables(meta, path, "absorbSegments", mainShards))
     val tombB = spark.sparkContext.broadcast(tomb)
     val insB = spark.sparkContext.broadcast(byShard)
     val metricName = params.metric
@@ -753,7 +774,7 @@ object StreamingIndex {
     val slack = params.slackLimit
     val bwL = bw
     val mainN = mainShards
-    val split = loadSplit(path)
+    val split = splitOf(meta, path)
     val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
       val metric = Metric.byName(metricName)
       val tombA = tombB.value

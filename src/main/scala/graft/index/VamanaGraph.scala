@@ -268,24 +268,15 @@ final class VamanaGraph(
     * deterministic rule would not reproduce. Negative = compute. */
   private[graft] var entryOverride: Int = -1
 
-  /** Entry point: medoid over min(n, 64) deterministic pivots (ids
-    * 0, step, 2·step …) — sampled form of reference lib.rs:736-756. */
+  /** Entry point: the pivot medoid ([[BestFirst.pivotMedoid]] over
+    * [[BestFirst.medoidPivots]]) — sampled form of reference
+    * lib.rs:736-756. */
   lazy val medoid: Int = {
     if (entryOverride >= 0) entryOverride
     else if (n == 1) 0
     else {
-      val np = math.min(64, n)
-      val step = math.max(1, n / np)
-      val pivots = (0 until np).map(_ * step % n).distinct.toArray
-      var best = 0; var bestScore = Double.MaxValue
-      var i = 0
-      while (i < n) {
-        var s = 0.0; var p = 0
-        while (p < pivots.length) { s += dist(i, pivots(p)); p += 1 }
-        if (s < bestScore) { bestScore = s; best = i }
-        i += 1
-      }
-      best
+      val pivots = BestFirst.medoidPivots(n)
+      BestFirst.pivotMedoid(n, pivots.length, (i, p) => dist(i, pivots(p)))
     }
   }
 

@@ -2,8 +2,9 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -33,10 +34,11 @@ case class IndexRow(vec_id: Long, embedding: Array[Float], shard: Int, neighbors
   * reference lib.rs:126-136 Metadata; persisting the routing table is
   * what lets probed serving start without any index scan).
   *
-  * Serving: queries are broadcast (small side), each shard searches its
-  * local graph with the reference's beam search, and the global top-k
-  * is merged with the bounded [[graft.operators.TopKAgg]] — shuffle
-  * volume is k rows per (query, probed shard).
+  * Serving ([[ShardServe]]): queries are broadcast (small side), each
+  * shard searches its local graph with the reference's beam search,
+  * and the global top-k is merged with the bounded
+  * [[graft.operators.TopKAgg]] — shuffle volume is k rows per (query,
+  * probed shard).
   */
 object VamanaIndex {
 
@@ -677,24 +679,55 @@ object VamanaIndex {
     * Spark task). Float seeds round-trip exactly: Float.toString is
     * shortest-round-trip, and double-parse → float restores the bit
     * pattern. */
-  def loadRouting(spark: SparkSession, path: String): Array[(Int, Array[Float])] = {
-    val meta = MetaJson.parse(loadMeta(path))
-    MetaJson.elems(MetaJson.required(meta, "routing", s"$path/metadata.json"))
-      .map { r =>
-        (r.get("shard").asInt(), MetaJson.floats(r.get("seed")))
-      }.toArray.sortBy(_._1)
-  }
+  def loadRouting(spark: SparkSession, path: String): Array[(Int, Array[Float])] =
+    routingOf(readMetaJson(path), path)
 
   /** Parse the persisted pivot table back out of metadata.json —
     * pivot-routing twin of [[loadRouting]]. Indexes saved before the
     * pivots field existed throw here; callers fall back to one
     * [[pivotTable]] recompute (Handle does). */
-  def loadPivots(spark: SparkSession, path: String): Array[(Int, Array[Array[Float]])] = {
-    val meta = MetaJson.parse(loadMeta(path))
-    MetaJson.elems(MetaJson.required(meta, "pivots", s"$path/metadata.json"))
-      .map { p =>
-        (p.get("shard").asInt(), MetaJson.floatMatrix(p.get("vecs")))
+  def loadPivots(spark: SparkSession, path: String): Array[(Int, Array[Array[Float]])] =
+    pivotsOf(readMetaJson(path), path)
+
+  /** The index's metadata.json, parsed once per call. A file
+    * that cannot be read, or is not a JSON object, fails naming it. */
+  private[index] def readMetaJson(path: String): JsonNode = {
+    val where = s"$path/metadata.json"
+    val n =
+      try MetaJson.parse(loadMeta(path))
+      catch { case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"cannot read index metadata $where: $e", e)
+      }
+    require(n != null && n.isObject, s"index metadata $where is not a JSON object")
+    n
+  }
+
+  /** The `routing` table of parsed metadata (required). */
+  private[index] def routingOf(meta: JsonNode,
+      path: String): Array[(Int, Array[Float])] =
+    shardTable(meta, "routing", path)(r => MetaJson.floats(r.get("seed")))
+
+  /** The `pivots` table of parsed metadata (required). */
+  private[index] def pivotsOf(meta: JsonNode,
+      path: String): Array[(Int, Array[Array[Float]])] =
+    shardTable(meta, "pivots", path)(p => MetaJson.floatMatrix(p.get("vecs")))
+
+  /** A per-shard array field of parsed metadata as (shard, value)
+    * sorted by shard; absent or malformed fails naming the file. */
+  private def shardTable[A](meta: JsonNode, field: String,
+      path: String)(value: JsonNode => A): Array[(Int, A)] = {
+    val where = s"$path/metadata.json"
+    val f = MetaJson.required(meta, field, where)
+    try {
+      require(f.isArray, "not an array")
+      MetaJson.elems(f).map { e =>
+        val sh = e.get("shard")
+        require(sh != null && sh.isInt, "entry without an integer shard")
+        (sh.asInt(), value(e))
       }.toArray.sortBy(_._1)
+    } catch { case e: Exception =>
+      throw new IllegalArgumentException(s"malformed '$field' in $where: ${e.getMessage}", e)
+    }
   }
 
   /** The persisted serving schedule as its own JSON string — typed
@@ -749,136 +782,104 @@ object VamanaIndex {
       seed = f("seed").asLong())
   }
 
-  /** Rebuild one shard's in-memory graph from its IndexRows: sorts by
-    * vec_id, flattens vectors, remaps global neighbor ids to local
-    * indices. Shared by every serving/diagnostic path so fixes can't
-    * drift between them. */
-  private[index] def rebuildShardGraph(
-      group: Array[IndexRow], params: VamanaParams): (VamanaGraph, Array[IndexRow]) = {
-    val sorted = group.sortBy(_.vec_id)
-    val n = sorted.length
-    val dim = if (n == 0) 0 else sorted(0).embedding.length
-    val flat = new Array[Float](n * dim)
-    val g2l = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-    var i = 0
-    while (i < n) {
-      System.arraycopy(sorted(i).embedding, 0, flat, i * dim, dim)
-      g2l.put(sorted(i).vec_id, i)
-      i += 1
-    }
-    val g = new VamanaGraph(flat, dim, n, params)
-    i = 0
-    while (i < n) {
-      val nbrs = sorted(i).neighbors
-      val local = new ArrayBuffer[Int](nbrs.length)
-      var t = 0
-      while (t < nbrs.length) {
-        val lo = g2l.get(nbrs(t))
-        if (lo != null) local += lo.intValue()
-        t += 1
-      }
-      g.graph(i) = local.toArray
-      i += 1
-    }
+  /** Rebuild one shard's in-memory graph from its rows (`row` views
+    * each as an IndexRow): sorts by vec_id (stable, so rows sharing an
+    * id keep their input order), flattens vectors, remaps global
+    * neighbor ids to local indices ([[ShardServe.localize]]). Returns
+    * the rows in local order. Shared by every serving/diagnostic path
+    * so fixes can't drift between them. */
+  private[index] def rebuildShardGraph[R](group: Array[R], params: VamanaParams)(
+      row: R => IndexRow): (VamanaGraph, Array[R]) = {
+    val (sorted, dim, flat, local) =
+      ShardServe.localize(group)(row(_).vec_id, row(_).embedding)
+    val g = new VamanaGraph(flat, dim, sorted.length, params)
+    sorted.indices.foreach(i => g.graph(i) = local(row(sorted(i)).neighbors))
     (g, sorted)
   }
 
-  /** This partition's shard graphs from the warm tier
-    * ([[GraphCache]]), rebuilt from `it` on a miss. */
-  private[graft] def residentShards(token: String, pid: Int, it: Iterator[IndexRow],
-      params: VamanaParams): Map[Int, (VamanaGraph, Array[IndexRow])] =
-    GraphCache.getOrLoad(token, pid) {
-      val rows = it.toArray
-      val m = rows.groupBy(_.shard).map { case (sh, group) =>
-        sh -> rebuildShardGraph(group, params)
-      }
-      // flat vectors + adjacency are held twice (rows + graph); the
-      // search scratch is per thread (BestFirst), not per graph, so it
-      // needs no allowance here
-      (m, rows.iterator.map(r =>
-        64L + 8L * r.embedding.length + 16L * r.neighbors.length).sum)
+  /** This partition's shard graphs, each with its rows in local order
+    * ([[ShardServe.shardGraphs]]: resident or rebuilt on open). Rows
+    * may carry a per-row payload beside the IndexRow that `row`
+    * extracts (a filter flag), aligned with the graph's local rows. */
+  private[graft] def shardGraphs[R: ClassTag, A](it: Iterator[R], params: VamanaParams,
+      resident: Option[String] = None)(row: R => IndexRow)(
+      open: ((VamanaGraph, Array[R])) => A): Iterator[(Int, () => A)] =
+    ShardServe.shardGraphs(it, resident)(row(_).shard,
+      rebuildShardGraph(_, params)(row), (r: R) => rowBytes(row(r)))(open)
+
+  // flat vectors + adjacency are held twice (rows + graph); the search
+  // scratch is per thread (BestFirst), not per graph, so it needs no
+  // allowance here
+  private def rowBytes(r: IndexRow): Long =
+    64L + 8L * r.embedding.length + 16L * r.neighbors.length
+
+  /** A [[ShardSearcher]] over one shard graph whose local row `li`
+    * has global id `ids(li)`. `keep` = None runs the plain beam;
+    * `Some(p)` runs the filtered beam, which traverses every row but
+    * returns only local rows passing `p`. */
+  private[index] def graphSearcher(beamWidth: Int, keep: Option[Int => Boolean] = None)(
+      g: VamanaGraph, ids: Int => Long): ShardSearcher =
+    keep match {
+      case None =>
+        (q, k) => g.search(q, k, beamWidth).map { case (li, d) => (ids(li), d) }
+      case Some(p) =>
+        (q, k) => g.searchFiltered(q, k, beamWidth, p).map { case (li, d) => (ids(li), d) }
+    }
+
+  /** The lazy-delete rule: an id is live iff it is absent from the
+    * sorted tombstone log `ex` (binary search, no boxing). */
+  private[index] def live(ex: Array[Long]): Long => Boolean =
+    id => java.util.Arrays.binarySearch(ex, id) < 0
+
+  /** The shard graphs of rows that carry a keep flag, each searched by
+    * the filtered beam returning only rows whose flag is set. */
+  private def flagged(it: Iterator[(IndexRow, Boolean)], params: VamanaParams,
+      beamWidth: Int): Iterator[(Int, () => ShardSearcher)] =
+    shardGraphs(it, params)(_._1) { case (g, rows) =>
+      graphSearcher(beamWidth, Some(rows(_)._2))(g, rows(_)._1.vec_id)
     }
 
   // ---------------------------------------------------------------- search
 
-  /** Batch beam search. `queries`: (q_id, qv). Returns
-    * (q_id, rank, neighbor_id, dist) for the global top-k.
+  /** Batch beam search over every shard. `queries`: (q_id, qv).
+    * Returns (q_id, rank, neighbor_id, dist) for the global top-k.
     *
     * Each index partition reconstructs its shard graphs in memory
-    * (adjacency remapped to local indices) and runs the sequential
-    * beam search per query; the per-shard k results are then merged
-    * by the bounded TopK aggregate. `probeShards` limits which shards
-    * are searched (None = all — at scale pass the query's nprobe
-    * nearest cells; the parquet partition filter then prunes IO too).
-    */
+    * (adjacency remapped to local indices) — or, with a `resident`
+    * token, reads them from [[GraphCache]] — and [[ShardServe]] runs
+    * every query against every shard and merges the per-shard k
+    * results with the bounded TopK aggregate. */
   def search(
       index: Dataset[IndexRow],
       queries: Array[(Long, Array[Float])],
       k: Int,
       beamWidth: Int,
       params: VamanaParams,
-      probeShards: Option[Set[Int]] = None,
       excludeSelf: Boolean = false,
-      resident: Option[String] = None): DataFrame = {
-    val s = index.sparkSession
-    import s.implicits._
-    val qB = s.sparkContext.broadcast(queries)
-    def serveShard(shard: Int, g: VamanaGraph, sorted: Array[IndexRow])
-        : Iterator[(Long, Long, Double)] = {
-      // search beyond k when dropping self so k true neighbors remain
-      val kLocal = if (excludeSelf) k + 1 else k
-      qB.value.iterator.flatMap { case (qid, qv) =>
-        g.search(qv, kLocal, beamWidth).iterator
-          .map { case (li, d) => (qid, sorted(li).vec_id, d) }
-          .filter { case (q, nid, _) => !(excludeSelf && q == nid) }
+      resident: Option[String] = None): DataFrame =
+    ShardServe.serve(index, queries, k, excludeSelf = excludeSelf) { it =>
+      shardGraphs(it, params, resident)(identity) { case (g, rows) =>
+        graphSearcher(beamWidth)(g, rows(_).vec_id)
       }
     }
-    val perShard = (resident match {
-      // warm tier: graphs come from GraphCache (a hit never
-      // consumes `it` — zero deserialization); shard pruning moves
-      // inside the closure so partition contents stay filter-free
-      // (the cache key is (token, pid), which must name ONE content)
-      case Some(token) =>
-        index.mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          residentShards(token, pid, it, params).iterator
-            .filter { case (sh, _) => probeShards.forall(_.contains(sh)) }
-            .flatMap { case (sh, (g, sorted)) => serveShard(sh, g, sorted) }
-        }
-      case None =>
-        val pruned = probeShards match {
-          case Some(set) => index.filter(col("shard").isin(set.toSeq: _*))
-          case None => index
-        }
-        pruned.mapPartitions { it =>
-          val rows = it.toArray
-          rows.groupBy(_.shard).iterator.flatMap { case (sh, group) =>
-            val (g, sorted) = rebuildShardGraph(group, params)
-            serveShard(sh, g, sorted)
-          }
-        }
-    }).toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k)
-  }
 
   /** Filtered serving — predicate-constrained top-k through the SAME
     * graph, no per-label index (the Filtered-DiskANN serving pattern,
     * Gollapudi et al. WWW'23): the narrow label payload joins the
     * index rows, shard graphs rebuild as usual, and each query runs
-    * the kernel's filtered beam search with allow = (label == target).
-    * Traversal stays unfiltered so connectivity is preserved; only
-    * result collection filters. The label join is one narrow-column
-    * shuffle here — at 100 TB store attributes in the index rows at
-    * build time (or co-bucket both tables on vec_id) and it
-    * disappears. Widen `beamWidth` ≈ k / selectivity.
+    * the kernel's filtered beam search keeping ids whose label is
+    * `target`. Traversal stays unfiltered so connectivity is
+    * preserved; only result collection filters. The label join is one
+    * narrow-column shuffle here — at 100 TB store attributes in the
+    * index rows at build time (or co-bucket both tables on vec_id) and
+    * it disappears. Widen `beamWidth` ≈ k / selectivity.
     *
     * `tombstones`: optional SORTED delete log (the
     * [[searchExcludingSorted]] convention — broadcast primitive
-    * longs, binary-search per collect). Deleted ids are excluded
+    * longs, binary-searched once per row). Deleted ids are excluded
     * from RESULTS but keep ROUTING, exactly as in the plain tier
-    * (FreshDiskANN lazy delete): the allow predicate becomes
-    * label==target AND live, and traversal stays unfiltered either
-    * way. */
+    * (FreshDiskANN lazy delete): a result must carry the target label
+    * AND be live, and traversal stays unfiltered either way. */
   def searchFiltered(
       index: Dataset[IndexRow], labels: DataFrame,
       queries: Array[(Long, Array[Float])], k: Int, beamWidth: Int,
@@ -891,7 +892,6 @@ object VamanaIndex {
     require(target != Int.MinValue,
       "label Int.MinValue is reserved as the unlabeled sentinel")
     requireSortedTombstones(tombstones)
-    val qB = s.sparkContext.broadcast(queries)
     // LEFT join: a vector without a label row must STAY IN THE GRAPH
     // (sentinel label that matches no target) — an inner join removed
     // unlabeled vectors from the traversal itself, fragmenting the
@@ -899,29 +899,19 @@ object VamanaIndex {
     // covers only part of the corpus (a natural way to call this API)
     val Unlabeled = Int.MinValue
     val exB = s.sparkContext.broadcast(tombstones)
-    val perShard = index
+    val labeled = index
       .join(labels.select(col("vec_id"), col("label")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("embedding"), col("shard"), col("neighbors"),
         coalesce(col("label"), lit(Unlabeled)).as("label"))
       .repartition(col("shard"))
       .as[(Long, Array[Float], Int, Array[Long], Int)]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        val ex = exB.value
-        rows.groupBy(_._3).iterator.flatMap { case (_, group) =>
-          val srt = group.sortBy(_._1)
-          val labelOf = srt.map(_._5)
-          val (g, sorted) = rebuildShardGraph(
-            srt.map(t => IndexRow(t._1, t._2, t._3, t._4)), params)
-          qB.value.iterator.flatMap { case (qid, qv) =>
-            g.searchFiltered(qv, k, beamWidth, li => labelOf(li) == target &&
-                (ex.length == 0 ||
-                  java.util.Arrays.binarySearch(ex, sorted(li).vec_id) < 0))
-              .iterator.map { case (li, d) => (qid, sorted(li).vec_id, d) }
-          }
-        }
-      }.toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k)
+    ShardServe.serve(labeled, queries, k) { it =>
+      // the filter is per graph row: a vec_id with several label rows
+      // is several nodes, and only the one carrying `target` qualifies
+      val alive = live(exB.value)
+      flagged(it.map(t => (IndexRow(t._1, t._2, t._3, t._4), t._5 == target && alive(t._1))),
+        params, beamWidth)
+    }
   }
 
   /** Search with a tombstone set excluded from RESULTS but not from
@@ -962,28 +952,18 @@ object VamanaIndex {
       queries: Array[(Long, Array[Float])],
       k: Int, beamWidth: Int, params: VamanaParams,
       exArr: Array[Long]): DataFrame = {
-    val s = index.sparkSession
-    import s.implicits._
     requireSortedTombstones(exArr)
     if (exArr.isEmpty) return search(index, queries, k, beamWidth, params)
-    val qB = s.sparkContext.broadcast(queries)
-    val exB = s.sparkContext.broadcast(exArr)
-    val perShard = index.mapPartitions { it =>
-      val rows = it.toArray
-      rows.groupBy(_.shard).iterator.flatMap { case (_, group) =>
-        val (g, sorted) = rebuildShardGraph(group, params)
-        val ex = exB.value
-        qB.value.iterator.flatMap { case (qid, qv) =>
-          g.searchFiltered(qv, k, beamWidth,
-              li => java.util.Arrays.binarySearch(ex, sorted(li).vec_id) < 0)
-            .iterator.map { case (li, d) => (qid, sorted(li).vec_id, d) }
-        }
+    val exB = index.sparkSession.sparkContext.broadcast(exArr)
+    ShardServe.serve(index, queries, k) { it =>
+      val alive = live(exB.value)
+      shardGraphs(it, params)(identity) { case (g, rows) =>
+        graphSearcher(beamWidth, Some(li => alive(rows(li).vec_id)))(g, rows(_).vec_id)
       }
-    }.toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k)
+    }
   }
 
-  /** Distributed twin of [[searchExcluding]]: the tombstone log stays
+  /** Distributed form of [[searchExcluding]]: the tombstone log stays
     * a DataFrame end-to-end — it LEFT-joins the index rows as a
     * per-row deleted flag (co-partitioned by shard, the same narrow
     * join shape as [[searchFiltered]]'s labels), so NOTHING
@@ -998,36 +978,24 @@ object VamanaIndex {
       k: Int, beamWidth: Int, params: VamanaParams): DataFrame = {
     val s = index.sparkSession
     import s.implicits._
-    val qB = s.sparkContext.broadcast(queries)
-    val perShard = index
+    val withFlag = index
       .join(tombstones.select(col("vec_id"), lit(true).as("deleted"))
         .dropDuplicates("vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"), col("embedding"), col("shard"), col("neighbors"),
         coalesce(col("deleted"), lit(false)).as("deleted"))
       .repartition(col("shard"))
       .as[(Long, Array[Float], Int, Array[Long], Boolean)]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        rows.groupBy(_._3).iterator.flatMap { case (_, group) =>
-          val srt = group.sortBy(_._1)
-          val dead = srt.map(_._5)
-          val (g, sorted) = rebuildShardGraph(
-            srt.map(t => IndexRow(t._1, t._2, t._3, t._4)), params)
-          qB.value.iterator.flatMap { case (qid, qv) =>
-            g.searchFiltered(qv, k, beamWidth, li => !dead(li))
-              .iterator.map { case (li, d) => (qid, sorted(li).vec_id, d) }
-          }
-        }
-      }.toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k)
+    ShardServe.serve(withFlag, queries, k) { it =>
+      flagged(it.map(t => (IndexRow(t._1, t._2, t._3, t._4), !t._5)), params, beamWidth)
+    }
   }
 
   /** Routed (probed) search — the 100 TB serving path: each query is
-    * routed to its `nprobe` nearest shards (routing table = the shard
-    * seed vectors, persisted at build time in metadata.json) and ONLY
-    * those shards run beam search for it. With shard-partitioned
-    * storage the unprobed shards' files are never read for that query,
-    * and each shard task searches only the queries routed to it.
+    * routed to its `nprobe` nearest shards ([[ShardServe.probe]];
+    * `nprobe <= 0` probes every shard, == [[search]]) and ONLY those
+    * shards run beam search for it. With shard-partitioned storage
+    * the unprobed shards' files are never read for that query, and
+    * each shard task searches only the queries routed to it.
     *
     * `routing`: pass the build-time table (from [[cachedRouting]] or
     * [[loadRouting]]). The `None` fallback recomputes it with a full
@@ -1051,56 +1019,21 @@ object VamanaIndex {
       distinctMerge: Boolean = false,
       pivots: Option[Array[(Int, Array[Array[Float]])]] = None,
       resident: Option[String] = None): DataFrame = {
-    val s = index.sparkSession
-    import s.implicits._
     val table: Array[(Int, Array[Array[Float]])] = pivots.getOrElse(
       routing.getOrElse(routingTable(index)).map { case (sh, sv) => (sh, Array(sv)) })
-    val routed: Map[Int, Array[(Long, Array[Float])]] = queries.flatMap { case (qid, qv) =>
-      table.map { case (shard, pv) =>
-        (shard, pivotDist(qv, pv), qid, qv)
-      }.sortBy { case (shard, d, _, _) => (d, shard) }
-        .take(nprobe)
-        .map { case (shard, _, qid2, qv2) => (shard, (qid2, qv2)) }
-    }.groupBy(_._1).map { case (shard, rows) => shard -> rows.map(_._2) }
-    val bc = s.sparkContext.broadcast(routed)
-    def serveShard(shard: Int, g: VamanaGraph, sorted: Array[IndexRow])
-        : Iterator[(Long, Long, Double)] =
-      bc.value.get(shard) match {
-        case None => Iterator.empty
-        case Some(myQueries) =>
-          val kLocal = if (excludeSelf) k + 1 else k
-          myQueries.iterator.flatMap { case (qid, qv) =>
-            g.search(qv, kLocal, beamWidth).iterator
-              .map { case (li, d) => (qid, sorted(li).vec_id, d) }
-              .filter { case (q, nid, _) => !(excludeSelf && q == nid) }
-          }
+    val routed = ShardServe.route(queries, table, nprobe)
+    // warm tier (see [[GraphCache]]): no shard filter on the scan —
+    // (token, pid) must name one immutable content — and the
+    // harness's per-shard routing prunes work instead; otherwise the
+    // partition filter prunes the scan to the probed shards
+    val scan =
+      if (resident.isDefined) index
+      else index.filter(col("shard").isin(routed.keySet.toSeq: _*))
+    ShardServe.serve(scan, queries, k, Some(routed), excludeSelf, distinctMerge) { it =>
+      shardGraphs(it, params, resident)(identity) { case (g, rows) =>
+        graphSearcher(beamWidth)(g, rows(_).vec_id)
       }
-    val perShard = (resident match {
-      // warm tier (see [[GraphCache]]): no shard filter on the
-      // scan — (token, pid) must name one immutable content — and the
-      // per-shard query routing inside the closure prunes work
-      // instead; a cache hit consumes nothing from `it`
-      case Some(token) =>
-        index.mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          residentShards(token, pid, it, params).iterator
-            .flatMap { case (sh, (g, sorted)) => serveShard(sh, g, sorted) }
-        }
-      case None =>
-        val probedShards = routed.keySet
-        index.filter(col("shard").isin(probedShards.toSeq: _*))
-          .mapPartitions { it =>
-            val rows = it.toArray
-            rows.groupBy(_.shard).iterator.flatMap { case (shard, group) =>
-              if (!bc.value.contains(shard)) Iterator.empty
-              else {
-                val (g, sorted) = rebuildShardGraph(group, params)
-                serveShard(shard, g, sorted)
-              }
-            }
-          }
-    }).toDF("q_id", "nid", "dist")
-    VectorQueries.topkExplode(perShard, k, distinctIds = distinctMerge)
+    }
   }
 
   // ---------------------------------------------------------------- queries
@@ -1671,7 +1604,7 @@ object VamanaIndex {
       rows.groupBy(_.shard).iterator.map { case (shard, group) =>
         // BFS from the shard's MEDOID — the entry point beam search
         // actually uses — not from an arbitrary node
-        val (g, _) = rebuildShardGraph(group, p)
+        val (g, _) = rebuildShardGraph(group, p)(identity)
         val n = g.n
         val seen = new Array[Boolean](n)
         var frontier = List(g.medoid)

@@ -81,9 +81,6 @@ object Multimodal {
   /** probe hook (r18 measurement) */
   private[graft] def metaFrameProbe(s: SparkSession, dir: String): DataFrame =
     metaFrame(s, dir)
-  /** probe hook (r18 measurement) */
-  private[graft] def payloadFrameProbe(s: SparkSession, dir: String): DataFrame =
-    payloadFrame(s, dir)
 
   private def payloadFrame(s: SparkSession, dir: String): DataFrame =
     // r18: native tiling instead of the repeat()+unhex() SQL spelling

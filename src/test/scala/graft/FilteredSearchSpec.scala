@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.lit
 import graft.index.VamanaIndex
 
 /** Filtered graph serving (the Filtered-DiskANN serving pattern):
@@ -121,5 +122,31 @@ class FilteredSearchSpec extends AnyFunSuite {
       Tables.embeddings(spark, dir).select($"vec_id", $"label"),
       qs, 10, 256, graft.index.VamanaParams(metric = "cosine"), target = 99)
     assert(out.count() == 0)
+  }
+
+  test("a vec_id with several label rows is returned at most once") {
+    // the left label join repeats such a vector once per label row
+    // inside its shard graph; the filter holds per graph row, so only
+    // the copy carrying the target label may be returned
+    val full = Tables.embeddings(spark, dir).select($"vec_id", $"label")
+    val multi = full
+      .union(full.filter($"label" === Target).select($"vec_id", lit(Target + 100).as("label")))
+      .union(full.filter($"vec_id" % 7 === 0 && $"label" =!= Target)
+        .select($"vec_id", lit(Target).as("label")))
+    val labelsOf = multi.as[(Long, Int)].collect().groupBy(_._1)
+      .view.mapValues(_.map(_._2).toSet).toMap
+    val queries = vecs.filter(_._1 % 50 == 0).map(v => (v._1, v._2))
+    val res = VamanaIndex.searchFiltered(VamanaIndex.cachedIndex(spark, dir), multi,
+        queries, 10, 64, VamanaIndex.qParams, Target)
+      .select($"q_id", $"rank", $"neighbor_id").as[(Long, Int, Long)].collect()
+    assert(res.nonEmpty)
+    res.groupBy(_._1).foreach { case (q, rows) =>
+      val ids = rows.map(_._3)
+      assert(ids.distinct.length == ids.length, s"q $q returned an id twice: ${ids.toSeq}")
+      assert(rows.map(_._2).sorted.sameElements(1 to rows.length), s"q $q ranks not 1..n")
+    }
+    res.foreach { case (q, _, nid) =>
+      assert(labelsOf(nid)(Target), s"q $q returned $nid without label $Target")
+    }
   }
 }

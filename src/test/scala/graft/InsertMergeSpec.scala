@@ -140,4 +140,59 @@ class InsertMergeSpec extends AnyFunSuite {
         batch.take(1).toSeq.toDF("vec_id", "embedding"), params)
     }
   }
+
+  test("routing metadata fails loudly: a corrupt metadata.json names the file, no seed fallback") {
+    val p = freshIndex("/tmp/graft_insmerge_meta")
+    val metaFile = java.nio.file.Paths.get(s"$p/metadata.json")
+    val full = java.nio.file.Files.readString(metaFile)
+    def insert(ids: Array[(Long, Array[Float])]): Unit =
+      StreamingIndex.insertMerge(spark, p, ids.toSeq.toDF("vec_id", "embedding"), params)
+    def rewrite(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(full)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      edit(n)
+      java.nio.file.Files.writeString(metaFile, n.toString)
+    }
+    // a truncated file is an I/O fault, never a reason to route by seeds
+    java.nio.file.Files.writeString(metaFile, full.take(full.length / 2))
+    val truncated = intercept[IllegalArgumentException](insert(batch.take(3)))
+    assert(truncated.getMessage.contains(metaFile.toString), truncated.getMessage)
+    // a present but malformed field fails the same way
+    rewrite(_.put("pivots", "not-a-table"))
+    val malformed = intercept[IllegalArgumentException](insert(batch.take(3)))
+    assert(malformed.getMessage.contains(metaFile.toString) &&
+      malformed.getMessage.contains("pivots"), malformed.getMessage)
+    rewrite(_.put("split", "two"))
+    val badSplit = intercept[IllegalArgumentException](insert(batch.take(3)))
+    assert(badSplit.getMessage.contains(metaFile.toString), badSplit.getMessage)
+    // an index saved before pivots existed still ingests by seed routing
+    rewrite(_.remove("pivots"))
+    insert(batch.take(3))
+    val ids = VamanaIndex.load(spark, p).select($"vec_id").as[Long].collect().toSet
+    assert(batch.take(3).forall { case (id, _) => ids(id) }, "old-index insert lost its batch")
+  }
+
+  test("an index without metadata.json still merges and consolidates deletes") {
+    // an ingest-only or foreign directory has no metadata.json; the
+    // delete patch never reads routing, so it runs with split 1 and
+    // save() writes a fresh metadata.json
+    val p = freshIndex("/tmp/graft_insmerge_nometa")
+    val metaFile = java.nio.file.Paths.get(s"$p/metadata.json")
+    def ids = VamanaIndex.load(spark, p).select($"vec_id").as[Long].collect().toSet
+    java.nio.file.Files.delete(metaFile)
+    StreamingIndex.delete(spark, p, Seq(base(0)._1))
+    StreamingIndex.merge(spark, p, params)
+    assert(!ids(base(0)._1), "merge kept a deleted id")
+    assert(java.nio.file.Files.exists(metaFile), "merge did not write metadata.json")
+    java.nio.file.Files.delete(metaFile)
+    StreamingIndex.delete(spark, p, Seq(base(1)._1))
+    StreamingIndex.consolidate(spark, p, Seq.empty[(Long, Array[Float])]
+      .toDF("vec_id", "embedding"), params)
+    assert(!ids(base(1)._1), "consolidate kept a deleted id")
+    // inserts need routing: without metadata.json they fail by name
+    java.nio.file.Files.delete(metaFile)
+    val e = intercept[IllegalArgumentException](StreamingIndex.insertMerge(spark, p,
+      batch.take(1).toSeq.toDF("vec_id", "embedding"), params))
+    assert(e.getMessage.contains("routing metadata"), e.getMessage)
+  }
 }

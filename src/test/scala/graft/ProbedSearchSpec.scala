@@ -216,7 +216,7 @@ class ProbedSearchSpec extends AnyFunSuite {
         shard = i % 2, neighbors = Array((i + 1L) % 16))
     }
     def serve(token: String) =
-      VamanaIndex.residentShards(token, 0, rows.iterator, params)
+      VamanaIndex.shardGraphs(rows.iterator, params, Some(token))(identity)(identity).size
     GraphCache.clear()
     try {
       serve("plain:/specdir:1")
@@ -238,7 +238,7 @@ class ProbedSearchSpec extends AnyFunSuite {
       val hg = new HnswGraph(rows.flatMap(_.embedding), 4, rows.length, hp).build()
       val hnswRows = rows.indices.map(i => HnswRow(rows(i).vec_id, rows(i).embedding,
         0, hg.layers(i).map(_.map(_.toLong))))
-      HnswIndex.residentShards("hnsw:/specdir:1", 0, hnswRows.iterator, hp)
+      HnswIndex.shardGraphs(hnswRows.iterator, hp, Some("hnsw:/specdir:1"))(identity).size
       assert(GraphCache.size == 3 && GraphCache.bytes > b2,
         s"HNSW entry did not count against the shared budget: ${GraphCache.bytes} vs $b2")
     } finally GraphCache.clear()

@@ -35,6 +35,12 @@ class SingleFileIndexSpec extends AnyFunSuite {
     assert(g.dim == 64)
     assert(p2.metric == "cosine" && p2.maxDegree == 16)
     assert(ids.length == g.n && ids.sameElements(ids.sorted))
+    // file row i holds the corpus vector of the i-th smallest id
+    val corpus = vecs.select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toMap
+    (0 until g.n by 17).foreach { i =>
+      assert(java.util.Arrays.copyOfRange(g.vecs, i * g.dim, (i + 1) * g.dim)
+        .sameElements(corpus(ids(i))), s"file row $i is not corpus id ${ids(i)}")
+    }
 
     // search parity: local kernel vs the distributed search on the
     // same index, for a handful of held-in queries
