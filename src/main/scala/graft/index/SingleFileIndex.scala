@@ -6,6 +6,9 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.size
 
@@ -27,6 +30,14 @@ import org.apache.spark.sql.functions.size
   * vice versa; `distance_name` mismatches are warning-only there, as
   * here.
   *
+  * The layout has one writer ([[writeFile]], behind [[export]] and
+  * [[exportSharded]]) and one open ([[IndexFile]], behind
+  * [[MmapIndex]], [[importLocal]] and [[importLocalU8]]). The open
+  * checks every header field against its use and against the file
+  * length ([[readMeta]]) before it maps anything. The writer stages
+  * the file under an attempt-unique temp name and renames it into
+  * place, so a crash leaves the old index or none, never a torn one.
+  *
   * graft ids may be sparse; the reference layout has no id region, so
   * non-dense ids go to a `<path>.ids` sidecar (u64 LE per row) that a
   * reference reader never touches. Dense 0..n-1 ids write no sidecar
@@ -41,49 +52,6 @@ import org.apache.spark.sql.functions.size
 object SingleFileIndex {
 
   private val Pad: Int = -1 // 0xFFFFFFFF as u32 (reference PAD_U32, lib.rs:51)
-
-  /** Decode adjacency row `row` — `maxDegree` u32 LE ids starting at
-    * byte `off` of `bb`, 0xFFFFFFFF padding skipped — into `out` and
-    * return the neighbor count; ids past `out.length` are counted but
-    * not written (the [[BestFirst.Adjacency]] contract). The ONE
-    * decoder behind [[importLocal]], [[importLocalU8]] and
-    * [[MmapIndex]]: any other id outside [0, n) is rejected here,
-    * naming the file, row and slot, because the search's epoch marks
-    * index by neighbor id. */
-  private[index] def decodeRow(bb: ByteBuffer, off: Int, maxDegree: Int, n: Int,
-      path: String, row: Int, out: Array[Int]): Int = {
-    var cnt = 0
-    var t = 0
-    while (t < maxDegree) {
-      val nb = bb.getInt(off + 4 * t)
-      if (nb != Pad) {
-        if (nb < 0 || nb >= n)
-          throw new IllegalArgumentException(
-            s"corrupt adjacency in $path: row $row slot $t holds neighbor id " +
-              s"${Integer.toUnsignedString(nb)}, outside [0, $n)")
-        if (cnt < out.length) out(cnt) = nb
-        cnt += 1
-      }
-      t += 1
-    }
-    cnt
-  }
-
-  /** Read the whole adjacency region of a file into heap lists. */
-  private def readAdjacency(raf: RandomAccessFile, meta: FileMeta, path: String,
-      graph: Array[Array[Int]]): Unit = {
-    raf.seek(meta.adjacencyOffset)
-    val adjBytes = new Array[Byte](4 * meta.maxDegree)
-    val bb = ByteBuffer.wrap(adjBytes).order(ByteOrder.LITTLE_ENDIAN)
-    val row = new Array[Int](meta.maxDegree)
-    var i = 0
-    while (i < meta.numVectors) {
-      raf.readFully(adjBytes)
-      val cnt = decodeRow(bb, 0, meta.maxDegree, meta.numVectors, path, i, row)
-      graph(i) = java.util.Arrays.copyOf(row, cnt)
-      i += 1
-    }
-  }
 
   /** Fixed gap before the vectors region (reference lib.rs:558). */
   val VectorsOffset: Long = 1L << 20
@@ -107,7 +75,8 @@ object SingleFileIndex {
     "hellinger" -> "anndists::dist::distances::DistHellinger",
     "js" -> "anndists::dist::distances::DistJensenShannon")
 
-  private[graft] def nameToMetric(name: String): String =
+  private[graft] def nameToMetric(name: String,
+      where: String = "single-file metadata"): String =
     MetricToName.collectFirst { case (m, n) if n == name => m }
       // Linf before L1 before L2: longest-substring first so DistLinf
       // can never be claimed by a shorter Dist* pattern
@@ -116,12 +85,12 @@ object SingleFileIndex {
         .collectFirst { case s if name.contains("Dist" + s) =>
           if (s == "JensenShannon") "js" else s.toLowerCase })
       .getOrElse(throw new IllegalArgumentException(
-        s"unrecognized distance_name '$name' in single-file metadata — " +
+        s"unrecognized distance_name '$name' in $where — " +
           "refusing to silently serve with l2"))
 
   private def serializeMeta(m: FileMeta): Array[Byte] = {
     val name = m.distanceName.getBytes(StandardCharsets.UTF_8)
-    val bb = ByteBuffer.allocate(8 * 3 + 4 + 8 * 2 + 1 + 8 + name.length)
+    val bb = ByteBuffer.allocate(FixedMetaBytes + name.length)
       .order(ByteOrder.LITTLE_ENDIAN)
     bb.putLong(m.dim.toLong).putLong(m.numVectors.toLong).putLong(m.maxDegree.toLong)
     bb.putInt(m.medoidId)
@@ -132,29 +101,71 @@ object SingleFileIndex {
     bb.array()
   }
 
-  private def parseMeta(bytes: Array[Byte]): FileMeta = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val dim = bb.getLong.toInt
-    val n = bb.getLong.toInt
-    val maxDeg = bb.getLong.toInt
-    val medoid = bb.getInt
-    val vOff = bb.getLong
-    val aOff = bb.getLong
-    val elem = bb.get() & 0xff
-    val nameLen = bb.getLong.toInt
-    val nameBytes = new Array[Byte](nameLen); bb.get(nameBytes)
-    FileMeta(dim, n, maxDeg, medoid, vOff, aOff, elem,
-      new String(nameBytes, StandardCharsets.UTF_8))
-  }
+  /** Bincode bytes before the name: dim, num_vectors, max_degree
+    * (u64), medoid_id (u32), the two offsets (u64), elem_size (u8)
+    * and the name length (u64). */
+  private val FixedMetaBytes = 8 * 3 + 4 + 8 * 2 + 1 + 8
 
-  /** Read just the metadata header of an index file. */
+  /** Read and check the header of an index file: the one parse of the
+    * layout's metadata. Every u64 field must fit its use, `dim`,
+    * `num_vectors` and `max_degree` must be at least 1, `elem_size`
+    * 1, 4 or 8, and the metadata block, the vectors region and the
+    * adjacency region must lie inside the file without overlapping. A
+    * failure is an IllegalArgumentException naming the file and the
+    * field; nothing is mapped or allocated from an unchecked value. */
   def readMeta(path: String): FileMeta = {
+    def bad(field: String, why: String): Nothing =
+      throw new IllegalArgumentException(s"corrupt single-file index $path: $field $why")
+    def u64(v: Long) = java.lang.Long.toUnsignedString(v)
     val raf = new RandomAccessFile(path, "r")
     try {
-      val lenBytes = new Array[Byte](8); raf.readFully(lenBytes)
-      val mdLen = ByteBuffer.wrap(lenBytes).order(ByteOrder.LITTLE_ENDIAN).getLong.toInt
-      val md = new Array[Byte](mdLen); raf.readFully(md)
-      parseMeta(md)
+      val len = raf.length()
+      if (len < 8 + FixedMetaBytes)
+        bad("header", s"is truncated: the file holds $len bytes, the fixed fields ${8 + FixedMetaBytes}")
+      val head = new Array[Byte](8 + FixedMetaBytes)
+      raf.readFully(head)
+      val bb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
+      val mdLen = bb.getLong
+      if (mdLen < FixedMetaBytes || mdLen > len - 8)
+        bad("metadata_len", s"${u64(mdLen)} is outside [$FixedMetaBytes, ${len - 8}]")
+      def count(field: String, v: Long): Int = {
+        if (v < 1 || v > Int.MaxValue) bad(field, s"${u64(v)} is outside [1, ${Int.MaxValue}]")
+        v.toInt
+      }
+      val dim = count("dim", bb.getLong)
+      val n = count("num_vectors", bb.getLong)
+      val maxDeg = count("max_degree", bb.getLong)
+      val medoid = bb.getInt
+      val vOff = bb.getLong
+      val aOff = bb.getLong
+      val elem = bb.get() & 0xff
+      val nameLen = bb.getLong
+      if (elem != 1 && elem != 4 && elem != 8) bad("elem_size", s"$elem is not 1, 4 or 8")
+      // a row is read through an int-indexed buffer, and a packed row
+      // decodes to 64 slots per word
+      if (dim.toLong * elem > Int.MaxValue || (elem == 8 && dim.toLong * 64 > Int.MaxValue))
+        bad("dim", s"$dim × elem_size $elem does not fit one mapped row")
+      if (4L * maxDeg > Int.MaxValue) bad("max_degree", s"$maxDeg does not fit one mapped row")
+      if (nameLen < 0 || nameLen > mdLen - FixedMetaBytes || nameLen > VectorsOffset)
+        bad("distance_name", s"length ${u64(nameLen)} overruns the $mdLen-byte metadata block " +
+          "or the 1 MiB gap")
+      if (vOff < 0 || 8 + mdLen > vOff)
+        bad("metadata_len", s"$mdLen overruns vectors_offset ${u64(vOff)}")
+      // both products < 2^62: n, dim·elem and 4·max_degree are ints
+      val vBytes = n.toLong * dim * elem
+      val aBytes = 4L * n * maxDeg
+      if (vOff > len || vBytes > len - vOff)
+        bad("vectors_offset", s"${u64(vOff)} + num_vectors·dim·elem_size ($vBytes bytes) " +
+          s"runs past the file's $len bytes")
+      if (aOff < 8 + mdLen || aOff > len || aBytes > len - aOff)
+        bad("adjacency_offset", s"${u64(aOff)} + num_vectors·max_degree·4 ($aBytes bytes) " +
+          s"lies outside [${8 + mdLen}, $len]")
+      if (aOff < vOff + vBytes && vOff < aOff + aBytes)
+        bad("adjacency_offset", s"$aOff overlaps the vectors region [$vOff, ${vOff + vBytes})")
+      val name = new Array[Byte](nameLen.toInt)
+      raf.readFully(name)
+      FileMeta(dim, n, maxDeg, medoid, vOff, aOff, elem,
+        new String(name, StandardCharsets.UTF_8))
     } finally raf.close()
   }
 
@@ -174,7 +185,8 @@ object SingleFileIndex {
     * sample is a probabilistic guard; identical n AND bit-identical
     * first/last 4 KiB with different ids is not a real failure mode
     * for exported graphs.) */
-  private def pairingHash(mainPath: String, n: Int, idBytes: Array[Byte]): Long = {
+  private def pairingHash(mainPath: String, vectorsOffset: Long, n: Int,
+      idBytes: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
     def mix(b: Byte): Unit = { h ^= (b & 0xffL); h *= 0x100000001b3L }
     var nv = n.toLong
@@ -182,64 +194,279 @@ object SingleFileIndex {
     while (k < 8) { mix((nv & 0xff).toByte); nv >>>= 8; k += 1 }
     var i = 0
     while (i < 8 * n) { mix(idBytes(i)); i += 1 }
-    val meta = readMeta(mainPath)
     val raf = new RandomAccessFile(mainPath, "r")
     try {
       val len = raf.length()
       val s1 = new Array[Byte](
-        math.min(4096L, math.max(0L, len - meta.vectorsOffset)).toInt)
-      raf.seek(meta.vectorsOffset); raf.readFully(s1); s1.foreach(mix)
-      val start2 = math.max(meta.vectorsOffset, len - 4096)
+        math.min(4096L, math.max(0L, len - vectorsOffset)).toInt)
+      raf.seek(vectorsOffset); raf.readFully(s1); s1.foreach(mix)
+      val start2 = math.max(vectorsOffset, len - 4096)
       val s2 = new Array[Byte]((len - start2).toInt)
       raf.seek(start2); raf.readFully(s2); s2.foreach(mix)
     } finally raf.close()
     h
   }
 
-  /** Serialize ids + the v2 pairing trailer for the main file at
-    * `mainPath` (which must already hold its final bytes — staged tmp
-    * or installed, both work: the hash samples content, not name). */
-  private def sidecarBytes(mainPath: String, ids: Array[Long]): Array[Byte] = {
-    val n = ids.length
-    val bb = ByteBuffer.allocate(8 * n + 16).order(ByteOrder.LITTLE_ENDIAN)
-    ids.foreach(bb.putLong)
-    bb.putLong(IdsMagic)
-    bb.putLong(pairingHash(mainPath, n, bb.array()))
-    bb.array()
-  }
-
-  private[index] def loadIds(path: String, n: Int): Array[Long] = {
-    val p = Paths.get(sidecarPath(path))
+  /** The sidecar ids of a checked file, or the dense 0..n-1. A sidecar
+    * that does not cover exactly this file's rows, or whose v2 trailer
+    * does not pair with this file, is a torn install and fails naming
+    * both files. */
+  private def loadIds(path: String, meta: FileMeta): Array[Long] = {
+    val n = meta.numVectors
+    val sc = sidecarPath(path)
+    val p = Paths.get(sc)
     if (!Files.exists(p)) Array.tabulate(n)(_.toLong)
     else {
+      def torn(count: Long) =
+        s"id sidecar $sc holds $count ids but num_vectors of $path is $n — " +
+          "torn sidecar install; re-export the index (or delete the sidecar if ids are dense)"
+      // sized before it is read: only 8·n (v1) or 8·n + 16 (v2) can pair
+      val size = Files.size(p)
+      require(size == 8L * n || size == 8L * n + 16, torn(size / 8))
       val bytes = Files.readAllBytes(p)
       // v2 detection keys on the trailing magic, NEVER on the expected
       // row count: a stale v2 sidecar whose length happens to equal
       // 8·(n+2) would otherwise alias as a bare v1 file and serve its
       // magic+hash words as the last two vec_ids
-      val isV2 = bytes.length >= 16 && bytes.length % 8 == 0 &&
+      val isV2 = bytes.length >= 16 &&
         ByteBuffer.wrap(bytes, bytes.length - 16, 8)
           .order(ByteOrder.LITTLE_ENDIAN).getLong == IdsMagic
       val idCount = if (isV2) (bytes.length - 16) / 8 else bytes.length / 8
-      // a sidecar that doesn't cover exactly this file's rows is a
-      // torn install (crash between the main rename and the sidecar
-      // rename) — fail loudly; silently falling back to identity ids
-      // would serve wrong vec_ids with no error. Bare 8·n sidecars
-      // (v1 / foreign) stay readable but get only the length check.
-      require(idCount == n && (isV2 || bytes.length == 8L * n),
-        s"id sidecar ${sidecarPath(path)} holds $idCount ids " +
-          s"but the index file has $n rows — torn sidecar install; " +
-          "re-export the index (or delete the sidecar if ids are dense)")
+      // bare 8·n sidecars (v1 / foreign) stay readable but get only
+      // the length check
+      require(idCount == n, torn(idCount))
       if (isV2) {
         val stored = ByteBuffer.wrap(bytes, 8 * n + 8, 8)
           .order(ByteOrder.LITTLE_ENDIAN).getLong
-        require(stored == pairingHash(path, n, bytes),
-          s"id sidecar ${sidecarPath(path)} does not pair with $path " +
+        require(stored == pairingHash(path, meta.vectorsOffset, n, bytes),
+          s"id sidecar $sc does not pair with $path " +
             "(same row count, different content) — torn sidecar " +
             "install; re-export the index")
       }
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       Array.fill(n)(bb.getLong)
+    }
+  }
+
+  /** Row-aligned segment chain over one region of a file: segment s
+    * holds rows [s·rowsPerSeg, …), so `(bufOf(i), offOf(i))` addresses
+    * row i without any read crossing a segment boundary. A Java
+    * `MappedByteBuffer` is int-indexed, so files beyond 2 GiB map as a
+    * chain. */
+  private[index] final class SegMap(ch: FileChannel, base: Long, val rowBytes: Int,
+      rows: Int, maxSegBytes: Long) {
+    val rowsPerSeg: Int = math.max(1, math.min(rows.toLong.max(1L),
+      maxSegBytes / rowBytes).toInt)
+    val segs: Array[MappedByteBuffer] =
+      Array.tabulate(math.max(1, (rows + rowsPerSeg - 1) / rowsPerSeg)) { s =>
+        val startRow = s.toLong * rowsPerSeg
+        val segRows = math.min(rowsPerSeg.toLong, rows - startRow).max(0L)
+        val m = ch.map(FileChannel.MapMode.READ_ONLY,
+          base + startRow * rowBytes, segRows * rowBytes)
+        m.order(ByteOrder.LITTLE_ENDIAN); m
+      }
+    @inline def bufOf(i: Int): MappedByteBuffer = segs(i / rowsPerSeg)
+    @inline def offOf(i: Int): Int = (i % rowsPerSeg) * rowBytes
+  }
+
+  /** Largest Java array the heap importers allocate. */
+  private val MaxArrayCells = Int.MaxValue - 8
+
+  /** The one open of the layout: the checked header ([[readMeta]]),
+    * the id sidecar, and the vector and adjacency regions mapped
+    * row-aligned, with the one decoder of each. [[MmapIndex]] serves
+    * from it; [[importLocal]] and [[importLocalU8]] copy what it
+    * decodes to the heap. A mapping outlives the channel that made it
+    * (`FileChannel.map`), so the open closes its channel once both
+    * regions are mapped and holds no file descriptor. */
+  private[index] final class IndexFile(val path: String,
+      maxSegBytes: Long = Int.MaxValue.toLong) {
+    val meta: FileMeta = readMeta(path)
+    val storedMetric: String = nameToMetric(meta.distanceName, path)
+    /** packed u64 hamming file (reference DiskANN<u64, DistHamming>):
+      * the file dim counts words, rows decode bit-per-slot. */
+    val packed: Boolean = meta.elemSize == 8
+    require(!packed || storedMetric == "hamming",
+      s"graft serves f32, u8, or packed-u64 hamming indexes; $path has " +
+        s"elem_size 8 with distance_name ${meta.distanceName}")
+    /** u8 file (reference generic T = u8, examples/bigann.rs). */
+    val u8: Boolean = meta.elemSize == 1
+    val n: Int = meta.numVectors
+    /** Slots per decoded row. */
+    val dim: Int = if (packed) meta.dim * 64 else meta.dim
+    val ids: Array[Long] = loadIds(path, meta)
+    /** The stored entry row, or -1 for the reference's 0xFFFFFFFF
+      * no-medoid sentinel or an out-of-range id. */
+    val medoid: Int = if (meta.medoidId >= 0 && meta.medoidId < n) meta.medoidId else -1
+
+    val (vecMap, adjMap) = {
+      val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+      try (new SegMap(ch, meta.vectorsOffset, meta.dim * meta.elemSize, n, maxSegBytes),
+        new SegMap(ch, meta.adjacencyOffset, 4 * meta.maxDegree, n, maxSegBytes))
+      finally ch.close()
+    }
+
+    /** The one adjacency decoder: row `row`'s u32 LE ids, 0xFFFFFFFF
+      * padding skipped, into `out` (the [[BestFirst.Adjacency]]
+      * contract: ids past `out.length` are counted but not written).
+      * Any other id outside [0, n) is rejected, naming the file, row
+      * and slot, because the search's epoch marks index by neighbor
+      * id. */
+    val adjacency: BestFirst.Adjacency = (row, out) => {
+      val bb = adjMap.bufOf(row); val off = adjMap.offOf(row)
+      var cnt = 0
+      var t = 0
+      while (t < meta.maxDegree) {
+        val nb = bb.getInt(off + 4 * t)
+        if (nb != Pad) {
+          if (nb < 0 || nb >= n)
+            throw new IllegalArgumentException(
+              s"corrupt adjacency in $path: row $row slot $t holds neighbor id " +
+                s"${Integer.toUnsignedString(nb)}, outside num_vectors [0, $n)")
+          if (cnt < out.length) out(cnt) = nb
+          cnt += 1
+        }
+        t += 1
+      }
+      cnt
+    }
+
+    /** Decode row `i` into `out(off ..< off + dim)`: f32 as stored, u8
+      * widened (exact in f32), packed words bit-per-slot. */
+    def decodeInto(i: Int, out: Array[Float], off: Int): Unit = {
+      val b = vecMap.bufOf(i); val o = vecMap.offOf(i)
+      if (packed) {
+        var w = 0
+        while (w < meta.dim) {
+          val word = b.getLong(o + 8 * w)
+          var k = 0
+          while (k < 64) { out(off + w * 64 + k) = if (((word >>> k) & 1L) != 0) 1f else 0f; k += 1 }
+          w += 1
+        }
+      } else if (u8) {
+        var d = 0
+        while (d < dim) { out(off + d) = (b.get(o + d) & 0xff).toFloat; d += 1 }
+      } else {
+        var d = 0
+        while (d < dim) { out(off + d) = b.getFloat(o + 4 * d); d += 1 }
+      }
+    }
+
+    /** Every row decoded into one row-major heap array. */
+    def rows(): Array[Float] = {
+      val out = new Array[Float](heapCells())
+      var i = 0
+      while (i < n) { decodeInto(i, out, i * dim); i += 1 }
+      out
+    }
+
+    /** The u8 rows copied to the heap as stored. */
+    def bytes(): Array[Byte] = {
+      val out = new Array[Byte](heapCells())
+      var i = 0
+      while (i < n) { vecMap.bufOf(i).get(vecMap.offOf(i), out, i * dim, dim); i += 1 }
+      out
+    }
+
+    /** Every adjacency row as a heap list, into `graph`. */
+    def readLists(graph: Array[Array[Int]]): Unit = {
+      val row = new Array[Int](meta.maxDegree)
+      var i = 0
+      while (i < n) { graph(i) = java.util.Arrays.copyOf(row, adjacency.fill(i, row)); i += 1 }
+    }
+
+    private def heapCells(): Int = {
+      val cells = n.toLong * dim
+      require(cells <= MaxArrayCells,
+        s"$path holds num_vectors $n × $dim slots, more than one Java array; " +
+          "serve it disk-resident with MmapIndex")
+      cells.toInt
+    }
+  }
+
+  /** The one writer of the layout. `vectors` puts the `ids.length`
+    * rows of `dim`·`elemSize` bytes into the staging buffer that
+    * `room(k)` returns with `k` bytes free, and returns the entry row
+    * (medoid_id); `adjacency`, evaluated after it, yields each row's
+    * neighbors as rows, of which the first `maxDegree` are written and
+    * the rest of the row padded with 0xFFFFFFFF. The header goes last
+    * (the reference writes it last too, lib.rs:609-613).
+    *
+    * Task side effects must survive retry and speculation: a second
+    * attempt truncating the SAME visible file while a zombie attempt
+    * still runs would let a reader map a half-written index. So each
+    * attempt writes an attempt-unique temp file and renames it over
+    * the target; attempts are deterministic (identical bytes), so
+    * last-rename-wins is safe, and a failed attempt removes its temp
+    * file. */
+  private def writeFile(path: String, ids: Array[Long], dim: Int, elemSize: Int,
+      maxDegree: Int, metric: String)(
+      vectors: (Int => ByteBuffer) => Int, adjacency: => Iterator[Array[Int]]): Unit = {
+    val n = ids.length
+    val adjacencyOffset = VectorsOffset + elemSize.toLong * n * dim
+    val attempt = Option(org.apache.spark.TaskContext.get())
+      .map(_.taskAttemptId().toString)
+      .getOrElse(java.util.UUID.randomUUID().toString.take(8))
+    val tmp = Paths.get(s"$path.tmp-$attempt")
+    val tmpIds = Paths.get(sidecarPath(tmp.toString))
+    try {
+      val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
+        StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
+      try {
+        val buf = ByteBuffer.allocate(math.max(1 << 20, math.max(elemSize * dim, 4 * maxDegree)))
+          .order(ByteOrder.LITTLE_ENDIAN)
+        def flush(): Unit = { buf.flip(); while (buf.hasRemaining) ch.write(buf); buf.clear() }
+        def room(k: Int): ByteBuffer = { if (buf.remaining < k) flush(); buf }
+        ch.position(VectorsOffset)
+        val medoid = vectors(room)
+        adjacency.foreach { nbrs =>
+          val bb = room(4 * maxDegree)
+          val w = math.min(nbrs.length, maxDegree)
+          var t = 0
+          while (t < w) { bb.putInt(nbrs(t)); t += 1 }
+          while (t < maxDegree) { bb.putInt(Pad); t += 1 }
+        }
+        flush()
+        val md = serializeMeta(FileMeta(dim, n, maxDegree, medoid, VectorsOffset,
+          adjacencyOffset, elemSize, MetricToName.getOrElse(metric, metric)))
+        require(8 + md.length <= VectorsOffset, "metadata exceeds the 1 MiB gap")
+        // the file ends at the adjacency end; the gap before the vectors
+        // reads as zeros
+        ch.position(0)
+        room(8 + md.length).putLong(md.length.toLong).put(md)
+        flush()
+      } finally ch.close()
+      // Swap order chosen so EVERY crash-between-steps state is loudly
+      // rejected by loadIds (the v2 pairing trailer binds a sidecar to
+      // its main file's content):
+      //  - sparse new ids: SIDECAR FIRST, then main. Crash between →
+      //    old main + new sidecar → pairing hash (computed against the
+      //    staged new main) fails against the old content. The reverse
+      //    order had a silent hole when the OLD index was dense: new
+      //    main + no sidecar reads as identity ids with no error.
+      //  - dense new ids: MAIN FIRST, then delete the old sidecar.
+      //    Crash between → new main + old v2 sidecar → count/pairing
+      //    mismatch. (Delete-first would leave old main + no sidecar =
+      //    silent identity ids.)
+      // Residual: a pre-trailer v1 sidecar paired with a same-row-count
+      // new main passes the length check — re-export once to upgrade.
+      if (ids.indices.forall(i => ids(i) == i)) {
+        atomicMove(tmp, Paths.get(path))
+        Files.deleteIfExists(Paths.get(sidecarPath(path)))
+      } else {
+        // trailer hashed against the STAGED main (same bytes the
+        // rename installs), so the pair is bound before either rename
+        val bb = ByteBuffer.allocate(8 * n + 16).order(ByteOrder.LITTLE_ENDIAN)
+        ids.foreach(bb.putLong)
+        bb.putLong(IdsMagic)
+        bb.putLong(pairingHash(tmp.toString, VectorsOffset, n, bb.array()))
+        Files.write(tmpIds, bb.array())
+        atomicMove(tmpIds, Paths.get(sidecarPath(path)))
+        atomicMove(tmp, Paths.get(path))
+      }
+    } catch { case e: Throwable =>
+      Files.deleteIfExists(tmp); Files.deleteIfExists(tmpIds)
+      throw e
     }
   }
 
@@ -254,7 +481,8 @@ object SingleFileIndex {
   /** Export a (typically compacted single-shard) index into the
     * reference's single-file layout. Streams through
     * `toLocalIterator` — single-file = single-node by definition; the
-    * distributed format remains the shard-partitioned parquet. */
+    * distributed format remains the shard-partitioned parquet. The
+    * file is staged and renamed into place ([[writeFile]]). */
   def export(index: Dataset[IndexRow], params: VamanaParams, path: String,
       maxRows: Long = MaxExportRows, u8: Boolean = false): Unit = {
     val spark = index.sparkSession
@@ -313,23 +541,14 @@ object SingleFileIndex {
     }
     val pivotNorms = if (isCos) pivotVecs.map(normFloor) else null
 
-    val adjacencyOffset = VectorsOffset + elemSize.toLong * n * fileDim
-    val raf = new RandomAccessFile(path, "rw")
-    try {
-      raf.setLength(0)
-      val ch = raf.getChannel
-      val stage = ByteBuffer.allocate(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
-      def flush(): Unit = { stage.flip(); while (stage.hasRemaining) ch.write(stage); stage.clear() }
-      def ensure(k: Int): Unit = if (stage.remaining < k) flush()
-
-      // vectors region (and the medoid argmin in the same pass)
-      ch.position(VectorsOffset)
+    writeFile(path, ids, fileDim, elemSize, maxDeg, params.metric)(room => {
+      // vectors region, and the medoid argmin in the same pass
       var best = 0; var bestScore = Double.MaxValue
       var pos = 0
       sorted.select($"vec_id", $"embedding").as[(Long, Array[Float])]
         .toLocalIterator().forEachRemaining { case (_, v) =>
           if (packed) {
-            ensure(8 * words)
+            val bb = room(8 * words)
             var w = 0
             while (w < words) {
               var word = 0L
@@ -341,22 +560,22 @@ object SingleFileIndex {
                 if (slot != 0f) word |= (1L << b)
                 b += 1
               }
-              stage.putLong(word)
+              bb.putLong(word)
               w += 1
             }
           } else if (u8) {
-            ensure(dim)
+            val bb = room(dim)
             var d = 0
             while (d < dim) {
               val slot = v(d)
               require(slot >= 0f && slot <= 255f && slot == math.rint(slot).toFloat,
                 s"u8 export expects integral slots in [0,255], got $slot")
-              stage.put(slot.toInt.toByte)
+              bb.put(slot.toInt.toByte)
               d += 1
             }
           } else {
-            ensure(4 * dim)
-            v.foreach(stage.putFloat)
+            val bb = room(4 * dim)
+            v.foreach(bb.putFloat)
           }
           var s = 0.0
           if (isCos) {
@@ -378,53 +597,14 @@ object SingleFileIndex {
           if (s < bestScore) { bestScore = s; best = pos }
           pos += 1
         }
-      flush()
-
-      // adjacency region (fixed-degree, padded, row positions)
-      sorted.select($"vec_id", $"neighbors").as[(Long, Array[Long])]
-        .toLocalIterator().forEachRemaining { case (_, nbrs) =>
-          ensure(4 * maxDeg)
-          var written = 0
-          var i = 0
-          while (i < nbrs.length) {
-            // neighbors outside the exported row set (a filtered subset
-            // export) become padding instead of an NPE mid-file
-            val p = idToPos.get(nbrs(i))
-            if (p != null && written < maxDeg) { stage.putInt(p.intValue()); written += 1 }
-            i += 1
-          }
-          while (written < maxDeg) { stage.putInt(Pad); written += 1 }
-        }
-      flush()
-      val endOfData = ch.position()
-
-      // header (reference writes it last too, lib.rs:609-613)
-      val meta = FileMeta(fileDim, n, maxDeg, best, VectorsOffset, adjacencyOffset, elemSize,
-        MetricToName.getOrElse(params.metric, params.metric))
-      val md = serializeMeta(meta)
-      require(8 + md.length <= VectorsOffset, "metadata exceeds the 1 MiB gap")
-      ch.position(0)
-      val head = ByteBuffer.allocate(8 + md.length).order(ByteOrder.LITTLE_ENDIAN)
-      head.putLong(md.length.toLong).put(md).flip()
-      while (head.hasRemaining) ch.write(head)
-      raf.setLength(endOfData) // file ends exactly at the adjacency end
-    } finally raf.close()
-
-    // id sidecar only when ids are sparse — staged + atomic rename so
-    // a crash mid-write can never leave a truncated sidecar next to a
-    // complete index file; the v2 pairing trailer binds it to THIS
-    // main file's content (loadIds hard-errors on either mismatch).
-    // NOTE: export writes the MAIN file in place and is therefore not
-    // a crash-atomic replace of a live index — that contract belongs
-    // to writeShardFile/exportSharded (staged main + ordered renames);
-    // export targets fresh paths.
-    val dense = ids.zipWithIndex.forall { case (id, p) => id == p.toLong }
-    if (dense) Files.deleteIfExists(Paths.get(sidecarPath(path)))
-    else {
-      val st = Paths.get(sidecarPath(path) + ".tmp")
-      Files.write(st, sidecarBytes(path, ids))
-      atomicMove(st, Paths.get(sidecarPath(path)))
-    }
+      best
+    },
+    // neighbors outside the exported row set (a filtered subset
+    // export) become padding
+    sorted.select($"vec_id", $"neighbors").as[(Long, Array[Long])]
+      .toLocalIterator().asScala.map { case (_, nbrs) =>
+        nbrs.flatMap(id => Option(idToPos.get(id)).map(_.intValue))
+      })
   }
 
   /** Distributed serving straight off a reference-layout single file:
@@ -477,87 +657,18 @@ object SingleFileIndex {
   private def writeShardFile(
       group: Array[IndexRow], params: VamanaParams, path: String): Unit = {
     val (g, sorted) = VamanaIndex.rebuildShardGraph(group, params)(identity)
-    val n = sorted.length
-    require(n > 0, "cannot write an empty shard file")
     val dim = g.dim
     val maxDeg = math.max(params.maxDegree, g.graph.map(_.length).max)
-    val adjacencyOffset = VectorsOffset + 4L * n * dim
-    // Task side effects must survive retry/speculation: a second
-    // attempt truncating the SAME visible file while a zombie attempt
-    // still runs would let a later reader mmap a half-written index.
-    // So each attempt writes to an attempt-unique temp name and
-    // atomically renames over the target — attempts are deterministic
-    // (identical bytes), so last-rename-wins is safe. A killed
-    // attempt can orphan its .tmp-*, which is litter, never served.
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId().toString)
-      .getOrElse(java.util.UUID.randomUUID().toString.take(8))
-    val tmpPath = s"$path.tmp-$attempt"
-    val raf = new RandomAccessFile(tmpPath, "rw")
-    try {
-      raf.setLength(0)
-      val ch = raf.getChannel
-      val stage = ByteBuffer.allocate(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
-      def flush(): Unit = { stage.flip(); while (stage.hasRemaining) ch.write(stage); stage.clear() }
-      def ensure(k: Int): Unit = if (stage.remaining < k) flush()
-      ch.position(VectorsOffset)
+    writeFile(path, sorted.map(_.vec_id), dim, 4, maxDeg, params.metric)(room => {
       var i = 0
-      while (i < n) {
-        ensure(4 * dim)
+      while (i < sorted.length) {
+        val bb = room(4 * dim)
         var d = 0
-        while (d < dim) { stage.putFloat(g.vecs(i * dim + d)); d += 1 }
+        while (d < dim) { bb.putFloat(g.vecs(i * dim + d)); d += 1 }
         i += 1
       }
-      flush()
-      i = 0
-      while (i < n) {
-        ensure(4 * maxDeg)
-        val nbrs = g.graph(i)
-        var written = 0
-        var t = 0
-        while (t < nbrs.length && written < maxDeg) {
-          stage.putInt(nbrs(t)); written += 1; t += 1
-        }
-        while (written < maxDeg) { stage.putInt(Pad); written += 1 }
-        i += 1
-      }
-      flush()
-      val endOfData = ch.position()
-      val meta = FileMeta(dim, n, maxDeg, g.medoid, VectorsOffset, adjacencyOffset, 4,
-        MetricToName.getOrElse(params.metric, params.metric))
-      val md = serializeMeta(meta)
-      ch.position(0)
-      val head = ByteBuffer.allocate(8 + md.length).order(ByteOrder.LITTLE_ENDIAN)
-      head.putLong(md.length.toLong).put(md).flip()
-      while (head.hasRemaining) ch.write(head)
-      raf.setLength(endOfData)
-    } finally raf.close()
-    // Swap order chosen so EVERY crash-between-steps state is loudly
-    // rejected by loadIds (the v2 pairing trailer binds a sidecar to
-    // its main file's content):
-    //  - sparse new ids: SIDECAR FIRST, then main. Crash between →
-    //    old main + new sidecar → pairing hash (computed against the
-    //    staged new main) fails against the old content. The reverse
-    //    order had a silent hole when the OLD index was dense: new
-    //    main + no sidecar reads as identity ids with no error.
-    //  - dense new ids: MAIN FIRST, then delete the old sidecar.
-    //    Crash between → new main + old v2 sidecar → count/pairing
-    //    mismatch. (Delete-first would leave old main + no sidecar =
-    //    silent identity ids.)
-    // Residual: a pre-trailer v1 sidecar paired with a same-row-count
-    // new main passes the length check — re-export once to upgrade.
-    val dense = sorted.zipWithIndex.forall { case (r, p) => r.vec_id == p.toLong }
-    if (dense) {
-      atomicMove(Paths.get(tmpPath), Paths.get(path))
-      Files.deleteIfExists(Paths.get(sidecarPath(path)))
-    } else {
-      // trailer hashed against the STAGED main (same bytes the
-      // rename installs), so the pair is bound before either rename
-      val st = Paths.get(sidecarPath(tmpPath))
-      Files.write(st, sidecarBytes(tmpPath, sorted.map(_.vec_id)))
-      atomicMove(st, Paths.get(sidecarPath(path)))
-      atomicMove(Paths.get(tmpPath), Paths.get(path))
-    }
+      g.medoid
+    }, g.graph.iterator)
   }
 
   private def atomicMove(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
@@ -627,34 +738,44 @@ object SingleFileIndex {
         s""""shards":$shardsJson}""")
   }
 
-  /** Parse the sharded-tier manifest: (shard, file, routing seed).
-    * Driver-side ([[graft.index.MetaJson]]) — a pivot-bearing
-    * manifest is ~1.4 MB of float text and must never ride a Spark
-    * task. */
-  def readManifest(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, String, Array[Float])] = {
-    val meta = MetaJson.parse(Files.readString(Paths.get(s"$dir/manifest.json")))
-    MetaJson.elems(MetaJson.required(meta, "shards", s"$dir/manifest.json"))
-      .map { sh =>
-        (sh.get("shard").asInt(), sh.get("file").asText(),
-          MetaJson.floats(sh.get("seed")))
-      }.toArray.sortBy(_._1)
-  }
-
-  /** Manifest with routing pivots: (shard, file, pivot set). Manifests
-    * written before the pivots field fall back to seed-as-sole-pivot,
-    * so old exports keep serving (with seed routing). */
-  def readManifestPivots(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, String, Array[Array[Float]])] = {
-    val raw = Files.readString(Paths.get(s"$dir/manifest.json"))
-    if (!raw.contains("\"pivots\""))
-      return readManifest(spark, dir).map { case (sh, f, seed) => (sh, f, Array(seed)) }
-    val meta = MetaJson.parse(raw)
-    MetaJson.elems(meta.get("shards")).map { sh =>
-      (sh.get("shard").asInt(), sh.get("file").asText(),
-        MetaJson.floatMatrix(sh.get("pivots")))
+  /** The sharded tier's manifest, parsed once: (shard, file, entry)
+    * sorted by shard. `shards`, `shard` and `file` are required, and
+    * `file` must name a file inside `dir`. Driver-side
+    * ([[graft.index.MetaJson]]) — a pivot-bearing manifest is ~1.4 MB
+    * of float text and must never ride a Spark task. */
+  private def manifestShards(dir: String): Array[(Int, String, JsonNode)] = {
+    val where = s"$dir/manifest.json"
+    val meta =
+      try MetaJson.parse(Files.readString(Paths.get(where)))
+      catch { case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"cannot read manifest $where: $e", e)
+      }
+    require(meta != null && meta.isObject, s"manifest $where is not a JSON object")
+    MetaJson.elems(MetaJson.required(meta, "shards", where)).map { sh =>
+      val file = MetaJson.required(sh, "file", where).asText()
+      require(file.nonEmpty && !file.exists(c => c == '/' || c == '\\') && !file.contains(".."),
+        s"shard file '$file' in $where must name a file inside $dir")
+      (MetaJson.required(sh, "shard", where).asInt(), file, sh)
     }.toArray.sortBy(_._1)
   }
+
+  private def seedOf(shard: JsonNode, dir: String): Array[Float] =
+    MetaJson.floats(MetaJson.required(shard, "seed", s"$dir/manifest.json"))
+
+  /** Parse the sharded-tier manifest: (shard, file, routing seed). */
+  def readManifest(spark: org.apache.spark.sql.SparkSession, dir: String)
+      : Array[(Int, String, Array[Float])] =
+    manifestShards(dir).map { case (sh, f, e) => (sh, f, seedOf(e, dir)) }
+
+  /** Manifest with routing pivots: (shard, file, pivot set). A shard
+    * written before the pivots field routes by its seed alone, so old
+    * exports keep serving. */
+  def readManifestPivots(spark: org.apache.spark.sql.SparkSession, dir: String)
+      : Array[(Int, String, Array[Array[Float]])] =
+    manifestShards(dir).map { case (sh, f, e) =>
+      val pivots = e.get("pivots")
+      (sh, f, if (pivots == null) Array(seedOf(e, dir)) else MetaJson.floatMatrix(pivots))
+    }
 
   /** Serve queries over the sharded-files tier through
     * [[ShardServe]]: each task mmaps only the shard files routed to it
@@ -817,49 +938,24 @@ object SingleFileIndex {
     * — heap serving at 1/4 the memory of [[importLocal]]'s widened
     * f32 graph, with the distance loop in integer arithmetic (the
     * reference serves its BigANN u8 index without widening,
-    * examples/bigann.rs). Search results are identical to the widened
-    * graph's (SingleFileIndexSpec pins it). */
+    * examples/bigann.rs). It enters where [[MmapIndex.entryPoint]]
+    * does, and search results are identical to the widened graph's
+    * (SingleFileIndexSpec pins it). */
   def importLocalU8(path: String): (U8Graph, Array[Long], VamanaParams) = {
-    val meta = readMeta(path)
-    val metricName = nameToMetric(meta.distanceName)
-    require(meta.elemSize == 1 && metricName == "l2",
-      s"importLocalU8 serves u8/L2 files; this one is elem_size " +
-        s"${meta.elemSize} with distance ${meta.distanceName}")
+    val mm = new MmapIndex(path)
+    val f = mm.file
+    require(f.u8 && f.storedMetric == "l2",
+      s"importLocalU8 serves u8/L2 files; $path is elem_size " +
+        s"${f.meta.elemSize} with distance_name ${f.meta.distanceName}")
     // U8Graph's exact integer accumulation holds only for dim ≤ 8192
-    // (8192·255² < 2³¹) — checked HERE, before the full code read and
-    // any medoid fallback scan, instead of crashing in the U8Graph
-    // constructor after both. MmapIndex makes the same cut.
-    require(meta.dim <= 8192,
-      s"importLocalU8 requires dim <= 8192 for exact integer " +
-        s"distances (file dim ${meta.dim}) — use importLocal's " +
-        "widened-f32 path for larger dims")
-    val n = meta.numVectors
-    val dim = meta.dim
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      val codes = new Array[Byte](n * dim)
-      raf.seek(meta.vectorsOffset)
-      raf.readFully(codes)
-      val entry =
-        if (meta.medoidId >= 0 && meta.medoidId < n) meta.medoidId
-        else {
-          // foreign file without a usable medoid: VamanaGraph.medoid's
-          // pivot rule, integer distances
-          val pivots = BestFirst.medoidPivots(n)
-          BestFirst.pivotMedoid(n, pivots.length, (i, p) => {
-            var acc = 0; var d = 0
-            val ao = i * dim; val bo = pivots(p) * dim
-            while (d < dim) {
-              val df = (codes(ao + d) & 0xff) - (codes(bo + d) & 0xff)
-              acc += df * df; d += 1
-            }
-            math.sqrt(acc.toDouble)
-          })
-        }
-      val g = new U8Graph(codes, dim, n, entry)
-      readAdjacency(raf, meta, path, g.graph)
-      (g, loadIds(path, n), VamanaParams(maxDegree = meta.maxDegree, metric = metricName))
-    } finally raf.close()
+    // (8192·255² < 2³¹) — checked before the code copy and any medoid
+    // fallback scan. MmapIndex makes the same cut.
+    require(f.dim <= 8192,
+      s"importLocalU8 requires dim <= 8192 for exact integer distances " +
+        s"($path has dim ${f.dim}) — use importLocal's widened-f32 path for larger dims")
+    val g = new U8Graph(f.bytes(), f.dim, f.n, mm.entryPoint)
+    f.readLists(g.graph)
+    (g, f.ids, VamanaParams(maxDegree = f.meta.maxDegree, metric = "l2"))
   }
 
   /** Resolve the serving metric for a file: the caller's override if
@@ -881,7 +977,10 @@ object SingleFileIndex {
 
   /** Load a single-file index fully into a local [[VamanaGraph]] plus
     * the id mapping — the heap-resident serving mode (for the
-    * disk-resident mode see [[MmapIndex]]).
+    * disk-resident mode see [[MmapIndex]]). The graph enters at the
+    * file's stored medoid_id when it is valid, so heap and mmap
+    * serving of a reference-written file (whose random-pivot medoid
+    * graft would not recompute) start from the same row.
     *
     * `metricOverride` serves the file with the caller's metric
     * instead of the stored one (warn on mismatch) — the heap-side
@@ -891,61 +990,13 @@ object SingleFileIndex {
     * how bytes are interpreted. */
   def importLocal(path: String, metricOverride: Option[String] = None)
       : (VamanaGraph, Array[Long], VamanaParams) = {
-    val meta = readMeta(path)
-    val storedMetric = nameToMetric(meta.distanceName)
-    val metricName = resolveMetric(path, storedMetric, metricOverride)
-    val packed = meta.elemSize == 8 && storedMetric == "hamming"
-    val u8 = meta.elemSize == 1
-    require(meta.elemSize == 4 || u8 || packed,
-      s"graft serves f32, u8, or packed-u64 hamming indexes; file has " +
-        s"elem_size ${meta.elemSize} with distance ${meta.distanceName}")
-    val n = meta.numVectors
-    // a packed u64 hamming file records dim in WORDS; the in-memory
-    // graph works bit-per-slot (64 float slots per word — identical
-    // popcount distances, reference lib.rs:23-29)
-    val dim = if (packed) meta.dim * 64 else meta.dim
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      val flat = new Array[Float](n * dim)
-      raf.seek(meta.vectorsOffset)
-      val vecBytes = new Array[Byte](meta.elemSize * meta.dim)
-      var i = 0
-      while (i < n) {
-        raf.readFully(vecBytes)
-        val bb = ByteBuffer.wrap(vecBytes).order(ByteOrder.LITTLE_ENDIAN)
-        if (packed) {
-          var w = 0
-          while (w < meta.dim) {
-            val word = bb.getLong
-            var b = 0
-            while (b < 64) {
-              flat(i * dim + w * 64 + b) = if (((word >>> b) & 1L) != 0) 1f else 0f
-              b += 1
-            }
-            w += 1
-          }
-        } else if (u8) {
-          // u8 → float is lossless (0..255 exact in f32), so graph
-          // distances equal native u8 integer arithmetic exactly
-          var d = 0
-          while (d < dim) { flat(i * dim + d) = (bb.get() & 0xff).toFloat; d += 1 }
-        } else {
-          var d = 0
-          while (d < dim) { flat(i * dim + d) = bb.getFloat; d += 1 }
-        }
-        i += 1
-      }
-      val params = VamanaParams(maxDegree = meta.maxDegree, metric = metricName)
-      val g = new VamanaGraph(flat, dim, n, params)
-      // honor the file's stored entry point: a reference(rust)-written
-      // file records a random-pivot medoid that graft's deterministic
-      // rule would not reproduce — without this, heap and mmap serving
-      // of the SAME file would start from different entries and could
-      // return different results
-      if (meta.medoidId >= 0 && meta.medoidId < n) g.entryOverride = meta.medoidId
-      readAdjacency(raf, meta, path, g.graph)
-      (g, loadIds(path, n), params)
-    } finally raf.close()
+    val f = new IndexFile(path)
+    val params = VamanaParams(maxDegree = f.meta.maxDegree,
+      metric = resolveMetric(path, f.storedMetric, metricOverride))
+    val g = new VamanaGraph(f.rows(), f.dim, f.n, params)
+    g.entryOverride = f.medoid
+    f.readLists(g.graph)
+    (g, f.ids, params)
   }
 
   /** Open a single-file index for disk-resident serving with the
@@ -959,15 +1010,17 @@ object SingleFileIndex {
 }
 
 /** Disk-resident serving over a reference-layout index file: the file
-  * is memory-mapped (reference lib.rs:450-497 `open_index_with` +
-  * mmap) and beam search reads vectors and adjacency straight from
-  * the mapping — the index is never heap-loaded. The only O(n) heap
-  * state is the cached per-vector norm table for cosine (8n bytes),
-  * mirroring [[VamanaGraph]]'s fused-dot fast path so results are
-  * bit-identical to the heap-resident graph. Both modes enter at the
-  * file's stored medoid_id ([[SingleFileIndex.importLocal]] threads it
-  * into the graph), so the equivalence holds for reference-written
-  * files too, whose random-pivot medoid graft would not recompute.
+  * is opened through [[SingleFileIndex.IndexFile]] (the checked header,
+  * the id sidecar, and row-aligned read-only mappings — reference
+  * lib.rs:450-497 `open_index_with` + mmap) and beam search reads
+  * vectors and adjacency straight from the mapping — the index is
+  * never heap-loaded. The only O(n) heap state is the cached
+  * per-vector norm table for cosine (8n bytes), mirroring
+  * [[VamanaGraph]]'s fused-dot fast path so results are bit-identical
+  * to the heap-resident graph. Both modes enter at the file's stored
+  * medoid_id ([[SingleFileIndex.importLocal]] threads it into the
+  * graph), so the equivalence holds for reference-written files too,
+  * whose random-pivot medoid graft would not recompute.
   *
   * The search is [[BestFirst]], and every per-query buffer lives in
   * the call, so one instance can be searched by many threads at once.
@@ -980,65 +1033,43 @@ object SingleFileIndex {
   * single-segment form refused anything its one buffer couldn't
   * index. `maxSegBytes` exists for tests (tiny segments on small
   * files must serve identically).
+  *
+  * The mappings outlive the channel that made them, and the open holds
+  * no file descriptor, so [[close]] has nothing to release: an
+  * instance that is never closed, or a [[SingleFileIndex.LocalSharded]]
+  * whose later shard fails to open, leaks nothing but mappings the
+  * garbage collector unmaps.
   */
 final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     metricOverride: Option[String] = None)
     extends AutoCloseable {
-  import SingleFileIndex.FileMeta
-
-  val meta: FileMeta = SingleFileIndex.readMeta(path)
-  private val storedMetric = SingleFileIndex.nameToMetric(meta.distanceName)
+  private[index] val file = new SingleFileIndex.IndexFile(path, maxSegBytes)
+  val meta: SingleFileIndex.FileMeta = file.meta
   /** serving metric: caller override (open_index_with) or stored. */
   private val metricName0 =
-    SingleFileIndex.resolveMetric(path, storedMetric, metricOverride)
-  /** packed u64 hamming file (reference DiskANN<u64, DistHamming>):
-    * file dim counts words; queries/vectors are bit-per-slot. Layout
-    * follows the STORED metric — an override changes the distance
-    * evaluated, never how the bytes are decoded. */
-  private val packed = meta.elemSize == 8 && storedMetric == "hamming"
+    SingleFileIndex.resolveMetric(path, file.storedMetric, metricOverride)
+  /** packed u64 hamming file: file dim counts words; queries/vectors
+    * are bit-per-slot. Layout follows the STORED metric — an override
+    * changes the distance evaluated, never how the bytes are decoded. */
+  private val packed = file.packed
   // The mmap hot loop evaluates packed rows with a popcount kernel
   // that IS the hamming distance — a different serving metric would
   // be silently ignored (or, for cosine, misread packed words as
   // floats in the norm precompute). importLocal decodes packed files
   // bit-per-slot, so the override is honored there; send callers that
   // way instead of serving wrong distances.
-  require(!packed || metricName0 == storedMetric,
+  require(!packed || metricName0 == file.storedMetric,
     s"cannot serve packed-u64 hamming file $path with metric " +
       s"'$metricName0' off the mapping; use importLocal(path, " +
       "Some(metric)) — its bit-per-slot decode honors the override")
-  /** u8 file (reference generic T = u8, examples/bigann.rs): slots are
-    * unsigned bytes read straight off the mapping — no widened copy of
-    * the vector region ever exists on the heap. */
-  private val u8 = meta.elemSize == 1
-  require(meta.elemSize == 4 || u8 || packed,
-    s"graft serves f32, u8, or packed-u64 hamming indexes; file has " +
-      s"elem_size ${meta.elemSize} with distance ${meta.distanceName}")
-  val n: Int = meta.numVectors
-  val dim: Int = if (packed) meta.dim * 64 else meta.dim
-  val ids: Array[Long] = SingleFileIndex.loadIds(path, n)
+  /** u8 file: slots are unsigned bytes read straight off the mapping —
+    * no widened copy of the vector region ever exists on the heap. */
+  private val u8 = file.u8
+  val n: Int = file.n
+  val dim: Int = file.dim
+  val ids: Array[Long] = file.ids
 
-  private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-
-  /** Row-aligned segment chain over one file region: segment s holds
-    * rows [s·rowsPerSeg, …), so `(bufOf(i), offOf(i))` addresses row i
-    * without any read crossing a segment boundary. */
-  private final class SegMap(base: Long, val rowBytes: Int, rows: Int) {
-    val rowsPerSeg: Int = math.max(1, math.min(rows.toLong.max(1L),
-      maxSegBytes / rowBytes).toInt)
-    val segs: Array[MappedByteBuffer] =
-      Array.tabulate(math.max(1, (rows + rowsPerSeg - 1) / rowsPerSeg)) { s =>
-        val startRow = s.toLong * rowsPerSeg
-        val segRows = math.min(rowsPerSeg.toLong, rows - startRow).max(0L)
-        val m = ch.map(FileChannel.MapMode.READ_ONLY,
-          base + startRow * rowBytes, segRows * rowBytes)
-        m.order(ByteOrder.LITTLE_ENDIAN); m
-      }
-    @inline def bufOf(i: Int): MappedByteBuffer = segs(i / rowsPerSeg)
-    @inline def offOf(i: Int): Int = (i % rowsPerSeg) * rowBytes
-  }
-
-  private val vecMap = new SegMap(meta.vectorsOffset, meta.dim * meta.elemSize, n)
-  private val adjMap = new SegMap(meta.adjacencyOffset, meta.maxDegree * 4, n)
+  private val vecMap = file.vecMap
 
   private val metric = Metric.byName(metricName0)
   private val isCos = metric eq Metric.Cosine
@@ -1056,18 +1087,13 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     * 2³¹); larger dims fall back to the widened path. */
   private val u8L2 = u8 && (metric eq Metric.L2) && dim <= 8192
 
-  private val adjacency: BestFirst.Adjacency = (row, buf) =>
-    SingleFileIndex.decodeRow(adjMap.bufOf(row), adjMap.offOf(row), meta.maxDegree, n,
-      path, row, buf)
-
   /** Serving entry point: the file's stored medoid when valid. A
     * foreign file carrying the reference's 0xFFFFFFFF no-medoid
     * sentinel (or an out-of-range id) gets the pivot medoid
-    * ([[BestFirst.pivotMedoid]]), computed once off the mapping, the
-    * same fallback [[SingleFileIndex.importLocalU8]] takes, so both
-    * paths elect the same entry. */
+    * ([[BestFirst.pivotMedoid]]), computed once off the mapping;
+    * [[SingleFileIndex.importLocalU8]] enters here too. */
   lazy val entryPoint: Int =
-    if (meta.medoidId >= 0 && meta.medoidId < n) meta.medoidId
+    if (file.medoid >= 0) file.medoid
     else {
       val pdist = BestFirst.medoidPivots(n).map(p => queryDist(vector(p)))
       BestFirst.pivotMedoid(n, pdist.length, (i, p) => pdist(p)(i))
@@ -1077,19 +1103,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     * packed rows come back bit-per-slot. */
   def vector(i: Int): Array[Float] = {
     val out = new Array[Float](dim)
-    val vb = vecMap.bufOf(i); val off = vecMap.offOf(i)
-    if (packed) {
-      var w = 0
-      while (w < meta.dim) {
-        val word = vb.getLong(off + 8 * w)
-        var b = 0
-        while (b < 64) { out(w * 64 + b) = if (((word >>> b) & 1L) != 0) 1f else 0f; b += 1 }
-        w += 1
-      }
-    } else {
-      var d = 0
-      while (d < dim) { out(d) = slot(vb, off, d); d += 1 }
-    }
+    file.decodeInto(i, out, 0)
     out
   }
 
@@ -1103,16 +1117,8 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
   private val norms: Array[Double] =
     if (!isCos) null
     else {
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        val vb = vecMap.bufOf(i); val off = vecMap.offOf(i)
-        var s = 0.0; var d = 0
-        while (d < dim) { val x = slot(vb, off, d).toDouble; s += x * x; d += 1 }
-        out(i) = math.max(math.sqrt(s), java.lang.Double.MIN_NORMAL)
-        i += 1
-      }
-      out
+      val row = new Array[Float](dim)
+      Array.tabulate(n) { i => file.decodeInto(i, row, 0); queryNorm(row) }
     }
 
   /** Cosine query norm, floored like the row norms. */
@@ -1179,7 +1185,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     * heap-resident graph exactly. Returns (global id, dist)
     * ascending. */
   def search(q: Array[Float], k: Int, beamWidth: Int): Array[(Long, Double)] =
-    BestFirst.topK(n, entryPoint, k, beamWidth, adjacency, queryDist(q))
+    BestFirst.topK(n, entryPoint, k, beamWidth, file.adjacency, queryDist(q))
       .map { case (row, d) => (ids(row), d) }
 
   // ----------------------------------------------------- PQ-guided serving
@@ -1188,12 +1194,10 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     * for cosine files (L2 order on unit vectors IS cosine order — the
     * DiskANN treatment of cosine corpora), raw for l2/u8. */
   private def loadPqRow(i: Int, out: Array[Float]): Unit = {
-    val vb = vecMap.bufOf(i); val off = vecMap.offOf(i)
-    var d = 0
-    while (d < dim) { out(d) = slot(vb, off, d); d += 1 }
+    file.decodeInto(i, out, 0)
     if (isCos) {
       val inv = 1.0 / norms(i)
-      d = 0
+      var d = 0
       while (d < dim) { out(d) = (out(d) * inv).toFloat; d += 1 }
     }
   }
@@ -1296,7 +1300,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       while (t < wpv) { h += java.lang.Long.bitCount(words(base + t) ^ qw(t)); t += 1 }
       h.toDouble
     }
-    PqSearch.searchSteered(n, adjacency, entryPoint, hamming, exact, k, beamWidth)
+    PqSearch.searchSteered(n, file.adjacency, entryPoint, hamming, exact, k, beamWidth)
       .map { case (rowId, d) => (ids(rowId), d) }
   }
 
@@ -1320,10 +1324,11 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       s"codes length ${codes.length} != n($n)·m(${cb.m}) — state from another file?")
     val exact = queryDist(q)
     val lut = cb.lut(steerQuery(q))
-    PqSearch.searchSteered(n, adjacency, entryPoint, j => cb.adc(lut, codes, j), exact,
+    PqSearch.searchSteered(n, file.adjacency, entryPoint, j => cb.adc(lut, codes, j), exact,
         k, beamWidth)
       .map { case (rowId, d) => (ids(rowId), d) }
   }
 
-  override def close(): Unit = ch.close()
+  /** Nothing to release: the open holds no file descriptor. */
+  override def close(): Unit = ()
 }

@@ -112,4 +112,17 @@ class ShardedFilesSpec extends AnyFunSuite {
     val seeds = SingleFileIndex.readManifest(spark, dir)
     assert(legacy.map(_._3.head.toSeq).toSeq == seeds.map(_._3.toSeq).toSeq)
   }
+
+  test("a foreign manifest fails naming manifest.json: missing file, or a file outside the dir") {
+    val shard = """{"shard":0,"n":1,"seed":[0.0]"""
+    for ((name, entry) <- Seq("no_file" -> s"$shard}", "escape" -> s"""$shard,"file":"../x.idx"}""")) {
+      val d = Files.createTempDirectory(s"graft_manifest_$name")
+      Files.writeString(d.resolve("manifest.json"), s"""{"format":"graft-sharded-v1","shards":[$entry]}""")
+      for (open <- Seq[() => Any](() => SingleFileIndex.readManifestPivots(spark, d.toString),
+          () => new SingleFileIndex.LocalSharded(spark, d.toString))) {
+        val e = intercept[IllegalArgumentException](open())
+        assert(e.getMessage.contains(s"$d/manifest.json"), s"$name: ${e.getMessage}")
+      }
+    }
+  }
 }

@@ -3,6 +3,8 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{MmapIndex, SingleFileIndex, VamanaIndex, VamanaParams}
 
@@ -16,6 +18,35 @@ class SingleFileIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val params = VamanaParams(maxDegree = 16, buildBeamWidth = 32, metric = "cosine")
+
+  /** Scratch directory of this run: no test reads a file an earlier
+    * run left behind. */
+  private lazy val tmp = Files.createTempDirectory("graft_single_spec")
+
+  /** A u8/L2 index of the sf001 test embeddings quantized to integral
+    * [1,255] slots — genuine u8 content exactly representable in the
+    * float graph — exported with elem_size 1. */
+  private lazy val u8Path: String = {
+    val vecs = Tables.embeddings(spark, SparkSpecBase.sf001)
+      .selectExpr("vec_id",
+        """transform(embedding,
+          |  x -> CAST(CAST(round(greatest(least(x, 1.0F), -1.0F) * 127 + 128, 0) AS INT) AS FLOAT))
+          |AS embedding""".stripMargin)
+    val p8 = VamanaParams(maxDegree = 16, buildBeamWidth = 32, metric = "l2")
+    val p = tmp.resolve("u8_a.idx").toString
+    SingleFileIndex.export(VamanaIndex.build(vecs, p8, numShards = 1), p8, p, u8 = true)
+    p
+  }
+
+  /** A copy of the u8 fixture (and its sidecar, if any) at `name`. */
+  private def u8Copy(name: String): String = {
+    val p = tmp.resolve(name).toString
+    Files.copy(Paths.get(u8Path), Paths.get(p), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    if (Files.exists(Paths.get(u8Path + ".ids")))
+      Files.copy(Paths.get(u8Path + ".ids"), Paths.get(p + ".ids"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    p
+  }
 
   private lazy val path: String = {
     val vecs = Tables.embeddings(spark, SparkSpecBase.sf001)
@@ -147,17 +178,7 @@ class SingleFileIndexSpec extends AnyFunSuite {
   }
 
   test("u8 index: elem_size 1 export round-trips byte-true, heap and mmap agree") {
-    // quantize the embeddings into integral [1,255] slots — genuine u8
-    // content exactly representable in the float graph
-    val vecs = Tables.embeddings(spark, SparkSpecBase.sf001)
-      .selectExpr("vec_id",
-        """transform(embedding,
-          |  x -> CAST(CAST(round(greatest(least(x, 1.0F), -1.0F) * 127 + 128, 0) AS INT) AS FLOAT))
-          |AS embedding""".stripMargin)
-    val p8 = VamanaParams(maxDegree = 16, buildBeamWidth = 32, metric = "l2")
-    val idx = VamanaIndex.build(vecs, p8, numShards = 1)
-    val pathA = "/tmp/graft_u8_a.idx"
-    SingleFileIndex.export(idx, p8, pathA, u8 = true)
+    val pathA = u8Path
 
     // file records elem_size 1 and is 4x smaller in the vector region
     val meta = SingleFileIndex.readMeta(pathA)
@@ -172,7 +193,7 @@ class SingleFileIndexSpec extends AnyFunSuite {
         0, g.graph(i).map(ids(_)))
     }
     val reIdx = spark.createDataset(rows)
-    val pathB = "/tmp/graft_u8_b.idx"
+    val pathB = tmp.resolve("u8_b.idx").toString
     SingleFileIndex.export(reIdx, pBack, pathB, u8 = true)
     val a = Files.readAllBytes(Paths.get(pathA))
     val b = Files.readAllBytes(Paths.get(pathB))
@@ -278,14 +299,7 @@ class SingleFileIndexSpec extends AnyFunSuite {
     // longs → medoid int at file offset 32): the importer must fall
     // back to the deterministic pivot-medoid rule instead of crashing
     // or entering at a bogus node
-    val src = "/tmp/graft_u8_a.idx"
-    if (!Files.exists(Paths.get(src))) cancel("u8 export test must run first")
-    val patched = "/tmp/graft_u8_nomedoid.idx"
-    Files.copy(Paths.get(src), Paths.get(patched),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val ids__ = Files.exists(Paths.get(src + ".ids"))
-    if (ids__) Files.copy(Paths.get(src + ".ids"), Paths.get(patched + ".ids"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val patched = u8Copy("u8_nomedoid.idx")
     val raf = new java.io.RandomAccessFile(patched, "rw")
     try {
       raf.seek(32)
@@ -319,11 +333,7 @@ class SingleFileIndexSpec extends AnyFunSuite {
     // rejected by the row decoder, never reach a search as an
     // ArrayIndexOutOfBounds. Patch slot 0 of the entry row (the first
     // row any mmap search expands) to n + 5 in a copied u8 file.
-    val src = "/tmp/graft_u8_a.idx"
-    if (!Files.exists(Paths.get(src))) cancel("u8 export test must run first")
-    val patched = "/tmp/graft_u8_badadj.idx"
-    Files.copy(Paths.get(src), Paths.get(patched),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val patched = u8Copy("u8_badadj.idx")
     Files.deleteIfExists(Paths.get(patched + ".ids"))
     val meta = SingleFileIndex.readMeta(patched)
     val row = meta.medoidId
@@ -609,5 +619,31 @@ class SingleFileIndexSpec extends AnyFunSuite {
         .map { case (nid, d) => (nid, math.rint(d * 1e4) / 1e4) }
       assert(served(qid) == local, s"q $qid: ${served(qid)} vs $local")
     } finally mm.close()
+  }
+
+  test("one writer: export of a one-shard index is byte-identical to exportSharded's shard file") {
+    // f32 cosine with sparse ids: the main file and its v2 sidecar
+    val vecs = Tables.embeddings(spark, SparkSpecBase.sf001).filter($"vec_id" % 3 === 1)
+    val idx = VamanaIndex.build(vecs, params, numShards = 1).cache()
+    val single = tmp.resolve("one_writer.idx").toString
+    val dir = tmp.resolve("one_writer_sharded").toString
+    SingleFileIndex.export(idx, params, single)
+    SingleFileIndex.exportSharded(idx, params, dir)
+    for (suffix <- Seq("", ".ids")) {
+      val a = Files.readAllBytes(Paths.get(single + suffix))
+      val b = Files.readAllBytes(Paths.get(s"$dir/shard-0.idx$suffix"))
+      assert(java.util.Arrays.equals(a, b),
+        s"'$suffix' first differs at byte ${a.indices.find(i => i >= b.length || a(i) != b(i))}")
+    }
+    // export stages and renames: a failed export leaves the old file
+    // whole and no staging file behind (the u8 encoder rejects these
+    // fractional slots mid-stream)
+    val before = Files.readAllBytes(Paths.get(single))
+    intercept[IllegalArgumentException](SingleFileIndex.export(idx, params, single, u8 = true))
+    assert(java.util.Arrays.equals(before, Files.readAllBytes(Paths.get(single))))
+    val left = Files.list(tmp).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("one_writer.idx.tmp")).toList
+    assert(left.isEmpty, s"staging files left behind: $left")
+    idx.unpersist()
   }
 }
