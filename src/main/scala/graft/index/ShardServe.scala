@@ -1,5 +1,7 @@
 package graft.index
 
+import java.util.concurrent.ForkJoinTask
+
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
@@ -37,14 +39,35 @@ private[index] object ShardServe {
 
   /** The shard-routing rule: positions of `shards` ranked by
     * (min distance from `q` to the shard's pivot set, shard id), the
-    * first `nprobe` kept; `nprobe <= 0` keeps every shard. */
+    * first `nprobe` kept; `nprobe <= 0` keeps every shard. The
+    * per-shard pivot distances are computed at once ([[fanOut]]). */
   def probe(q: Array[Float], shards: Array[Int], pivots: Array[Array[Array[Float]]],
       nprobe: Int): Array[Int] = {
-    val d = new Array[Double](shards.length)
-    var i = 0
-    while (i < d.length) { d(i) = VamanaIndex.pivotDist(q, pivots(i)); i += 1 }
+    val d = fanOut(shards.length)(i => VamanaIndex.pivotDist(q, pivots(i)))
     val ranked = Array.range(0, shards.length).sortBy(j => (d(j), shards(j)))
     if (nprobe <= 0) ranked else ranked.take(nprobe)
+  }
+
+  /** `f(0) … f(n - 1)`, each result in its own slot, so the order of
+    * the output never depends on which call finishes first. Calls 1 …
+    * n - 1 are forked to the common fork-join pool and the calling
+    * thread runs call 0, then joins (helping with forked calls no
+    * worker has taken). Each call's exception is caught where it is
+    * thrown and the lowest failing slot's is rethrown as it was, never
+    * re-wrapped by the pool. `f` must be safe to run from several
+    * threads at once. */
+  def fanOut[A: ClassTag](n: Int)(f: Int => A): Array[A] = {
+    val out = new Array[A](n)
+    val failed = new Array[Throwable](n)
+    def call(i: Int): Unit =
+      try out(i) = f(i) catch { case e: Throwable => failed(i) = e }
+    val forked = Array.tabulate(math.max(0, n - 1)) { i =>
+      ForkJoinTask.adapt(new Runnable { def run(): Unit = call(i + 1) }).fork()
+    }
+    if (n > 0) call(0)
+    forked.foreach(_.join())
+    failed.find(_ != null).foreach(e => throw e)
+    out
   }
 
   /** [[probe]] over a query batch: shard → the queries routed to it,

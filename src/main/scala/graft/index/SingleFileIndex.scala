@@ -1,7 +1,7 @@
 package graft.index
 
 import java.io.RandomAccessFile
-import java.nio.{ByteBuffer, ByteOrder, MappedByteBuffer}
+import java.nio.{ByteBuffer, ByteOrder, FloatBuffer, MappedByteBuffer}
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -305,6 +305,10 @@ object SingleFileIndex {
         new SegMap(ch, meta.adjacencyOffset, 4 * meta.maxDegree, n, maxSegBytes))
       finally ch.close()
     }
+    /** f32 rows: a little-endian float view of each vector segment, for
+      * one absolute bulk read per row. */
+    private val vecFloats: Array[FloatBuffer] =
+      if (packed || u8) null else vecMap.segs.map(_.asFloatBuffer())
 
     /** The one adjacency decoder: row `row`'s u32 LE ids, 0xFFFFFFFF
       * padding skipped, into `out` (the [[BestFirst.Adjacency]]
@@ -346,10 +350,7 @@ object SingleFileIndex {
       } else if (u8) {
         var d = 0
         while (d < dim) { out(off + d) = (b.get(o + d) & 0xff).toFloat; d += 1 }
-      } else {
-        var d = 0
-        while (d < dim) { out(off + d) = b.getFloat(o + 4 * d); d += 1 }
-      }
+      } else vecFloats(i / vecMap.rowsPerSeg).get(o / 4, out, off, dim)
     }
 
     /** Every row decoded into one row-major heap array. */
@@ -820,8 +821,10 @@ object SingleFileIndex {
     * merge with exactly [[graft.operators.TopKAgg]]'s (dist, id)
     * NaN-total order and the job path's round-half-up-4 — results are
     * spec-pinned identical to [[serveSharded]] (ShardedFilesSpec).
-    * Spark is used only to parse the manifest at open; the query path
-    * never touches it. */
+    * One query's probed shards are searched at once
+    * ([[ShardServe.fanOut]]), each result kept in probe order, so the
+    * merge sees the lists a sequential loop would. Spark is used only
+    * to parse the manifest at open; the query path never touches it. */
   final class LocalSharded(spark: org.apache.spark.sql.SparkSession, dir: String)
       extends AutoCloseable {
     private val shards: Array[(Int, Array[Array[Float]], MmapIndex)] =
@@ -837,11 +840,10 @@ object SingleFileIndex {
       * mirrors [[graft.operators.TopKAgg]]'s distinct mode. */
     def search(q: Array[Float], k: Int, beamWidth: Int, nprobe: Int = 0,
         distinctMerge: Boolean = false): Array[(Long, Double)] = {
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-      ShardServe.probe(q, shardIds, pivotSets, nprobe).foreach { i =>
-        out ++= shards(i)._3.search(q, k, beamWidth)
-      }
-      val sorted = out.toArray
+      val probed = ShardServe.probe(q, shardIds, pivotSets, nprobe)
+      val sorted = ShardServe.fanOut(probed.length)(t =>
+          shards(probed(t))._3.search(q, k, beamWidth))
+        .flatten
         .sortWith { (a, b) =>
           val c = java.lang.Double.compare(a._2, b._2)
           c < 0 || (c == 0 && a._1 < b._1)
@@ -1107,12 +1109,6 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     out
   }
 
-  /** Read slot `d` of the row at byte offset `off` in segment `b`:
-    * unsigned byte for u8 files, f32 otherwise. `u8` is fixed per
-    * instance so the branch predicts perfectly in the hot loops. */
-  @inline private def slot(b: MappedByteBuffer, off: Int, d: Int): Float =
-    if (u8) (b.get(off + d) & 0xff).toFloat else b.getFloat(off + 4 * d)
-
   /** cosine norms cached once (same floored form as VamanaGraph). */
   private val norms: Array[Double] =
     if (!isCos) null
@@ -1154,10 +1150,11 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       }
     } else if (isCos) {
       val qNorm = queryNorm(q)
+      val row = new Array[Float](dim)
       j => {
-        val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
+        file.decodeInto(j, row, 0)
         var dot = 0.0; var i = 0
-        while (i < dim) { dot += q(i).toDouble * slot(vb, off, i).toDouble; i += 1 }
+        while (i < dim) { dot += q(i).toDouble * row(i).toDouble; i += 1 }
         1.0 - dot / (qNorm * norms(j))
       }
     } else {
@@ -1171,9 +1168,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       } else {
         val row = new Array[Float](dim)
         j => {
-          val vb = vecMap.bufOf(j); val off = vecMap.offOf(j)
-          var d = 0
-          while (d < dim) { row(d) = slot(vb, off, d); d += 1 }
+          file.decodeInto(j, row, 0)
           metric.eval(q, 0, row, 0, dim)
         }
       }

@@ -282,19 +282,15 @@ object StreamingIndex {
     t
   }
 
-  /** Nearest-main-shard assignment of a driver-side insert batch
-    * (lowest shard id wins distance ties — the standing routing
-    * rule). */
+  /** Nearest-main-shard assignment of a driver-side insert batch:
+    * the serving routing rule ([[ShardServe.probe]]) at nprobe 1, so
+    * the lowest shard id wins a distance tie. */
   private def routeBatch(batch: Array[(Long, Array[Float])],
-      routeTables: Array[(Int, Array[Array[Float]])]): Map[Int, Array[(Long, Array[Float])]] =
-    batch.groupBy { case (_, v) =>
-      var best = routeTables(0)._1; var bd = Double.MaxValue
-      routeTables.foreach { case (sh, pv) =>
-        val d = VamanaIndex.pivotDist(v, pv)
-        if (d < bd || (d == bd && sh < best)) { bd = d; best = sh }
-      }
-      best
-    }
+      routeTables: Array[(Int, Array[Array[Float]])]): Map[Int, Array[(Long, Array[Float])]] = {
+    val shards = routeTables.map(_._1)
+    val pivots = routeTables.map(_._2)
+    batch.groupBy { case (_, v) => shards(ShardServe.probe(v, shards, pivots, 1).head) }
+  }
 
   /** The index's parsed metadata.json, or None when the directory has
     * none (an ingest-only index never save()d, a foreign directory):

@@ -129,6 +129,37 @@ class SingleFileCorruptionSpec extends AnyFunSuite {
     fuzz(exportTo("ham.idx", rows.toDF("vec_id", "embedding"), hp), u8 = false)
   }
 
+  test("a corrupt adjacency id in one shard fails LocalSharded.search naming file, row and slot") {
+    // LocalSharded searches the probed shards at once on the common
+    // fork-join pool; the decoder's exception must come back through
+    // it as thrown, not re-wrapped and not swallowed. Queries drawn
+    // from the healthy shards rank the corrupt shard below their own,
+    // so its search is one of the forked calls, not the caller's.
+    val dir = tmp.resolve("sharded")
+    SingleFileIndex.exportSharded(VamanaIndex.build(
+      Tables.embeddings(spark, SparkSpecBase.sf001), cosine, numShards = 4), cosine, dir.toString)
+    val man = SingleFileIndex.readManifest(spark, dir.toString)
+    val bad = dir.resolve(man.last._2).toString
+    val meta = SingleFileIndex.readMeta(bad)
+    val row = meta.medoidId
+    val queries = man.init.map { case (_, f, _) =>
+      val mm = new MmapIndex(dir.resolve(f).toString)
+      try mm.vector(mm.entryPoint) finally mm.close()
+    }
+    val raf = new java.io.RandomAccessFile(bad, "rw")
+    try {
+      raf.seek(meta.adjacencyOffset + 4L * meta.maxDegree * row)
+      raf.write(ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+        .putInt(meta.numVectors + 5).array())
+    } finally raf.close()
+    val handle = new SingleFileIndex.LocalSharded(spark, dir.toString)
+    try queries.foreach { q =>
+      val e = intercept[IllegalArgumentException](handle.search(q, 5, 16))
+      assert(e.getMessage.contains(bad) && e.getMessage.contains(s"row $row slot 0") &&
+        e.getMessage.contains(s"${meta.numVectors + 5}"), e.getMessage)
+    } finally handle.close()
+  }
+
   test("the heap importers refuse rows that do not fit a Java array, pointing to MmapIndex") {
     // a sparse packed-hamming file: 32769 rows of 1024 words decode to
     // 2^31 + 2^16 float slots, one past what a heap array holds
