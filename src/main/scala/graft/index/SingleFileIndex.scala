@@ -535,12 +535,7 @@ object SingleFileIndex {
     val words = (dim + 63) / 64
     val elemSize = if (packed) 8 else if (u8) 1 else 4
     val fileDim = if (packed) words else dim
-    def normFloor(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
-      math.max(math.sqrt(s), java.lang.Double.MIN_NORMAL)
-    }
-    val pivotNorms = if (isCos) pivotVecs.map(normFloor) else null
+    val pivotNorms = if (isCos) pivotVecs.map(v => Metric.cosineNorm(v, 0, v.length)) else null
 
     writeFile(path, ids, fileDim, elemSize, maxDeg, params.metric)(room => {
       // vectors region, and the medoid argmin in the same pass
@@ -580,19 +575,16 @@ object SingleFileIndex {
           }
           var s = 0.0
           if (isCos) {
-            val vn = normFloor(v)
+            val vn = Metric.cosineNorm(v, 0, v.length)
             var p = 0
             while (p < pivotVecs.length) {
-              val pv = pivotVecs(p)
-              var dot = 0.0; var i = 0
-              while (i < dim) { dot += v(i).toDouble * pv(i).toDouble; i += 1 }
-              s += 1.0 - dot / (vn * pivotNorms(p))
+              s += Metric.cosineDist(Distance.dot(v, 0, pivotVecs(p), 0, dim), vn, pivotNorms(p))
               p += 1
             }
           } else {
             var p = 0
             while (p < pivotVecs.length) {
-              s += metric.eval(v, 0, pivotVecs(p), 0, dim); p += 1
+              s += Metric.graphDist(metric, v, 0, pivotVecs(p), 0, dim); p += 1
             }
           }
           if (s < bestScore) { bestScore = s; best = pos }
@@ -655,7 +647,7 @@ object SingleFileIndex {
     * deterministic pivot medoid, so mmap serving of this file enters
     * where [[VamanaIndex.search]]'s rebuild does: the two tiers
     * return IDENTICAL results (ShardedFilesSpec pins it). */
-  private def writeShardFile(
+  private[index] def writeShardFile(
       group: Array[IndexRow], params: VamanaParams, path: String): Unit = {
     val (g, sorted) = VamanaIndex.rebuildShardGraph(group, params)(identity)
     val dim = g.dim
@@ -1109,7 +1101,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
     out
   }
 
-  /** cosine norms cached once (same floored form as VamanaGraph). */
+  /** cosine norms cached once ([[Metric.cosineNorm]], as VamanaGraph). */
   private val norms: Array[Double] =
     if (!isCos) null
     else {
@@ -1117,12 +1109,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       Array.tabulate(n) { i => file.decodeInto(i, row, 0); queryNorm(row) }
     }
 
-  /** Cosine query norm, floored like the row norms. */
-  private def queryNorm(q: Array[Float]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < q.length) { acc += q(i).toDouble * q(i).toDouble; i += 1 }
-    math.max(math.sqrt(acc), java.lang.Double.MIN_NORMAL)
-  }
+  private def queryNorm(q: Array[Float]): Double = Metric.cosineNorm(q, 0, q.length)
 
   /** Exact distance from `q` to any row. The query's per-call state —
     * packed hamming words, the u8 integer copy, the row buffer — is
@@ -1153,9 +1140,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
       val row = new Array[Float](dim)
       j => {
         file.decodeInto(j, row, 0)
-        var dot = 0.0; var i = 0
-        while (i < dim) { dot += q(i).toDouble * row(i).toDouble; i += 1 }
-        1.0 - dot / (qNorm * norms(j))
+        Metric.cosineDist(Distance.dot(q, 0, row, 0, dim), qNorm, norms(j))
       }
     } else {
       val qInt = if (u8L2) U8Graph.intQuery(q) else null
@@ -1169,7 +1154,7 @@ final class MmapIndex(path: String, maxSegBytes: Long = Int.MaxValue.toLong,
         val row = new Array[Float](dim)
         j => {
           file.decodeInto(j, row, 0)
-          metric.eval(q, 0, row, 0, dim)
+          Metric.graphDist(metric, q, 0, row, 0, dim)
         }
       }
     }

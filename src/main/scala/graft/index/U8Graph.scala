@@ -39,16 +39,17 @@ final class U8Graph(
     val qInt = U8Graph.intQuery(q)
     val dist: Int => Double =
       if (qInt != null) j => math.sqrt(U8Graph.intL2(qInt, codes, j * dim).toDouble)
-      else j => {
-        // fractional query: double accumulation over the same values —
-        // identical to Metric.L2 over the widened codes
-        val off = j * dim
-        var acc = 0.0; var i = 0
-        while (i < dim) {
-          val d = q(i).toDouble - (codes(off + i) & 0xff).toDouble
-          acc += d * d; i += 1
+      else {
+        // fractional query: the codes widened (exact in f32) into a
+        // per-call row and evaluated by the [[Distance]] kernel — what
+        // the widened heap graph and MmapIndex compute
+        val row = new Array[Float](dim)
+        j => {
+          val off = j * dim
+          var i = 0
+          while (i < dim) { row(i) = (codes(off + i) & 0xff).toFloat; i += 1 }
+          math.sqrt(Distance.l2sq(q, 0, row, 0, dim))
         }
-        math.sqrt(acc)
       }
     BestFirst.topK(n, entry, k, beamWidth, BestFirst.lists(graph), dist)
   }

@@ -2,9 +2,10 @@ package graft.index
 
 import java.util.{Arrays => JArrays}
 
-/** Distance metric over flat float vectors, computed in double —
-  * mirrors [[graft.functions.VectorExprs]] so graph-build distances and
-  * query-side distances agree bit-for-bit. */
+/** Distance metric over flat float vectors, computed in double by a
+  * scalar loop — mirrors [[graft.functions.VectorExprs]] bit-for-bit.
+  * Graph build and serving evaluate L2, cosine and dot through the
+  * [[Distance]] kernel instead ([[Metric.graphDist]]). */
 sealed trait Metric extends Serializable {
   def name: String
   def eval(a: Array[Float], aOff: Int, b: Array[Float], bOff: Int, dim: Int): Double
@@ -147,6 +148,33 @@ object Metric {
       }
     }
   }
+  /** sqrt(Σx²) over `v(off ..< off + dim)`, floored at MIN_NORMAL —
+    * the cosine norm that graph build and serving cache per row and
+    * compute once per query. */
+  private[index] def cosineNorm(v: Array[Float], off: Int, dim: Int): Double = {
+    var acc = 0.0; var i = 0
+    while (i < dim) { val x = v(off + i).toDouble; acc += x * x; i += 1 }
+    math.max(math.sqrt(acc), java.lang.Double.MIN_NORMAL)
+  }
+
+  /** Cosine distance from a [[Distance]] dot product and the two
+    * [[cosineNorm]]s. The distance to a zero vector is 1.0 (neutral),
+    * never NaN — a NaN silently corrupts the beam ordering: the floor
+    * keeps one zero norm finite, and two floors multiply to 0. */
+  @inline private[index] def cosineDist(dot: Double, na: Double, nb: Double): Double = {
+    val den = na * nb
+    if (den == 0.0) 1.0 else 1.0 - dot / den
+  }
+
+  /** A graph distance: L2 and dot through the [[Distance]] kernel,
+    * every other metric through its scalar [[Metric.eval]]. Cosine
+    * callers divide a kernel dot by their cached norms instead. */
+  private[index] def graphDist(m: Metric, a: Array[Float], ao: Int,
+      b: Array[Float], bo: Int, dim: Int): Double =
+    if (m eq L2) math.sqrt(Distance.l2sq(a, ao, b, bo, dim))
+    else if (m eq Dot) -Distance.dot(a, ao, b, bo, dim)
+    else m.eval(a, ao, b, bo, dim)
+
   def byName(n: String): Metric = n match {
     case "l2" => L2; case "cosine" => Cosine; case "dot" => Dot
     case "hamming" => Hamming; case "l1" => L1; case "linf" => Linf
@@ -211,42 +239,23 @@ final class VamanaGraph(
   private val metric: Metric = Metric.byName(params.metric)
   private val isCosine = metric eq Metric.Cosine
 
-  /** cached sqrt(Σx²) per vector (cosine only): distance becomes one
-    * fused dot-product pass instead of three accumulations. */
+  /** cached [[Metric.cosineNorm]] per vector (cosine only): distance
+    * becomes one dot-product pass instead of three accumulations. */
   private val norms: Array[Double] =
-    if (!isCosine) null
-    else {
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        var s = 0.0; var d = 0
-        val off = i * dim
-        while (d < dim) { val x = vecs(off + d).toDouble; s += x * x; d += 1 }
-        // zero-norm floor keeps the cached-norm fast path NaN-free and
-        // consistent with Metric.Cosine.eval's guard (dist becomes 1.0)
-        out(i) = math.max(math.sqrt(s), java.lang.Double.MIN_NORMAL)
-        i += 1
-      }
-      out
-    }
+    if (!isCosine) null else Array.tabulate(n)(i => Metric.cosineNorm(vecs, i * dim, dim))
 
-  @inline private def dotAt(ao: Int, bo: Int): Double = {
-    var dot = 0.0; var i = 0
-    while (i < dim) { dot += vecs(ao + i).toDouble * vecs(bo + i).toDouble; i += 1 }
-    dot
-  }
+  /** Distance from `a(ao ..< ao + dim)`, of norm `aNorm` (cosine
+    * only), to row `j` — through the [[Distance]] kernel, as
+    * [[MmapIndex]] evaluates it, so heap and mapped serving agree. */
+  @inline private def distTo(a: Array[Float], ao: Int, aNorm: Double, j: Int): Double =
+    if (isCosine) Metric.cosineDist(Distance.dot(a, ao, vecs, j * dim, dim), aNorm, norms(j))
+    else Metric.graphDist(metric, a, ao, vecs, j * dim, dim)
 
   @inline private def dist(i: Int, j: Int): Double =
-    if (isCosine) 1.0 - dotAt(i * dim, j * dim) / (norms(i) * norms(j))
-    else metric.eval(vecs, i * dim, vecs, j * dim, dim)
+    distTo(vecs, i * dim, if (isCosine) norms(i) else 0.0, j)
 
   @inline private def distQ(q: Array[Float], qNorm: Double, j: Int): Double =
-    if (isCosine) {
-      var dot = 0.0; var i = 0
-      val off = j * dim
-      while (i < dim) { dot += q(i).toDouble * vecs(off + i).toDouble; i += 1 }
-      1.0 - dot / (qNorm * norms(j))
-    } else metric.eval(q, 0, vecs, j * dim, dim)
+    distTo(q, 0, qNorm, j)
 
   /** splitmix64 — tiny, public-domain PRNG recurrence. */
   private def mix(z0: Long): Long = {
@@ -312,16 +321,9 @@ final class VamanaGraph(
     BestFirst.topK(n, medoid, k, beamWidth, BestFirst.lists(graph), j => distQ(q, qNorm, j))
   }
 
-  /** Cosine query norm with the MIN_NORMAL floor (NaN guard) — ONE
-    * definition shared by search and searchFiltered so the guard can
-    * never drift between the two serving paths. */
+  /** The query's [[Metric.cosineNorm]] (cosine only). */
   @inline private def queryNorm(q: Array[Float]): Double =
-    if (!isCosine) 0.0
-    else {
-      var acc = 0.0; var i = 0
-      while (i < q.length) { acc += q(i).toDouble * q(i).toDouble; i += 1 }
-      math.max(math.sqrt(acc), java.lang.Double.MIN_NORMAL)
-    }
+    if (!isCosine) 0.0 else Metric.cosineNorm(q, 0, q.length)
 
   /** Filtered serving search (the Filtered-DiskANN serving pattern,
     * Gollapudi et al. WWW'23 — predicated top-k without per-label

@@ -616,17 +616,20 @@ object VamanaIndex {
       .filter(col("n") > 1).limit(1).count() > 0
   }
 
-  /** Min distance from `q` to any pivot of the set — the pivot-routing
-    * distance [[searchProbed]] ranks shards by. */
+  /** Min L2 distance from `q` to any pivot of the set (`MaxValue` for
+    * none) — the pivot-routing distance [[ShardServe.probe]] ranks
+    * shards by. The minimum is taken over the kernel's squared
+    * distances and rooted once: `sqrt` is monotone and correctly
+    * rounded, so the value is the minimum of the roots. */
   private[graft] def pivotDist(q: Array[Float], pivots: Array[Array[Float]]): Double = {
     var best = Double.MaxValue
     var i = 0
     while (i < pivots.length) {
-      val d = Metric.L2.eval(q, 0, pivots(i), 0, q.length)
+      val d = Distance.l2sq(q, 0, pivots(i), 0, q.length)
       if (d < best) best = d
       i += 1
     }
-    best
+    if (best == Double.MaxValue) best else math.sqrt(best)
   }
 
   /** `split` = sub-shards per parent cell of a CAPPED overlapped

@@ -226,6 +226,33 @@ class SingleFileIndexSpec extends AnyFunSuite {
     } finally mm.close()
   }
 
+  test("u8 cosine index: mmap serving widens the codes and matches importLocal") {
+    // the same integral [1,255] slots as the u8/L2 fixture, served by
+    // cosine: the mapped rows are bytes, never read as floats
+    val vecs = Tables.embeddings(spark, SparkSpecBase.sf001)
+      .selectExpr("vec_id",
+        """transform(embedding,
+          |  x -> CAST(CAST(round(greatest(least(x, 1.0F), -1.0F) * 127 + 128, 0) AS INT) AS FLOAT))
+          |AS embedding""".stripMargin)
+    val pc = VamanaParams(maxDegree = 16, buildBeamWidth = 32, metric = "cosine")
+    val p = tmp.resolve("u8_cos.idx").toString
+    SingleFileIndex.export(VamanaIndex.build(vecs, pc, numShards = 1), pc, p, u8 = true)
+    assert(SingleFileIndex.readMeta(p).elemSize == 1)
+    val (g, ids, _) = SingleFileIndex.importLocal(p)
+    val mm = new MmapIndex(p)
+    try {
+      for (row <- Seq(0, 7, g.n / 2, g.n - 1)) {
+        val q = g.vecs.slice(row * g.dim, (row + 1) * g.dim)
+        val qf = q.clone(); qf(1) += 0.25f
+        for (query <- Seq(q, qf)) {
+          val heap = g.search(query, 10, 32).map { case (pos, d) => (ids(pos), d) }.toSeq
+          val mapped = mm.search(query, 10, 32).toSeq
+          assert(heap.nonEmpty && mapped == heap, s"row $row: $mapped vs $heap")
+        }
+      }
+    } finally mm.close()
+  }
+
   test("distributed serve() over the file matches driver-side mmap search") {
     val (g, ids, _) = SingleFileIndex.importLocal(path)
     val qs = Seq(2, 91, 333).map { i =>
