@@ -17,6 +17,12 @@ ten pairs ran, the change won at least nine tenths of them, and its
 median is better than the parent's by more than the parent's
 interquartile range.
 
+Before the first run it prints every line that differs between the two
+trees' graftbench/target/launch/javaopts.txt (the JVM options run.py
+starts the harness with), so a change that is only a JVM option shows
+in the log. A tree that run.py has not built yet has no such file; the
+comparison then waits until after the first pair.
+
 --log appends every run's result to a JSON-lines file. The script only
 calls run.py; it does not change the benchmark.
 """
@@ -53,6 +59,24 @@ def run(tree, args, seed):
     return json.loads(lines[-1])
 
 
+def javaopts_diff(trees):
+    """Prints the JVM-option lines that differ between the trees; returns
+    False when a tree has not been built yet."""
+    opts = {}
+    for side, tree in trees.items():
+        path = os.path.join(tree, "graftbench", "target", "launch", "javaopts.txt")
+        if not os.path.isfile(path):
+            print(f"javaopts: {side} not built yet; compared after the first pair", flush=True)
+            return False
+        with open(path) as fh:
+            opts[side] = [l for l in fh.read().split("\n") if l]
+    diff = [f"javaopts: {side} only: {line}"
+            for side, other in (("parent", "change"), ("change", "parent"))
+            for line in opts[side] if line not in opts[other]]
+    print("\n".join(diff) if diff else "javaopts: identical", flush=True)
+    return True
+
+
 def quartiles(xs):
     """(q1, median, q3), interpolating between order statistics."""
     if len(xs) == 1:
@@ -84,6 +108,7 @@ def main():
     trees = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     spec = declared(trees["change"], args.trace)
     results = {"parent": [], "change": []}
+    compared = javaopts_diff(trees)
     for i, seed in enumerate(args.seeds):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
@@ -96,6 +121,8 @@ def main():
             status = "ok" if res["correct"] and res["failed"] == 0 else \
                 f"NOT CORRECT ({res['failed']}/{res['attempted']} failed) {res.get('error', '')}"
             print(f"seed {seed} {side:6s} {status}", file=sys.stderr, flush=True)
+        if not compared:
+            compared = javaopts_diff(trees)
 
     wanted = [m for m in args.metrics.split(",") if m] or list(spec)
     print(f"{args.workload}, {len(args.seeds)} pairs, --seconds {args.seconds} --trace {args.trace}")

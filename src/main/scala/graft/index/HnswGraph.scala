@@ -38,26 +38,14 @@ final class HnswGraph(
   private val isCos = metric eq Metric.Cosine
 
   private val norms: Array[Double] =
-    if (!isCos) null
-    else {
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        var s = 0.0; var d = 0
-        val off = i * dim
-        while (d < dim) { val x = vecs(off + d).toDouble; s += x * x; d += 1 }
-        out(i) = math.max(math.sqrt(s), java.lang.Double.MIN_NORMAL)
-        i += 1
-      }
-      out
-    }
+    if (!isCos) null else Array.tabulate(n)(i => Metric.cosineNorm(vecs, i * dim, dim))
 
   @inline private def distIdx(i: Int, j: Int): Double =
     if (isCos) {
       var dot = 0.0; var d = 0
       val ao = i * dim; val bo = j * dim
       while (d < dim) { dot += vecs(ao + d).toDouble * vecs(bo + d).toDouble; d += 1 }
-      1.0 - dot / (norms(i) * norms(j))
+      Metric.cosineDist(dot, norms(i), norms(j))
     } else metric.eval(vecs, i * dim, vecs, j * dim, dim)
 
   @inline private def distQ(q: Array[Float], qNorm: Double, j: Int): Double =
@@ -65,7 +53,7 @@ final class HnswGraph(
       var dot = 0.0; var d = 0
       val bo = j * dim
       while (d < dim) { dot += q(d).toDouble * vecs(bo + d).toDouble; d += 1 }
-      1.0 - dot / (qNorm * norms(j))
+      Metric.cosineDist(dot, qNorm, norms(j))
     } else metric.eval(q, 0, vecs, j * dim, dim)
 
   // ------------------------------------------------------------ levels
@@ -183,12 +171,7 @@ final class HnswGraph(
   }
 
   @inline private def qNormOf(q: Array[Float]): Double =
-    if (!isCos) 0.0
-    else {
-      var s = 0.0; var i = 0
-      while (i < q.length) { s += q(i).toDouble * q(i).toDouble; i += 1 }
-      math.max(math.sqrt(s), java.lang.Double.MIN_NORMAL)
-    }
+    if (!isCos) 0.0 else Metric.cosineNorm(q, 0, q.length)
 
   /** k-NN search: greedy descent through upper layers, ef-beam at
     * layer 0. Returns (local id, dist) ascending by (dist, id) — the

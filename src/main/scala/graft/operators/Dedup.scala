@@ -443,22 +443,7 @@ object Dedup {
     // partitions, a 10¹¹-edge one to 20000 — the executor-count
     // ceiling of a real cluster, not a constant that silently turns
     // into 5×10⁸ edges/task) while tiny graphs run on 4.
-    // GRAFT_PROP_FLOOR: dev knob for A/B-ing the narrow-loop floor
-    // against the pre-r16 session width (the r16→r17 resize episode —
-    // see BASELINE "cluster-family width A/B")
-    // dev-only A/B lever: parse defensively (a typo'd value should
-    // name itself, not surface as a NumberFormatException from deep
-    // inside the loop) and clamp to [1, 20000] so it can widen the
-    // narrow floor but never override the edge-scaled cap
-    val floor = sys.env.get("GRAFT_PROP_FLOOR") match {
-      case None => 4
-      case Some(v) => v.toIntOption match {
-        case Some(i) => math.max(1, math.min(20000, i))
-        case None => throw new IllegalArgumentException(
-          s"GRAFT_PROP_FLOOR must be an int, got '$v'")
-      }
-    }
-    val nParts = math.max(floor, math.min(20000, (edgeCount0 / 500000L).toInt))
+    val nParts = math.max(4, math.min(20000, (edgeCount0 / 500000L).toInt))
     // every round's joins/aggregates inherit the session shuffle
     // width, so run the WHOLE loop on a CHILD session (shared
     // SparkContext — same executors, caches and checkpoint RDDs —

@@ -85,6 +85,18 @@ class HnswSpec extends AnyFunSuite {
     }
   }
 
+  test("kernel: a zero cosine query against a zero vector reads finite distances") {
+    // node 0 is the zero vector; ef above n visits and keeps every node,
+    // so a NaN distance (NaN sorts last) would show among the k = n
+    val n = 41; val dim = 16
+    val flat = (Array.fill(dim)(0f) +: corpus(n - 1, dim)).flatten
+    val g = new HnswGraph(flat, dim, n, HnswParams(m = 8, efConstruction = 32)).build()
+    val r = g.search(new Array[Float](dim), n, 64)
+    assert(r.length == n)
+    assert(r.forall { case (_, d) => !d.isNaN && !d.isInfinite }, r.toSeq.toString)
+    assert(r.find(_._1 == 0).map(_._2).contains(1.0), r.toSeq.toString)
+  }
+
   test("sharded HNSW recall@10 meets Vamana's at equal search budget (ef=beam=64)") {
     val dir = SparkSpecBase.sf001
     val hnsw = HnswIndex.hnswRecall(spark, dir)
