@@ -1,7 +1,8 @@
 package graft.index
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.DataFrame
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental index construction from a vector stream.
@@ -99,18 +100,12 @@ object StreamingIndex {
     * [[VamanaIndex.buildCapped]] so a skewed accumulated stream cannot
     * produce an oversized merged shard.
     *
-    * The activate/rollback swap below uses LOCAL-filesystem renames;
-    * on an object store, compact to a fresh path and repoint serving
-    * instead (renameTo fails loudly there, never silently).
-    *
     * `filesDir`, when set, additionally exports the compacted index
     * to the sharded-files serving tier ([[SingleFileIndex
     * .exportSharded]]: one reference-layout file per shard plus a
     * routing manifest) — the ingest → compact → serve lifecycle can
     * then end at the disk-resident path ([[SingleFileIndex
-    * .serveSharded]]) instead of the parquet tier. The export reads
-    * the JUST-ACTIVATED parquet back (not the pre-swap lineage), so
-    * the files tier derives from exactly what `path` now serves.
+    * .serveSharded]]) instead of the parquet tier.
     *
     * `overlap > 1` compacts to the OVERLAPPED build ([[VamanaIndex
     * .buildOverlappedCapped]]: every non-seed vector in its `overlap`
@@ -125,9 +120,13 @@ object StreamingIndex {
     * exactly the Voronoi-straggler shape the cap exists for, and the
     * split factor flows into [[VamanaIndex.save]] /
     * [[SingleFileIndex.exportSharded]] so primary pivot sampling
-    * groups sibling sub-shards by parent cell. */
+    * groups sibling sub-shards by parent cell.
+    *
+    * One [[rewrite]] transaction through `$path-compact.tmp`: the
+    * tombstone log retires with the swap, and a crash leaves the old
+    * index at `path` (or, between the swap's renames, at `$path-old`). */
   def compact(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       params: VamanaParams,
       numShards: Int,
@@ -148,8 +147,7 @@ object StreamingIndex {
       .agg(expr("max_by(embedding, shard)").as("embedding"))
     // drop tombstoned vectors for good — an anti-join (not an isin
     // filter) so a large accumulated delete log shuffles instead of
-    // broadcasting through the driver; the log itself retires with
-    // the old directory in the swap below
+    // broadcasting through the driver
     val vectors =
       if (!tombstoneLogExists(spark, path)) all
       else all.join(spark.read.parquet(s"$path/tombstones").select(col("vec_id")),
@@ -166,19 +164,8 @@ object StreamingIndex {
       else if (capFactor > 0)
         (VamanaIndex.buildCapped(vectors, params, numShards, capFactor), 1)
       else (VamanaIndex.build(vectors, params, numShards), 1)
-    // write to a temp location first: build reads lazily from `path`.
-    // On save failure (e.g. every vector tombstoned → empty index)
-    // remove the partial temp dir so retries start clean.
-    val tmp = new java.io.File(s"$path-compacting")
-    try VamanaIndex.save(rebuilt, params, tmp.getPath, split = split)
-    catch { case e: Throwable =>
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp); throw e
-    }
-    activateSwap(path, tmp, "compact")
-    filesDir.foreach { fd =>
-      SingleFileIndex.exportSharded(VamanaIndex.load(spark, path), params, fd,
-        split = split)
-    }
+    rewrite(spark, path, "compact", params, split, filesDir, carryLog = false,
+      applied = None, inserts = 0)(rebuilt)
   }
 
   /** In-place delete merge — the published FreshDiskANN §4 merge
@@ -196,47 +183,313 @@ object StreamingIndex {
     * corpus and delete set) and the job-count relation (no build job
     * in the merge path).
     *
-    * Spark shape: the tombstone set broadcasts (sorted primitive
-    * longs, the [[searchLive]] representation) and the patch runs as
-    * one `mapPartitions` over the shard-partitioned graph — neighbor
-    * lists are intra-shard by construction, so no shuffle beyond the
-    * shard re-cluster [[VamanaIndex.load]] already does. Logs above
-    * [[BroadcastTombstoneLimit]] should fall back to [[compact]]
-    * (required here: at that accumulation the paper itself schedules
-    * the background full merge).
+    * [[patchInPlace]] with the log and no batch: the tombstone set
+    * broadcasts and the patch is one `mapPartitions` over the
+    * shard-partitioned graph. Logs above [[BroadcastTombstoneLimit]]
+    * fall back to [[compact]] (required here: at that accumulation
+    * the paper itself schedules the background full merge).
     *
-    * The same activate/rollback swap as [[compact]] (local-filesystem
-    * renames; on an object store, merge to a fresh path and repoint).
-    * The tombstone log retires with the swap. */
-  def merge(
-      spark: org.apache.spark.sql.SparkSession,
+    * One [[rewrite]] transaction through `$path-merge.tmp`: the log
+    * retires with the swap, and a crash leaves the old index and its
+    * log at `path` (or, between the swap's renames, at `$path-old`). */
+  def merge(spark: SparkSession, path: String, params: VamanaParams): Unit =
+    patchInPlace(spark, path, params, "merge",
+      Some(loadSortedTombstones(spark, path, "merge")), Array.empty, Int.MaxValue)
+
+  /** One insert-merge batch at or under this row count rides the
+    * driver/broadcast (ids + vectors — a 100k×128-dim batch is
+    * ~51 MB); bulk loads past it are what the segment tier
+    * ([[ingest]]) and [[compact]] exist for. */
+  val InsertMergeBatchLimit: Long = 100000L
+
+  /** In-place INSERT merge — the other half of the FreshDiskANN
+    * lifecycle (Singh et al., arXiv:2105.09613 §4.1 Insert phase;
+    * the delete half is [[merge]]): a small batch of new vectors is
+    * absorbed into the LIVE graph with no rebuild. Per new point p,
+    * in the paper's recipe: greedy search from the entry point
+    * collects the visited candidate set V; p's out-list =
+    * robustPrune(p, V); p back-links into each chosen neighbor, and
+    * any list pushed past the slack bound is α-re-pruned to
+    * `maxDegree`. Reference anchor: the same single-graph insert the
+    * repo cites at lib.rs:1140-1279 (search + prune), applied
+    * incrementally instead of at build.
+    *
+    * [[patchInPlace]] with the batch and the log left in force: the
+    * batch broadcasts (bounded by [[InsertMergeBatchLimit]]), each
+    * vector routes to ONE shard by the index's own persisted routing,
+    * and shards that receive no inserts pass their rows through
+    * UNTOUCHED (byte-identity pinned in InsertMergeSpec). Inserts
+    * apply sequentially in vec_id order inside a shard, so later
+    * points link to earlier ones — deterministic, and faithful to the
+    * paper's one-at-a-time semantics. A batch id already in the
+    * index, tombstoned or not, is rejected: re-inserting a deleted id
+    * takes [[consolidate]].
+    *
+    * On an OVERLAPPED index the new points land primary-only (one
+    * shard); they regain boundary replicas at the next [[compact]].
+    *
+    * One [[rewrite]] transaction through `$path-insertMerge.tmp`: the
+    * tombstone log is copied across the swap (deletes and inserts
+    * compose), and a crash leaves the old index at `path` (or, between
+    * the swap's renames, at `$path-old`). */
+  def insertMerge(
+      spark: SparkSession,
       path: String,
-      params: VamanaParams): Unit = {
+      inserts: DataFrame,
+      params: VamanaParams,
+      searchBeamWidth: Int = 0): Unit =
+    patchInPlace(spark, path, params, "insertMerge", None, sortedBatch(inserts),
+      Int.MaxValue, searchBeamWidth)
+
+  /** The full FreshDiskANN StreamingMerge (Singh et al.,
+    * arXiv:2105.09613 §4.2): apply the accumulated tombstone log AND
+    * an insert batch in ONE scan of the graph — the paper's
+    * background merge runs its delete phase then its insert phase
+    * over the same pass. At scale this halves the graph I/O of
+    * [[merge]] followed by [[insertMerge]] (each is a full
+    * load + patch + save of its own), and it unlocks the lifecycle
+    * move the two-step composition cannot express: an insert carrying
+    * a TOMBSTONED id is legal RE-INSERTION (delete x, later insert a
+    * new vector under x — the delete patch removes the old node
+    * before the insert phase links the new one), where
+    * [[insertMerge]] alone must reject the id as a collision.
+    *
+    * Degenerate forms are spec-pinned row-identical to the
+    * single-phase operators (ConsolidateSpec): empty log ≡
+    * [[insertMerge]] (same pivots — no intermediate save exists to
+    * re-sample from), empty batch ≡ [[merge]]. A shard left EMPTY by
+    * the delete phase can still receive inserts: they seed a fresh
+    * chain ([[insertIntoShard]]'s empty-group path). Shards touching
+    * no delete and receiving no insert pass through byte-identical.
+    * Past [[BroadcastTombstoneLimit]] or [[InsertMergeBatchLimit]]
+    * the paper itself schedules the full rebuild, i.e. [[compact]].
+    *
+    * One [[rewrite]] transaction through `$path-consolidate.tmp`: the
+    * log retires with the swap, `filesDir` re-exports the sharded-files
+    * tier as in [[compact]], and a crash leaves the old index and its
+    * log at `path` (or, between the swap's renames, at `$path-old`). */
+  def consolidate(
+      spark: SparkSession,
+      path: String,
+      inserts: DataFrame,
+      params: VamanaParams,
+      searchBeamWidth: Int = 0,
+      filesDir: Option[String] = None): Unit =
+    patchInPlace(spark, path, params, "consolidate",
+      Some(loadSortedTombstones(spark, path, "consolidate")), sortedBatch(inserts),
+      Int.MaxValue, searchBeamWidth, filesDir)
+
+  /** Absorb accumulated streaming SEGMENTS into the main graph in
+    * one pass — the background job the FreshDiskANN paper actually
+    * runs (§4.2: the in-memory temp index the stream lands in is
+    * periodically merged into the long-term index via the insert
+    * phase; our temp tier is [[ingest]]'s segment-per-batch shards).
+    * Shards at id ≥ `mainShards` are torn down and their LIVE
+    * vectors re-inserted into the main shards (segment-internal
+    * neighbor lists discard — exactly the paper's temp-index merge,
+    * where temp-graph edges never survive into the LTI), while the
+    * tombstone log delete-patches the main graph in the SAME scan.
+    * The result is a single-tier index at segment-free serving cost,
+    * for one graph scan + a bounded broadcast instead of
+    * [[compact]]'s full rebuild.
+    *
+    * `mainShards` is the caller's build/compact shard count — shards
+    * `[0, mainShards)` are the LTI; everything at or past it is
+    * segment tier. Row-identity with [[consolidate]] run on the
+    * main-only index with the segment vectors as the batch is
+    * spec-pinned (AbsorbSpec). Segment volume past
+    * [[InsertMergeBatchLimit]] (or a log past
+    * [[BroadcastTombstoneLimit]]) is what [[compact]] is for.
+    *
+    * One [[rewrite]] transaction through `$path-absorbSegments.tmp`:
+    * the log retires with the swap, `filesDir` re-exports as in
+    * [[compact]], and a crash leaves the old index and its log at
+    * `path` (or, between the swap's renames, at `$path-old`). */
+  def absorbSegments(
+      spark: SparkSession,
+      path: String,
+      params: VamanaParams,
+      mainShards: Int,
+      searchBeamWidth: Int = 0,
+      filesDir: Option[String] = None): Unit = {
+    import org.apache.spark.sql.functions.col
+    require(mainShards > 0 && mainShards <= ShardsPerBatchBase,
+      s"absorbSegments: mainShards must be in [1, $ShardsPerBatchBase] — " +
+        "segment shard ids start at ShardsPerBatchBase")
+    val tomb = loadSortedTombstones(spark, path, "absorbSegments")
+    // a tombstoned segment vector simply never re-inserts — its
+    // delete completes here, with no main-graph patch needed
+    val batch = sortedBatch(VamanaIndex.load(spark, path).filter(col("shard") >= mainShards))
+      .filter { case (id, _) => java.util.Arrays.binarySearch(tomb, id) < 0 }
+    patchInPlace(spark, path, params, "absorbSegments", Some(tomb), batch,
+      mainShards, searchBeamWidth, filesDir)
+  }
+
+  /** The one in-place patch behind [[merge]], [[insertMerge]],
+    * [[consolidate]] and [[absorbSegments]] — FreshDiskANN's
+    * StreamingMerge (arXiv:2105.09613 §4): one `mapPartitions` over
+    * the shard-partitioned graph runs the delete phase
+    * ([[deletePatchShard]]) then the insert phase
+    * ([[insertIntoShard]]) per shard, with no shuffle beyond the
+    * shard re-cluster [[VamanaIndex.load]] already does, and one
+    * [[rewrite]] saves and swaps the result.
+    *
+    *  - `tomb`: `Some(sorted log)` applies the log, which retires with
+    *    the swap; `None` leaves tombstoned rows in the graph and
+    *    carries the log across the swap.
+    *  - `batch`: sorted by vec_id, at most [[InsertMergeBatchLimit]]
+    *    rows, one vector per id, no id live in a shard below `bound`
+    *    (with `None`, no id in the index at all: only the delete phase
+    *    frees a tombstoned id for re-insertion). Each vector routes to
+    *    its nearest main shard below `min(bound, ShardsPerBatchBase)`
+    *    by the persisted routing ([[mainRouteTables]]).
+    *  - `bound`: shards at or past it tear down (the segment tier
+    *    under [[absorbSegments]]; unbounded for the others).
+    *
+    * No tombstone and an empty batch is a no-op. Shards touching no
+    * delete and receiving no insert pass through byte-identical. */
+  private def patchInPlace(spark: SparkSession, path: String, params: VamanaParams,
+      op: String, tomb: Option[Array[Long]], batch: Array[(Long, Array[Float])],
+      bound: Int, searchBeamWidth: Int = 0, filesDir: Option[String] = None): Unit = {
+    import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
-    val ids = loadSortedTombstones(spark, path, "merge")
-    if (ids.isEmpty) return
-    val bc = spark.sparkContext.broadcast(ids)
+    val deletes = tomb.getOrElse(Array.empty[Long])
+    if (deletes.isEmpty && batch.isEmpty) return
+    require(batch.length <= InsertMergeBatchLimit,
+      s"$op: ${batch.length} vectors to insert exceed $InsertMergeBatchLimit — " +
+        "run compact(); bulk loads belong in ingest()'s segment tier")
+    require(batch.map(_._1).distinct.length == batch.length,
+      s"$op: duplicate vec_ids among the vectors to insert — keep one vector " +
+        "per id (compact() collapses an id ingested twice to the latest batch's copy)")
+    val meta = metaOf(path)
+    // id-collision check: a colliding id would alias two vectors under
+    // one node and corrupt neighbor remapping silently. It stays
+    // bounded at any clash size: tombstone exclusion is an anti-join
+    // and only the first few offenders reach the driver
+    if (batch.nonEmpty) {
+      val inIndex = VamanaIndex.load(spark, path).filter(col("shard") < bound)
+        .join(broadcast(batch.map(_._1).toSeq.toDF("vec_id")), Seq("vec_id"), "left_semi")
+        .select(col("vec_id"))
+      val live =
+        if (deletes.isEmpty) inIndex
+        else inIndex.join(spark.read.parquet(s"$path/tombstones").select(col("vec_id")),
+          Seq("vec_id"), "left_anti")
+      val clash = live.limit(6).as[Long].collect()
+      require(clash.isEmpty,
+        s"$op: vec_ids to insert are already in the index " +
+          s"(${clash.take(5).mkString(", ")}${if (clash.length > 5) ", …" else ""}) — " +
+          (if (tomb.isEmpty) "re-inserting a deleted id takes consolidate()"
+          else "delete them first to re-insert"))
+    }
+    val byShard: Map[Int, Array[(Long, Array[Float])]] =
+      if (batch.isEmpty) Map.empty
+      else routeBatch(batch,
+        mainRouteTables(meta, path, op, math.min(bound, ShardsPerBatchBase)))
+    val tombB = spark.sparkContext.broadcast(deletes)
+    val insB = spark.sparkContext.broadcast(byShard)
     val metricName = params.metric
     val maxDeg = params.maxDegree
     val alpha = params.alpha
-    val split = splitOf(metaOf(path), path)
+    val slack = params.slackLimit
+    val bw = math.max(if (searchBeamWidth > 0) searchBeamWidth
+      else params.buildBeamWidth, params.maxDegree)
     val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
-      val tomb = bc.value
       val metric = Metric.byName(metricName)
-      @inline def deleted(id: Long): Boolean =
-        java.util.Arrays.binarySearch(tomb, id) >= 0
-      it.toArray.groupBy(_.shard).iterator.flatMap { case (_, group) =>
-        deletePatchShard(metric, maxDeg, alpha, group, deleted)
-      }
-    }.persist()
-    val tmp = new java.io.File(s"$path-merging")
-    try VamanaIndex.save(patched, params, tmp.getPath, split = split)
-    catch { case e: Throwable =>
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      patched.unpersist(); throw e
+      val tombA = tombB.value
+      it.toArray.groupBy(_.shard).iterator
+        .filter { case (shard, _) => shard < bound }
+        .flatMap { case (shard, group) =>
+          val live =
+            if (tombA.isEmpty) group
+            else deletePatchShard(metric, maxDeg, alpha, group,
+              id => java.util.Arrays.binarySearch(tombA, id) >= 0).toArray
+          insertIntoShard(metric, maxDeg, alpha, slack, bw, shard, live,
+            insB.value.getOrElse(shard, Array.empty[(Long, Array[Float])]))
+        }
     }
-    patched.unpersist()
-    activateSwap(path, tmp, "merge")
+    rewrite(spark, path, op, params, splitOf(meta, path), filesDir,
+      carryLog = tomb.isEmpty, applied = Some(deletes.length), inserts = batch.length)(patched)
+  }
+
+  private val lifecycleLog = org.slf4j.LoggerFactory.getLogger("graft.Lifecycle")
+
+  /** The one lifecycle transaction behind all five rewrites
+    * ([[compact]] and the [[patchInPlace]] family). `index` reads
+    * lazily from `path`, so it saves to the temp directory
+    * `$path-<op>.tmp` first — cleared beforehand, since a crashed
+    * earlier run's leftovers (a `tombstones/` log) would otherwise go
+    * live with the swap, and removed when the save fails. With
+    * `carryLog` the live tombstone log is copied in. Then
+    * [[activateSwap]] puts it live, and `filesDir` re-exports the
+    * sharded-files tier from the JUST-ACTIVATED parquet, so that tier
+    * derives from exactly what `path` now serves. A crash before the
+    * swap leaves the old index live; one between the swap's two
+    * renames leaves it at `$path-old`, which [[VamanaIndex.load]] then
+    * names.
+    *
+    * Logs one INFO line on `graft.Lifecycle` per operation, from
+    * values already on the driver: op, path, tombstones applied
+    * (`applied`; `all` for compact's uncounted anti-join), inserts
+    * routed, whether the log retired or was kept, and the wall ms
+    * of patch+save, swap and export. */
+  private def rewrite(spark: SparkSession, path: String, op: String,
+      params: VamanaParams, split: Int, filesDir: Option[String], carryLog: Boolean,
+      applied: Option[Int], inserts: Int)(index: Dataset[IndexRow]): Unit = {
+    val tmp = new java.io.File(s"$path-$op.tmp")
+    FileUtils.deleteQuietly(tmp)
+    val t0 = System.nanoTime()
+    try {
+      VamanaIndex.save(index, params, tmp.getPath, split = split)
+      if (carryLog && tombstoneLogExists(spark, path))
+        FileUtils.copyDirectory(new java.io.File(s"$path/tombstones"),
+          new java.io.File(tmp, "tombstones"))
+    } catch { case e: Throwable => FileUtils.deleteQuietly(tmp); throw e }
+    val t1 = System.nanoTime()
+    activateSwap(path, tmp, op)
+    val t2 = System.nanoTime()
+    filesDir.foreach { fd =>
+      SingleFileIndex.exportSharded(VamanaIndex.load(spark, path), params, fd,
+        split = split)
+    }
+    val t3 = System.nanoTime()
+    lifecycleLog.info(s"op=$op path=$path tombstones=${applied.fold("all")(_.toString)} " +
+      s"inserts=$inserts log=${if (carryLog) "kept" else "retired"} " +
+      s"patch_save_ms=${(t1 - t0) / 1000000} swap_ms=${(t2 - t1) / 1000000} " +
+      s"export_ms=${(t3 - t2) / 1000000}")
+  }
+
+  /** Activate-with-rollback swap of [[rewrite]] (local-filesystem
+    * renames; on an object store, write to a fresh path and repoint
+    * serving — renameTo fails loudly, never silently): the old index
+    * survives at `-old` until `tmp` is in place, each rename checked,
+    * failure restores the original and tells the operator the truth
+    * about where the data actually is. `rename` is a seam for
+    * failure-injection specs. */
+  private[graft] def activateSwap(path: String, tmp: java.io.File, op: String,
+      rename: (java.io.File, java.io.File) => Boolean = _ renameTo _): Unit = {
+    val live = new java.io.File(path)
+    val old = new java.io.File(s"$path-old")
+    FileUtils.deleteQuietly(old)
+    if (!rename(live, old))
+      throw new java.io.IOException(s"$op: could not move $path aside; replacement index left at $tmp")
+    if (!rename(tmp, live)) {
+      val restored = rename(old, live)
+      throw new java.io.IOException(
+        if (restored) s"$op: could not activate $tmp; original restored at $path"
+        else s"$op: could not activate $tmp AND rollback failed — " +
+          s"original index is at $old, nothing is live at $path")
+    }
+    FileUtils.deleteDirectory(old)
+  }
+
+  /** A DataFrame's (vec_id, embedding) rows on the driver, sorted by
+    * vec_id — the order the insert phase applies them in. */
+  private def sortedBatch(rows: Dataset[_]): Array[(Long, Array[Float])] = {
+    import org.apache.spark.sql.functions.col
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
   }
 
   /** The tombstone log as a sorted primitive array for broadcast
@@ -244,7 +497,7 @@ object StreamingIndex {
     * [[BroadcastTombstoneLimit]] is rejected — at that accumulation
     * the paper itself schedules the full merge, i.e. [[compact]].
     * Shared by the whole merge family. */
-  private def loadSortedTombstones(spark: org.apache.spark.sql.SparkSession,
+  private def loadSortedTombstones(spark: SparkSession,
       path: String, op: String): Array[Long] = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
@@ -321,8 +574,8 @@ object StreamingIndex {
     * deleted rows drop; a live row with a deleted neighbor re-prunes
     * over (live neighbors ∪ live out-neighbors of each deleted
     * neighbor); a row touching no deleted id passes through as the
-    * SAME object (the byte-identity DeleteSpec pins). Shared by
-    * [[merge]] and [[consolidate]]. */
+    * SAME object (the byte-identity DeleteSpec pins). The delete
+    * phase of [[patchInPlace]]. */
   private[index] def deletePatchShard(metric: Metric, maxDeg: Int,
       alpha: Double, group: Array[IndexRow],
       deleted: Long => Boolean): Iterator[IndexRow] = {
@@ -358,123 +611,6 @@ object StreamingIndex {
     }
   }
 
-  /** Activate-with-rollback swap shared by [[compact]] and the
-    * in-place merge family (local-filesystem renames; on an object
-    * store, write to a fresh path and repoint serving — renameTo
-    * fails loudly, never silently): the old index survives at `-old`
-    * until `tmp` is in place, each rename checked, failure restores
-    * the original and tells the operator the truth about where the
-    * data actually is. */
-  private def activateSwap(path: String, tmp: java.io.File, op: String): Unit = {
-    val live = new java.io.File(path)
-    val old = new java.io.File(s"$path-old")
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
-    if (!live.renameTo(old))
-      throw new java.io.IOException(s"$op: could not move $path aside; replacement index left at $tmp")
-    if (!tmp.renameTo(live)) {
-      val restored = old.renameTo(live)
-      throw new java.io.IOException(
-        if (restored) s"$op: could not activate $tmp; original restored at $path"
-        else s"$op: could not activate $tmp AND rollback failed — " +
-          s"original index is at $old, nothing is live at $path")
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(old)
-  }
-
-  /** One insert-merge batch at or under this row count rides the
-    * driver/broadcast (ids + vectors — a 100k×128-dim batch is
-    * ~51 MB); bulk loads past it are what the segment tier
-    * ([[ingest]]) and [[compact]] exist for. */
-  val InsertMergeBatchLimit: Long = 100000L
-
-  /** In-place INSERT merge — the other half of the FreshDiskANN
-    * lifecycle (Singh et al., arXiv:2105.09613 §4.1 Insert phase;
-    * the delete half is [[merge]]): a small batch of new vectors is
-    * absorbed into the LIVE graph with no rebuild. Per new point p,
-    * in the paper's recipe: greedy search from the entry point
-    * collects the visited candidate set V; p's out-list =
-    * robustPrune(p, V); p back-links into each chosen neighbor, and
-    * any list pushed past the slack bound is α-re-pruned to
-    * `maxDegree`. Reference anchor: the same single-graph insert the
-    * repo cites at lib.rs:1140-1279 (search + prune), applied
-    * incrementally instead of at build.
-    *
-    * Spark shape: the batch broadcasts (bounded by
-    * [[InsertMergeBatchLimit]]); each vector routes to ONE shard by
-    * the index's own persisted routing (pivot table when present,
-    * seed-centroid table otherwise — the same rule serving probes
-    * use), and the patch is one `mapPartitions` over the
-    * shard-partitioned graph: shards that receive no inserts pass
-    * their rows through UNTOUCHED (byte-identity pinned in
-    * InsertMergeSpec). Inserts apply sequentially in vec_id order
-    * inside a shard, so later points link to earlier ones —
-    * deterministic, and faithful to the paper's one-at-a-time
-    * semantics. Like [[merge]], the whole operation is one scan of
-    * the graph plus the save — linear in index size, independent of
-    * build cost.
-    *
-    * On an OVERLAPPED index the new points land primary-only (one
-    * shard); they regain boundary replicas at the next [[compact]].
-    * An existing tombstone log survives the swap (copied into the
-    * new directory) — deletes and inserts compose. */
-  def insertMerge(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      inserts: DataFrame,
-      params: VamanaParams,
-      searchBeamWidth: Int = 0): Unit = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val bw = math.max(if (searchBeamWidth > 0) searchBeamWidth
-      else params.buildBeamWidth, params.maxDegree)
-    val batch = inserts.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    if (batch.isEmpty) return
-    require(batch.length <= InsertMergeBatchLimit,
-      s"insertMerge: batch of ${batch.length} exceeds $InsertMergeBatchLimit — " +
-        "use ingest() (segment tier) or compact() for bulk loads")
-    require(batch.map(_._1).distinct.length == batch.length,
-      "insertMerge: duplicate vec_ids in the insert batch")
-    val meta = metaOf(path)
-    // id-collision check against the live index: one broadcast
-    // semi-join scan — a colliding id would otherwise alias two
-    // vectors under one node and corrupt neighbor remapping silently
-    val idsDf = batch.map(_._1).toSeq.toDF("vec_id")
-    val clash = VamanaIndex.load(spark, path)
-      .join(org.apache.spark.sql.functions.broadcast(idsDf), Seq("vec_id"), "left_semi")
-      .limit(1).count()
-    require(clash == 0, "insertMerge: batch contains vec_ids already in the index")
-    val byShard = routeBatch(batch,
-      mainRouteTables(meta, path, "insertMerge", ShardsPerBatchBase))
-    val insB = spark.sparkContext.broadcast(byShard)
-    val metricName = params.metric
-    val maxDeg = params.maxDegree
-    val alpha = params.alpha
-    val slack = params.slackLimit
-    val bwL = bw
-    val split = splitOf(meta, path)
-    val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
-      val metric = Metric.byName(metricName)
-      it.toArray.groupBy(_.shard).iterator.flatMap { case (shard, group) =>
-        insertIntoShard(metric, maxDeg, alpha, slack, bwL, shard, group,
-          insB.value.getOrElse(shard, Array.empty[(Long, Array[Float])]))
-      }
-    }.persist()
-    val tmp = new java.io.File(s"$path-inserting")
-    try VamanaIndex.save(patched, params, tmp.getPath, split = split)
-    catch { case e: Throwable =>
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      patched.unpersist(); throw e
-    }
-    patched.unpersist()
-    // deletes compose with inserts: carry the live tombstone log into
-    // the new directory so the swap never resurrects deleted ids
-    if (tombstoneLogExists(spark, path))
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(s"$path/tombstones"), new java.io.File(s"${tmp.getPath}/tombstones"))
-    activateSwap(path, tmp, "insertMerge")
-  }
-
   /** The FreshDiskANN §4.1 insert phase over ONE shard: each new
     * point, in vec_id order, gets out-list = robustPrune(visited set
     * of a greedy search from the shard entry), back-links into its
@@ -482,8 +618,8 @@ object StreamingIndex {
     * α-re-prunes. A shard receiving no inserts passes through
     * untouched (byte-identity InsertMergeSpec pins). `group` may be
     * EMPTY (a fully-deleted shard under [[consolidate]]): the first
-    * new point seeds a fresh chain and becomes the entry. Shared by
-    * [[insertMerge]] and [[consolidate]]. */
+    * new point seeds a fresh chain and becomes the entry. The insert
+    * phase of [[patchInPlace]]. */
   private[index] def insertIntoShard(metric: Metric, maxDeg: Int,
       alpha: Double, slack: Int, bwL: Int, shard: Int,
       group: Array[IndexRow],
@@ -571,235 +707,6 @@ object StreamingIndex {
     }
   }
 
-  /** The full FreshDiskANN StreamingMerge (Singh et al.,
-    * arXiv:2105.09613 §4.2): apply the accumulated tombstone log AND
-    * an insert batch in ONE scan of the graph — the paper's
-    * background merge runs its delete phase then its insert phase
-    * over the same pass. At scale this halves the graph I/O of
-    * [[merge]] followed by [[insertMerge]] (each is a full
-    * load + patch + save of its own), and it unlocks the lifecycle
-    * move the two-step composition cannot express: an insert carrying
-    * a TOMBSTONED id is legal RE-INSERTION (delete x, later insert a
-    * new vector under x — the delete patch removes the old node
-    * before the insert phase links the new one), where
-    * [[insertMerge]] alone must reject the id as a collision. The
-    * tombstone log retires with the swap: deletes were applied
-    * physically, exactly like [[merge]].
-    *
-    * Degenerate forms are spec-pinned row-identical to the
-    * single-phase operators (ConsolidateSpec): empty log ≡
-    * [[insertMerge]] (same pivots — no intermediate save exists to
-    * re-sample from), empty batch ≡ [[merge]]. A shard left EMPTY by
-    * the delete phase can still receive inserts: they seed a fresh
-    * chain ([[insertIntoShard]]'s empty-group path). Shards touching
-    * no delete and receiving no insert pass through byte-identical.
-    *
-    * Spark shape: tombstones and the batch both broadcast (bounded by
-    * [[BroadcastTombstoneLimit]] / [[InsertMergeBatchLimit]] — past
-    * either bound the paper itself schedules the full rebuild, i.e.
-    * [[compact]]); the combined patch is one `mapPartitions` over the
-    * shard-partitioned graph, no shuffle beyond the shard re-cluster
-    * [[VamanaIndex.load]] already does. `filesDir`, when set,
-    * re-exports the consolidated index to the sharded-files serving
-    * tier from the just-activated parquet (same contract as
-    * [[compact]]'s `filesDir`). */
-  def consolidate(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      inserts: DataFrame,
-      params: VamanaParams,
-      searchBeamWidth: Int = 0,
-      filesDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val bw = math.max(if (searchBeamWidth > 0) searchBeamWidth
-      else params.buildBeamWidth, params.maxDegree)
-    val tomb = loadSortedTombstones(spark, path, "consolidate")
-    val batch = inserts.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    if (batch.isEmpty && tomb.isEmpty) return
-    require(batch.length <= InsertMergeBatchLimit,
-      s"consolidate: batch of ${batch.length} exceeds $InsertMergeBatchLimit — " +
-        "use ingest() (segment tier) or compact() for bulk loads")
-    require(batch.map(_._1).distinct.length == batch.length,
-      "consolidate: duplicate vec_ids in the insert batch")
-    val meta = metaOf(path)
-    // id-collision check against the POST-DELETE live set: a batch id
-    // that is tombstoned is re-insertion (allowed); one that is live
-    // would alias two vectors under one node (rejected). The check
-    // stays bounded at any clash size: tombstone exclusion is an
-    // anti-join and only the first few offenders reach the driver
-    if (batch.nonEmpty) {
-      val idsDf = batch.map(_._1).toSeq.toDF("vec_id")
-      val clashAll = VamanaIndex.load(spark, path)
-        .join(org.apache.spark.sql.functions.broadcast(idsDf), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"))
-      val clashLive =
-        if (tomb.isEmpty) clashAll
-        else clashAll.join(
-          spark.read.parquet(s"$path/tombstones").select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      val clash = clashLive.limit(6).as[Long].collect()
-      require(clash.isEmpty,
-        s"consolidate: batch contains LIVE vec_ids (${clash.take(5).mkString(", ")}" +
-          s"${if (clash.length > 5) ", …" else ""}) — delete them first to re-insert")
-    }
-    val byShard: Map[Int, Array[(Long, Array[Float])]] =
-      if (batch.isEmpty) Map.empty
-      else routeBatch(batch,
-        mainRouteTables(meta, path, "consolidate", ShardsPerBatchBase))
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val insB = spark.sparkContext.broadcast(byShard)
-    val metricName = params.metric
-    val maxDeg = params.maxDegree
-    val alpha = params.alpha
-    val slack = params.slackLimit
-    val bwL = bw
-    val split = splitOf(meta, path)
-    val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
-      val metric = Metric.byName(metricName)
-      val tombA = tombB.value
-      @inline def deleted(id: Long): Boolean =
-        java.util.Arrays.binarySearch(tombA, id) >= 0
-      it.toArray.groupBy(_.shard).iterator.flatMap { case (shard, group) =>
-        val live =
-          if (tombA.isEmpty) group
-          else deletePatchShard(metric, maxDeg, alpha, group, deleted).toArray
-        insertIntoShard(metric, maxDeg, alpha, slack, bwL, shard, live,
-          insB.value.getOrElse(shard, Array.empty[(Long, Array[Float])]))
-      }
-    }.persist()
-    val tmp = new java.io.File(s"$path-consolidating")
-    try VamanaIndex.save(patched, params, tmp.getPath, split = split)
-    catch { case e: Throwable =>
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      patched.unpersist(); throw e
-    }
-    patched.unpersist()
-    // NO tombstone carry-over: the delete phase applied the log
-    activateSwap(path, tmp, "consolidate")
-    // like compact: a files-tier deployment re-exports from the
-    // JUST-ACTIVATED parquet, so the disk-resident serving path never
-    // lags the consolidated graph
-    filesDir.foreach { fd =>
-      SingleFileIndex.exportSharded(VamanaIndex.load(spark, path), params, fd,
-        split = split)
-    }
-  }
-
-  /** Absorb accumulated streaming SEGMENTS into the main graph in
-    * one pass — the background job the FreshDiskANN paper actually
-    * runs (§4.2: the in-memory temp index the stream lands in is
-    * periodically merged into the long-term index via the insert
-    * phase; our temp tier is [[ingest]]'s segment-per-batch shards).
-    * Shards at id ≥ `mainShards` are torn down and their LIVE
-    * vectors re-inserted into the main shards (segment-internal
-    * neighbor lists discard — exactly the paper's temp-index merge,
-    * where temp-graph edges never survive into the LTI), while the
-    * tombstone log delete-patches the main graph in the SAME scan;
-    * the log retires with the swap. The result is a single-tier
-    * index at segment-free serving cost, for one graph scan + a
-    * bounded broadcast instead of [[compact]]'s full rebuild.
-    *
-    * `mainShards` is the caller's build/compact shard count — shards
-    * `[0, mainShards)` are the LTI; everything at or past it is
-    * segment tier. Row-identity with [[consolidate]] run on the
-    * main-only index with the segment vectors as the batch is
-    * spec-pinned (AbsorbSpec). Segment volume past
-    * [[InsertMergeBatchLimit]] (or a log past
-    * [[BroadcastTombstoneLimit]]) is what [[compact]] is for. */
-  def absorbSegments(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      params: VamanaParams,
-      mainShards: Int,
-      searchBeamWidth: Int = 0,
-      filesDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    require(mainShards > 0 && mainShards <= ShardsPerBatchBase,
-      s"absorbSegments: mainShards must be in [1, $ShardsPerBatchBase] — " +
-        "segment shard ids start at ShardsPerBatchBase")
-    val bw = math.max(if (searchBeamWidth > 0) searchBeamWidth
-      else params.buildBeamWidth, params.maxDegree)
-    val tomb = loadSortedTombstones(spark, path, "absorbSegments")
-    // a tombstoned segment vector simply never re-inserts — its
-    // delete completes here, with no main-graph patch needed
-    val batch = VamanaIndex.load(spark, path)
-      .filter(col("shard") >= mainShards)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-      .filter { case (id, _) => java.util.Arrays.binarySearch(tomb, id) < 0 }
-      .sortBy(_._1)
-    if (batch.isEmpty && tomb.isEmpty) return
-    require(batch.length <= InsertMergeBatchLimit,
-      s"absorbSegments: ${batch.length} live segment vectors exceed " +
-        s"$InsertMergeBatchLimit — run compact() instead")
-    require(batch.map(_._1).distinct.length == batch.length,
-      "absorbSegments: duplicate vec_ids across segments — the stream " +
-        "ingested an id twice; run compact() (collapses to the latest " +
-        "batch's copy) or delete one copy first")
-    val meta = metaOf(path)
-    // the check stays bounded at any clash size: tombstone exclusion
-    // is an anti-join and only the first few offenders reach the driver
-    if (batch.nonEmpty) {
-      val idsDf = batch.map(_._1).toSeq.toDF("vec_id")
-      val clashAll = VamanaIndex.load(spark, path)
-        .filter(col("shard") < mainShards)
-        .join(org.apache.spark.sql.functions.broadcast(idsDf), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"))
-      val clashLive =
-        if (tomb.isEmpty) clashAll
-        else clashAll.join(
-          spark.read.parquet(s"$path/tombstones").select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      val clash = clashLive.limit(6).as[Long].collect()
-      require(clash.isEmpty,
-        s"absorbSegments: segment vec_ids already LIVE in the main graph " +
-          s"(${clash.take(5).mkString(", ")}${if (clash.length > 5) ", …" else ""})")
-    }
-    val byShard: Map[Int, Array[(Long, Array[Float])]] =
-      if (batch.isEmpty) Map.empty
-      else routeBatch(batch,
-        mainRouteTables(meta, path, "absorbSegments", mainShards))
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val insB = spark.sparkContext.broadcast(byShard)
-    val metricName = params.metric
-    val maxDeg = params.maxDegree
-    val alpha = params.alpha
-    val slack = params.slackLimit
-    val bwL = bw
-    val mainN = mainShards
-    val split = splitOf(meta, path)
-    val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
-      val metric = Metric.byName(metricName)
-      val tombA = tombB.value
-      @inline def deleted(id: Long): Boolean =
-        java.util.Arrays.binarySearch(tombA, id) >= 0
-      it.toArray.groupBy(_.shard).iterator
-        .filter { case (shard, _) => shard < mainN } // segments tear down
-        .flatMap { case (shard, group) =>
-          val live =
-            if (tombA.isEmpty) group
-            else deletePatchShard(metric, maxDeg, alpha, group, deleted).toArray
-          insertIntoShard(metric, maxDeg, alpha, slack, bwL, shard, live,
-            insB.value.getOrElse(shard, Array.empty[(Long, Array[Float])]))
-        }
-    }.persist()
-    val tmp = new java.io.File(s"$path-absorbing")
-    try VamanaIndex.save(patched, params, tmp.getPath, split = split)
-    catch { case e: Throwable =>
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      patched.unpersist(); throw e
-    }
-    patched.unpersist()
-    activateSwap(path, tmp, "absorbSegments")
-    filesDir.foreach { fd =>
-      SingleFileIndex.exportSharded(VamanaIndex.load(spark, path), params, fd,
-        split = split)
-    }
-  }
-
   /** One maintenance decision for a continuously-ingested index —
     * the scheduling rule FreshDiskANN's lifecycle implies and
     * BASELINE's "One-pass consolidate vs two-pass vs rebuild"
@@ -845,6 +752,7 @@ object StreamingIndex {
     // the decision pass reads the graph parquet directly (vec_id +
     // the shard partition column) instead of VamanaIndex.load — the
     // inspection must not pay load's shard re-cluster shuffle
+    VamanaIndex.requireNoInterruptedSwap(spark, path)
     val graph = spark.read.parquet(s"$path/graph")
       .select(col("vec_id"), col("shard"))
     val logExists = tombstoneLogExists(spark, path)

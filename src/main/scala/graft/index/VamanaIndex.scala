@@ -643,38 +643,39 @@ object VamanaIndex {
     // an unpersisted lazily-built index isn't rebuilt each time
     val wasPersisted = index.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     if (!wasPersisted) index.persist()
-    // a zero-row index used to die cryptically at head()/getInt —
-    // reachable through a legitimate delete-everything-then-compact
-    require(!index.isEmpty,
-      s"cannot save an empty index to $path — if every vector was " +
-        "tombstoned, delete the index directory instead of compacting it")
-    index.write.mode("overwrite").partitionBy("shard").parquet(s"$path/graph")
-    val stats = index.agg(
-      count(lit(1)), max(size(col("neighbors"))), countDistinct(col("shard"))).head()
-    val dim = index.head().embedding.length
-    val routingJson = routingTable(index).map { case (shard, seed) =>
-      s"""{"shard":$shard,"seed":[${seed.mkString(",")}]}"""
-    }.mkString("[", ",", "]")
-    // overlapped indexes (replicated ids) sample pivots from primary
-    // rows only — replica-polluted samples scramble the shard ranking
-    val pivots =
-      if (hasReplicas(index)) pivotTablePrimary(index, split = split)
-      else pivotTable(index)
-    val pivotsJson = pivots.map { case (shard, pv) =>
-      s"""{"shard":$shard,"vecs":[${pv.map(_.mkString("[", ",", "]")).mkString(",")}]}"""
-    }.mkString("[", ",", "]")
-    val meta =
-      s"""{"format":"graft-vamana-v1","dim":$dim,"num_vectors":${stats.getLong(0)},
-         |"max_degree_observed":${stats.getInt(1)},"num_shards":${stats.getLong(2)},
-         |"metric":"${params.metric}","max_degree":${params.maxDegree},
-         |"build_beam_width":${params.buildBeamWidth},"alpha":${params.alpha},
-         |"passes":${params.passes},"extra_seeds":${params.extraSeeds},"seed":${params.seed},
-         |"split":$split,"serving":$servingScheduleJson,
-         |"routing":$routingJson,"pivots":$pivotsJson}"""
-        .stripMargin.replace("\n", "")
-    Files.createDirectories(Paths.get(path))
-    Files.writeString(Paths.get(s"$path/metadata.json"), meta)
-    if (!wasPersisted) index.unpersist()
+    try {
+      // a zero-row index used to die cryptically at head()/getInt —
+      // reachable through a legitimate delete-everything-then-compact
+      require(!index.isEmpty,
+        s"cannot save an empty index to $path — if every vector was " +
+          "tombstoned, delete the index directory instead of compacting it")
+      index.write.mode("overwrite").partitionBy("shard").parquet(s"$path/graph")
+      val stats = index.agg(
+        count(lit(1)), max(size(col("neighbors"))), countDistinct(col("shard"))).head()
+      val dim = index.head().embedding.length
+      val routingJson = routingTable(index).map { case (shard, seed) =>
+        s"""{"shard":$shard,"seed":[${seed.mkString(",")}]}"""
+      }.mkString("[", ",", "]")
+      // overlapped indexes (replicated ids) sample pivots from primary
+      // rows only — replica-polluted samples scramble the shard ranking
+      val pivots =
+        if (hasReplicas(index)) pivotTablePrimary(index, split = split)
+        else pivotTable(index)
+      val pivotsJson = pivots.map { case (shard, pv) =>
+        s"""{"shard":$shard,"vecs":[${pv.map(_.mkString("[", ",", "]")).mkString(",")}]}"""
+      }.mkString("[", ",", "]")
+      val meta =
+        s"""{"format":"graft-vamana-v1","dim":$dim,"num_vectors":${stats.getLong(0)},
+           |"max_degree_observed":${stats.getInt(1)},"num_shards":${stats.getLong(2)},
+           |"metric":"${params.metric}","max_degree":${params.maxDegree},
+           |"build_beam_width":${params.buildBeamWidth},"alpha":${params.alpha},
+           |"passes":${params.passes},"extra_seeds":${params.extraSeeds},"seed":${params.seed},
+           |"split":$split,"serving":$servingScheduleJson,
+           |"routing":$routingJson,"pivots":$pivotsJson}"""
+          .stripMargin.replace("\n", "")
+      Files.createDirectories(Paths.get(path))
+      Files.writeString(Paths.get(s"$path/metadata.json"), meta)
+    } finally if (!wasPersisted) index.unpersist()
   }
 
   /** Parse the persisted routing table back out of metadata.json —
@@ -746,8 +747,31 @@ object VamanaIndex {
     if (n != null) n.toString else servingScheduleJson
   }
 
+  /** `path` missing beside an existing `$path-old` is a
+    * [[StreamingIndex]] lifecycle swap interrupted between its two
+    * renames: fail naming where the index went (the pre-operation
+    * index at `-old`, its replacement at any `$path-<op>.tmp`)
+    * instead of Spark's bare PATH_NOT_FOUND on `graph`. One `exists`
+    * on the normal path. */
+  private[graft] def requireNoInterruptedSwap(spark: SparkSession, path: String): Unit = {
+    val given = new org.apache.hadoop.fs.Path(path)
+    val fs = given.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = fs.makeQualified(given)
+    val old = new org.apache.hadoop.fs.Path(s"$live-old")
+    if (!fs.exists(live) && fs.exists(old)) {
+      val tmps = fs.listStatus(live.getParent).map(_.getPath).filter { p =>
+        p.getName.startsWith(s"${live.getName}-") && p.getName.endsWith(".tmp")
+      }
+      throw new java.io.IOException(s"no index at $path: a lifecycle swap was " +
+        s"interrupted between its renames — the pre-operation index is at $old" +
+        (if (tmps.isEmpty) "" else s", its replacement at ${tmps.mkString(", ")}") +
+        s"; move one of them to $path")
+    }
+  }
+
   def load(spark: SparkSession, path: String): Dataset[IndexRow] = {
     import spark.implicits._
+    requireNoInterruptedSwap(spark, path)
     val raw = spark.read.parquet(s"$path/graph")
       .select("vec_id", "embedding", "shard", "neighbors").as[IndexRow]
     // re-cluster so each shard's graph is whole within a task (a shard

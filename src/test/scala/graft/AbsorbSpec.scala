@@ -14,7 +14,10 @@ import graft.index.{IndexRow, StreamingIndex, VamanaIndex, VamanaParams}
   * tombstoned SEGMENT vector completes its delete by never
   * re-inserting — and absorbed ids serve from the single-tier
   * result; (c) loud rejection of id corruption (duplicate segment
-  * ids, a segment id still live in the main graph). */
+  * ids, a segment id still live in the main graph); (d) the rest of
+  * the merge family on a segmented index: segments survive merge and
+  * consolidate delete-patched and insertMerge untouched, and inserts
+  * land in main shards only. */
 class AbsorbSpec extends AnyFunSuite {
   private lazy val spark = SparkSpecBase.spark
   import spark.implicits._
@@ -90,6 +93,49 @@ class AbsorbSpec extends AnyFunSuite {
     qs.foreach { case (id, _) =>
       assert(res.filter(_._1 == id).map(_._2).contains(id),
         s"absorbed $id not served from the merged graph") }
+  }
+
+  test("merge, insertMerge and consolidate keep segment shards: delete-patched or untouched, inserts to main") {
+    val segRows = seg.filter(_._1 % 10 == 0)
+    val ins = seg.filter(_._1 % 10 == 5)
+    val deadSeg = segRows.map(_._1).take(6)
+    val dead = deadSeg ++ base.map(_._1).filter(_ % 8 == 3).take(10)
+    type Rows = Array[(Long, Int, Seq[Long], Seq[Float])]
+    def segOf(rows: Rows): Rows = rows.filter(_._2 >= 1000)
+    def run(name: String)(op: String => Unit): (Rows, Rows) = {
+      val p = freshIndex(s"/tmp/graft_absorb_segkeep_$name")
+      appendSegment(p, segRows, 1000)
+      val before = rowsOf(p)
+      op(p)
+      (before, rowsOf(p))
+    }
+    def assertDeletePatched(name: String, before: Rows, after: Rows): Unit = {
+      val kept = segOf(after)
+      assert(kept.map(_._1).sameElements(segRows.map(_._1).filterNot(deadSeg.contains)),
+        s"$name: live segment rows lost or deleted ones kept")
+      assert(kept.forall(_._3.forall(n => !dead.contains(n))), s"$name: segment row points at a deleted id")
+      val untouched = segOf(before).filter(_._3.forall(n => !dead.contains(n)))
+        .filterNot(r => dead.contains(r._1))
+      assert(untouched.forall(kept.contains), s"$name: a segment row touching no delete changed")
+    }
+    val (mBefore, mAfter) = run("merge") { p =>
+      StreamingIndex.delete(spark, p, dead.toSeq)
+      StreamingIndex.merge(spark, p, params)
+    }
+    assertDeletePatched("merge", mBefore, mAfter)
+    val (iBefore, iAfter) = run("insert") { p =>
+      StreamingIndex.insertMerge(spark, p, ins.toSeq.toDF("vec_id", "embedding"), params)
+    }
+    assert(segOf(iAfter).sameElements(segOf(iBefore)), "insertMerge touched a segment row")
+    assert(iAfter.filter(r => ins.exists(_._1 == r._1)).forall(_._2 < 2) &&
+      ins.forall(i => iAfter.exists(_._1 == i._1)), "insertMerge inserts must land in main shards")
+    val (cBefore, cAfter) = run("consolidate") { p =>
+      StreamingIndex.delete(spark, p, dead.toSeq)
+      StreamingIndex.consolidate(spark, p, ins.toSeq.toDF("vec_id", "embedding"), params)
+    }
+    assertDeletePatched("consolidate", cBefore, cAfter)
+    assert(cAfter.filter(r => ins.exists(_._1 == r._1)).forall(_._2 < 2) &&
+      ins.forall(i => cAfter.exists(_._1 == i._1)), "consolidate inserts must land in main shards")
   }
 
   test("maintain picks the measured schedule: noop / absorb / compact by churn") {
