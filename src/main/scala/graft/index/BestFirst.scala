@@ -5,8 +5,9 @@ import java.util.{Arrays => JArrays}
 /** The engine's one best-first beam search (reference lib.rs:635-701
   * serving, lib.rs:1140-1198 build): greedy expansion from an entry
   * node over a graph given only as an adjacency fill and a per-row
-  * distance. [[VamanaGraph]] (build, serving, filtered serving),
-  * [[U8Graph]], [[MmapIndex]] and [[PqSearch]] all run this loop, so
+  * distance. [[VamanaGraph]] (build, the streaming index's insert,
+  * serving, filtered serving), [[U8Graph]], [[MmapIndex]] and
+  * [[PqSearch]] all run this loop, so
   * their result lists agree element for element whenever their
   * distances do.
   *

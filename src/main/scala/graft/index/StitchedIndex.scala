@@ -122,34 +122,13 @@ object StitchedIndex {
       }
       .toDF("vec_id", "embedding", "label", "shard")
     lab.unpersist(blocking = false)
-    // shard-exact placement + per-(label, cell) in-memory builds —
-    // [[VamanaIndex.buildAssigned]]'s tail shape, re-stated here
-    // because the label must ride the row type end to end (IndexRow
-    // has no label slot, and widening it would touch every serving
-    // tier). A fix to the shared tail's ordering/dim logic belongs in
-    // BOTH places — keep them in sync.
+    // shard-exact placement + per-(label, cell) in-memory builds; the
+    // label rides the row type end to end (IndexRow has no label slot)
     VamanaIndex.placeByShard(assigned, totalShards)
       .select(col("vec_id"), col("embedding"), col("label"), col("shard"))
       .as[(Long, Array[Float], Int, Int)]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        rows.groupBy(_._4).iterator.flatMap { case (shard, group) =>
-          val sorted = group.sortBy(_._1)
-          val label = sorted(0)._3
-          val n = sorted.length
-          val dim = if (n == 0) 0 else sorted(0)._2.length
-          val flat = new Array[Float](n * dim)
-          var i = 0
-          while (i < n) {
-            System.arraycopy(sorted(i)._2, 0, flat, i * dim, dim); i += 1
-          }
-          val g = new VamanaGraph(flat, dim, n, params).build()
-          sorted.indices.iterator.map { li =>
-            StitchedIndexRow(sorted(li)._1, sorted(li)._2, label, shard,
-              g.graph(li).map(l => sorted(l)._1))
-          }
-        }
-      }
+      .mapPartitions(VamanaIndex.buildShards(_, params)(_._4, _._1, _._2)(
+        (r, nbrs) => StitchedIndexRow(r._1, r._2, r._3, r._4, nbrs)))
   }
 
   /** Filtered top-k: a NORMAL beam over the target label's graphs

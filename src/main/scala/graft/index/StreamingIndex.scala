@@ -205,14 +205,13 @@ object StreamingIndex {
   /** In-place INSERT merge — the other half of the FreshDiskANN
     * lifecycle (Singh et al., arXiv:2105.09613 §4.1 Insert phase;
     * the delete half is [[merge]]): a small batch of new vectors is
-    * absorbed into the LIVE graph with no rebuild. Per new point p,
-    * in the paper's recipe: greedy search from the entry point
-    * collects the visited candidate set V; p's out-list =
-    * robustPrune(p, V); p back-links into each chosen neighbor, and
-    * any list pushed past the slack bound is α-re-pruned to
-    * `maxDegree`. Reference anchor: the same single-graph insert the
-    * repo cites at lib.rs:1140-1279 (search + prune), applied
-    * incrementally instead of at build.
+    * absorbed into the LIVE graph with no rebuild. Each new point p
+    * runs the build's own per-node step ([[VamanaGraph.insert]]): a
+    * beam search from the shard's entry logs every row it evaluates,
+    * p's list is their α-prune, p back-links into each chosen
+    * neighbor, and any list pushed past the slack bound is α-re-pruned
+    * to `maxDegree` (reference lib.rs:1140-1279 and 784-914, applied
+    * incrementally instead of at build).
     *
     * [[patchInPlace]] with the batch and the log left in force: the
     * batch broadcasts (bounded by [[InsertMergeBatchLimit]]), each
@@ -259,7 +258,7 @@ object StreamingIndex {
     * [[insertMerge]] (same pivots — no intermediate save exists to
     * re-sample from), empty batch ≡ [[merge]]. A shard left EMPTY by
     * the delete phase can still receive inserts: they seed a fresh
-    * chain ([[insertIntoShard]]'s empty-group path). Shards touching
+    * chain from the first new point ([[patchShard]]). Shards touching
     * no delete and receiving no insert pass through byte-identical.
     * Past [[BroadcastTombstoneLimit]] or [[InsertMergeBatchLimit]]
     * the paper itself schedules the full rebuild, i.e. [[compact]].
@@ -328,11 +327,12 @@ object StreamingIndex {
   /** The one in-place patch behind [[merge]], [[insertMerge]],
     * [[consolidate]] and [[absorbSegments]] — FreshDiskANN's
     * StreamingMerge (arXiv:2105.09613 §4): one `mapPartitions` over
-    * the shard-partitioned graph runs the delete phase
-    * ([[deletePatchShard]]) then the insert phase
-    * ([[insertIntoShard]]) per shard, with no shuffle beyond the
-    * shard re-cluster [[VamanaIndex.load]] already does, and one
-    * [[rewrite]] saves and swaps the result.
+    * the shard-partitioned graph runs the delete phase then the insert
+    * phase per shard ([[patchShard]]: [[VamanaGraph.repair]] and
+    * [[VamanaGraph.insert]], the build's own prune, search and
+    * back-link steps), with no shuffle beyond the shard re-cluster
+    * [[VamanaIndex.load]] already does, and one [[rewrite]] saves and
+    * swaps the result.
     *
     *  - `tomb`: `Some(sorted log)` applies the log, which retires with
     *    the swap; `None` leaves tombstoned rows in the graph and
@@ -387,24 +387,18 @@ object StreamingIndex {
         mainRouteTables(meta, path, op, math.min(bound, ShardsPerBatchBase)))
     val tombB = spark.sparkContext.broadcast(deletes)
     val insB = spark.sparkContext.broadcast(byShard)
-    val metricName = params.metric
-    val maxDeg = params.maxDegree
-    val alpha = params.alpha
-    val slack = params.slackLimit
     val bw = math.max(if (searchBeamWidth > 0) searchBeamWidth
       else params.buildBeamWidth, params.maxDegree)
     val patched = VamanaIndex.load(spark, path).mapPartitions { it =>
-      val metric = Metric.byName(metricName)
       val tombA = tombB.value
+      val deleted = (id: Long) => java.util.Arrays.binarySearch(tombA, id) >= 0
       it.toArray.groupBy(_.shard).iterator
         .filter { case (shard, _) => shard < bound }
         .flatMap { case (shard, group) =>
-          val live =
-            if (tombA.isEmpty) group
-            else deletePatchShard(metric, maxDeg, alpha, group,
-              id => java.util.Arrays.binarySearch(tombA, id) >= 0).toArray
-          insertIntoShard(metric, maxDeg, alpha, slack, bw, shard, live,
-            insB.value.getOrElse(shard, Array.empty[(Long, Array[Float])]))
+          val adds = insB.value.getOrElse(shard, Array.empty[(Long, Array[Float])])
+          if (adds.isEmpty && !group.exists(r => deleted(r.vec_id) || r.neighbors.exists(deleted)))
+            group.iterator
+          else patchShard(params, bw, shard, group, adds, deleted)
         }
     }
     rewrite(spark, path, op, params, splitOf(meta, path), filesDir,
@@ -570,140 +564,41 @@ object StreamingIndex {
     }
   }
 
-  /** The FreshDiskANN §4.2 delete patch over ONE shard's rows:
-    * deleted rows drop; a live row with a deleted neighbor re-prunes
-    * over (live neighbors ∪ live out-neighbors of each deleted
-    * neighbor); a row touching no deleted id passes through as the
-    * SAME object (the byte-identity DeleteSpec pins). The delete
-    * phase of [[patchInPlace]]. */
-  private[index] def deletePatchShard(metric: Metric, maxDeg: Int,
-      alpha: Double, group: Array[IndexRow],
+  /** One shard's patch, on one [[VamanaGraph]] over the shard's rows
+    * and its new points `adds` with local ids in vec_id order
+    * ([[VamanaIndex.rebuildShardGraph]]) — FreshDiskANN's delete phase
+    * then its insert phase (arXiv:2105.09613 §4.2, §4.1):
+    *  - every live row with a deleted neighbour is repaired
+    *    ([[VamanaGraph.repair]]) over its live neighbours plus the live
+    *    out-neighbours of each deleted neighbour;
+    *  - the new points, which no row points at until then, insert
+    *    ([[VamanaGraph.insert]]) in vec_id order from the lowest live
+    *    row, or from the first new point in a shard the delete emptied.
+    * Deleted rows drop. A row whose list was not rewritten is emitted
+    * as the same object (the byte-identity DeleteSpec and
+    * InsertMergeSpec pin). */
+  private def patchShard(params: VamanaParams, beamWidth: Int, shard: Int,
+      group: Array[IndexRow], adds: Array[(Long, Array[Float])],
       deleted: Long => Boolean): Iterator[IndexRow] = {
-    val byId = new java.util.HashMap[Long, IndexRow](group.length * 2)
-    group.foreach(r => byId.put(r.vec_id, r))
-    group.iterator.filter(r => !deleted(r.vec_id)).map { r =>
-      var hasDeletedNbr = false
-      r.neighbors.foreach(n => if (deleted(n)) hasDeletedNbr = true)
-      if (!hasDeletedNbr) r
-      else {
-        // candidate set: live neighbors + the live out-neighbors
-        // of each deleted neighbor (the §4.2 formula), self-free
-        val cand = new java.util.LinkedHashSet[java.lang.Long]()
-        r.neighbors.foreach { n =>
-          if (!deleted(n)) { if (n != r.vec_id) cand.add(n) }
-          else {
-            val dRow = byId.get(n)
-            if (dRow != null) dRow.neighbors.foreach { nn =>
-              if (!deleted(nn) && nn != r.vec_id) cand.add(nn)
-            }
-          }
-        }
-        val withVec = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](cand.size)
-        val cit = cand.iterator()
-        while (cit.hasNext) {
-          val id = cit.next().longValue()
-          val row = byId.get(id)
-          if (row != null) withVec += ((id, row.embedding))
-        }
-        r.copy(neighbors =
-          robustPrune(metric, r.embedding, withVec.toArray, maxDeg, alpha))
-      }
+    // (row, isNew); new points sort before loaded rows, so the in-edges
+    // of a re-inserted id resolve to its deleted row, not the new one
+    val rows = adds.map { case (id, v) => (IndexRow(id, v, shard, Array.empty[Long]), true) } ++
+      group.map((_, false))
+    val (g, sorted) = VamanaIndex.rebuildShardGraph(rows, params)(_._1)
+    val loaded = g.graph.clone()
+    val dead = sorted.map { case (r, isNew) => !isNew && deleted(r.vec_id) }
+    sorted.indices.foreach { u =>
+      if (!dead(u) && sorted(u)._1.neighbors.exists(deleted))
+        g.repair(u, loaded(u).flatMap(v => if (dead(v)) loaded(v).filterNot(dead) else Array(v)))
     }
-  }
-
-  /** The FreshDiskANN §4.1 insert phase over ONE shard: each new
-    * point, in vec_id order, gets out-list = robustPrune(visited set
-    * of a greedy search from the shard entry), back-links into its
-    * chosen neighbors, and any list pushed past the slack bound
-    * α-re-prunes. A shard receiving no inserts passes through
-    * untouched (byte-identity InsertMergeSpec pins). `group` may be
-    * EMPTY (a fully-deleted shard under [[consolidate]]): the first
-    * new point seeds a fresh chain and becomes the entry. The insert
-    * phase of [[patchInPlace]]. */
-  private[index] def insertIntoShard(metric: Metric, maxDeg: Int,
-      alpha: Double, slack: Int, bwL: Int, shard: Int,
-      group: Array[IndexRow],
-      newPts: Array[(Long, Array[Float])]): Iterator[IndexRow] = {
-    if (newPts.isEmpty) group.iterator
-    else {
-      val dim = if (group.nonEmpty) group(0).embedding.length
-        else newPts(0)._2.length
-      val vecOf = new java.util.HashMap[Long, Array[Float]](
-        (group.length + newPts.length) * 2)
-      val adj = new java.util.HashMap[Long, Array[Long]](
-        (group.length + newPts.length) * 2)
-      group.foreach { r => vecOf.put(r.vec_id, r.embedding); adj.put(r.vec_id, r.neighbors) }
-      val touched = new java.util.HashSet[Long]()
-      // entry point: the shard's lowest id — its assignment seed
-      // by the standing lowest-id routing rule, so every greedy
-      // walk starts where routing says the shard is centered; an
-      // empty shard's entry is the first (lowest-id) inserted point
-      val entry = if (group.nonEmpty) {
-        var m = group(0).vec_id
-        group.foreach(r => if (r.vec_id < m) m = r.vec_id); m
-      } else newPts(0)._1
-      // paper GreedySearch: best-first over a size-bw working
-      // set; V = the EXPANDED set, returned with distances as
-      // the prune candidate pool
-      def greedy(q: Array[Float]): Array[(Long, Double)] = {
-        val wIds = new Array[Long](bwL)
-        val wD = new Array[Double](bwL)
-        val wExp = new Array[Boolean](bwL)
-        var wLen = 0
-        val seen = new java.util.HashSet[Long]()
-        val visited = new scala.collection.mutable.ArrayBuffer[(Long, Double)](bwL)
-        def wInsert(id: Long, d: Double): Unit = {
-          if (wLen == bwL && d >= wD(wLen - 1)) return
-          var pos = java.util.Arrays.binarySearch(wD, 0, wLen, d)
-          if (pos < 0) pos = -pos - 1
-          val end = math.min(wLen, bwL - 1)
-          var j = end
-          while (j > pos) { wIds(j) = wIds(j - 1); wD(j) = wD(j - 1); wExp(j) = wExp(j - 1); j -= 1 }
-          if (pos < bwL) { wIds(pos) = id; wD(pos) = d; wExp(pos) = false
-            if (wLen < bwL) wLen += 1 }
-        }
-        seen.add(entry)
-        wInsert(entry, metric.eval(q, 0, vecOf.get(entry), 0, dim))
-        var done = false
-        while (!done) {
-          var pick = -1; var j = 0
-          while (pick < 0 && j < wLen) { if (!wExp(j)) pick = j; j += 1 }
-          if (pick < 0) done = true
-          else {
-            wExp(pick) = true
-            val cur = wIds(pick)
-            visited += ((cur, wD(pick)))
-            val nbrs = adj.get(cur)
-            if (nbrs != null) nbrs.foreach { n =>
-              if (seen.add(n))
-                wInsert(n, metric.eval(q, 0, vecOf.get(n), 0, dim))
-            }
-          }
-        }
-        visited.toArray
-      }
-      newPts.foreach { case (id, v) =>
-        val cands =
-          if (adj.isEmpty) Array.empty[(Long, Array[Float])]
-          else greedy(v).map { case (cid, _) => (cid, vecOf.get(cid)) }
-        val nbrs = robustPrune(metric, v, cands, maxDeg, alpha)
-        vecOf.put(id, v); adj.put(id, nbrs); touched.add(id)
-        nbrs.foreach { n =>
-          val cur = adj.get(n)
-          if (!cur.contains(id)) {
-            val ext = java.util.Arrays.copyOf(cur, cur.length + 1)
-            ext(cur.length) = id
-            if (ext.length > slack) {
-              val cs = ext.map(x => (x, vecOf.get(x)))
-              adj.put(n, robustPrune(metric, vecOf.get(n), cs, maxDeg, alpha))
-            } else adj.put(n, ext)
-            touched.add(n)
-          }
-        }
-      }
-      group.iterator.map { r =>
-        if (touched.contains(r.vec_id)) r.copy(neighbors = adj.get(r.vec_id)) else r
-      } ++ newPts.iterator.map { case (id, v) => IndexRow(id, v, shard, adj.get(id)) }
+    val fresh = sorted.indices.filter(sorted(_)._2)
+    if (fresh.nonEmpty) {
+      val entry = sorted.indices.find(u => !sorted(u)._2 && !dead(u)).getOrElse(fresh.head)
+      fresh.foreach(g.insert(_, entry, beamWidth))
+    }
+    sorted.indices.iterator.filterNot(dead).map { u =>
+      val r = sorted(u)._1
+      if (g.graph(u) eq loaded(u)) r else r.copy(neighbors = g.graph(u).map(sorted(_)._1.vec_id))
     }
   }
 
@@ -788,48 +683,6 @@ object StreamingIndex {
       absorbSegments(spark, path, params, mainShards, filesDir = filesDir)
       "absorb"
     }
-  }
-
-  /** Robust α-prune over global ids (reference lib.rs:1201-1279
-    * semantics — α-occlusion then nearest backfill — re-expressed
-    * over (vec_id, embedding) pairs for the merge path, where
-    * candidates span rows rather than one in-memory graph's local
-    * indices). */
-  private[index] def robustPrune(metric: Metric, p: Array[Float],
-      cands: Array[(Long, Array[Float])], maxDeg: Int, alpha: Double): Array[Long] = {
-    if (cands.isEmpty) return Array.empty
-    val dim = p.length
-    val sorted = cands.map { case (id, e) => (id, e, metric.eval(p, 0, e, 0, dim)) }
-      .sortBy(t => (t._3, t._1))
-    val outIds = new Array[Long](math.min(maxDeg, sorted.length))
-    val outVecs = new Array[Array[Float]](outIds.length)
-    var outLen = 0
-    // phase 1: α-occlusion
-    var i = 0
-    while (i < sorted.length && outLen < outIds.length) {
-      val (c, ce, dc) = sorted(i)
-      var occluded = false
-      var t = 0
-      while (t < outLen && !occluded) {
-        if (alpha * metric.eval(ce, 0, outVecs(t), 0, dim) <= dc) occluded = true
-        t += 1
-      }
-      if (!occluded) { outIds(outLen) = c; outVecs(outLen) = ce; outLen += 1 }
-      i += 1
-    }
-    // phase 2: nearest backfill
-    if (outLen < outIds.length) {
-      i = 0
-      while (i < sorted.length && outLen < outIds.length) {
-        val (c, ce, _) = sorted(i)
-        var present = false
-        var t = 0
-        while (t < outLen && !present) { if (outIds(t) == c) present = true; t += 1 }
-        if (!present) { outIds(outLen) = c; outVecs(outLen) = ce; outLen += 1 }
-        i += 1
-      }
-    }
-    if (outLen == outIds.length) outIds else java.util.Arrays.copyOf(outIds, outLen)
   }
 
   /** Online serving of a QUERY stream: each micro-batch of

@@ -223,6 +223,10 @@ case class VamanaParams(
   *  4. reverse edges merged; lists over `slackLimit` are re-pruned
   *     (ref lib.rs:784-914)
   *
+  * The streaming index mutates a built graph with the same steps:
+  * [[insert]] is step 3 from one entry followed by step 4, and
+  * [[repair]] is step 3's prune over a delete's candidates.
+  *
   * All randomness is splitmix64 streams keyed by (seed, node) so two
   * builds of the same shard are identical. The kernel is allocation-
   * free on the hot path: primitive parallel arrays (no boxed
@@ -291,8 +295,8 @@ final class VamanaGraph(
 
   // ------------------------------------------------------------- prune pool
 
-  /** Build-only candidate pool for [[pruneCandidates]], with its own
-    * dedup marks; the beam search's scratch lives in [[BestFirst]]. */
+  /** Candidate pool for [[pruneCandidates]], with its own dedup
+    * marks; the beam search's scratch lives in [[BestFirst]]. */
   private final class Pool {
     val dedupMark = new Array[Int](n)
     var dedupEpoch = 0
@@ -410,12 +414,74 @@ final class VamanaGraph(
     if (outLen == out.length) out else JArrays.copyOf(out, outLen)
   }
 
+  /** Reverse-edge merge of `src`'s list `outs` (ref lib.rs:784-914):
+    * each listed row that does not point at `src` yet gains it, and a
+    * list pushed past `slackLimit` is α-re-pruned to `maxDeg`. */
+  private def backLink(src: Int, outs: Array[Int], pool: Pool, maxDeg: Int,
+      alpha: Double): Unit = {
+    val slack = params.slackLimit
+    var t = 0
+    while (t < outs.length) {
+      val dst = outs(t)
+      val cur = graph(dst)
+      var present = false
+      var x = 0
+      while (x < cur.length && !present) { if (cur(x) == src) present = true; x += 1 }
+      if (!present) {
+        if (cur.length + 1 <= slack) {
+          val merged = JArrays.copyOf(cur, cur.length + 1)
+          merged(cur.length) = src
+          graph(dst) = merged
+        } else {
+          pool.candLen = 0
+          var y = 0
+          while (y < cur.length) { pool.candPush(cur(y), dist(dst, cur(y))); y += 1 }
+          pool.candPush(src, dist(dst, src))
+          graph(dst) = pruneCandidates(dst, pool, maxDeg, alpha)
+        }
+      }
+      t += 1
+    }
+  }
+
+  // ------------------------------------------------------------- mutation
+
+  /** The prune pool of [[insert]] and [[repair]]. */
+  @transient private lazy val editPool = new Pool
+
+  /** FreshDiskANN Insert (Singh et al., arXiv:2105.09613 §4.1) — the
+    * build's per-node step from one explicit `entry`: a [[BestFirst]]
+    * search for row `u` logs every row it evaluates, `u`'s list becomes
+    * the α-prune of that log, and `u` back-links into each row it chose
+    * ([[backLink]]). No row may point at `u` before; `entry` must be
+    * linked already, or be `u` itself, which then gets an empty list. */
+  private[index] def insert(u: Int, entry: Int, beamWidth: Int): Unit = {
+    val pool = editPool
+    val beam = BestFirst.scratch()
+    BestFirst.search(beam, n, entry, beamWidth, BestFirst.lists(graph),
+      j => dist(u, j), collect = true)
+    pool.candLen = 0
+    var v = 0
+    while (v < beam.visLen) { pool.candPush(beam.visIds(v), beam.visDists(v)); v += 1 }
+    graph(u) = pruneCandidates(u, pool, params.maxDegree, params.alpha)
+    backLink(u, graph(u), pool, params.maxDegree, params.alpha)
+  }
+
+  /** FreshDiskANN Delete repair (§4.2): row `u`'s list becomes the
+    * α-prune of the caller's candidates `cands` — its live neighbours
+    * plus the live out-neighbours of each deleted one. */
+  private[index] def repair(u: Int, cands: Array[Int]): Unit = {
+    val pool = editPool
+    pool.candLen = 0
+    cands.foreach(c => pool.candPush(c, dist(u, c)))
+    graph(u) = pruneCandidates(u, pool, params.maxDegree, params.alpha)
+  }
+
   // ------------------------------------------------------------- build
 
   def build(): VamanaGraph = {
     if (n == 1) { graph(0) = Array.empty; return this }
     val maxDeg = math.min(params.maxDegree, n - 1)
-    val slack = params.slackLimit
 
     // 1. seeded random bootstrap (ref lib.rs:989-1004)
     var u = 0
@@ -484,38 +550,11 @@ final class VamanaGraph(
           newLists(ci - cs) = pruneCandidates(node, pool, maxDeg, passAlpha)
           ci += 1
         }
-        // merge chunk: commit outgoing, add reverse edges, slack re-prune
-        // (ref lib.rs:784-914)
+        // merge chunk: commit outgoing, then the reverse edges
         ci = cs
         while (ci < ce) { graph(order(ci)) = newLists(ci - cs); ci += 1 }
         ci = cs
-        while (ci < ce) {
-          val src = order(ci)
-          val outs = newLists(ci - cs)
-          var t = 0
-          while (t < outs.length) {
-            val dst = outs(t)
-            val cur = graph(dst)
-            var present = false
-            var x = 0
-            while (x < cur.length && !present) { if (cur(x) == src) present = true; x += 1 }
-            if (!present) {
-              if (cur.length + 1 <= slack) {
-                val merged = JArrays.copyOf(cur, cur.length + 1)
-                merged(cur.length) = src
-                graph(dst) = merged
-              } else {
-                pool.candLen = 0
-                var y = 0
-                while (y < cur.length) { pool.candPush(cur(y), dist(dst, cur(y))); y += 1 }
-                pool.candPush(src, dist(dst, src))
-                graph(dst) = pruneCandidates(dst, pool, maxDeg, passAlpha)
-              }
-            }
-            t += 1
-          }
-          ci += 1
-        }
+        while (ci < ce) { backLink(order(ci), newLists(ci - cs), pool, maxDeg, passAlpha); ci += 1 }
         cs = ce
       }
       pass += 1

@@ -404,30 +404,31 @@ object VamanaIndex {
   }
 
   /** Shared build tail: one shard-exact repartition, then per-shard
-    * in-memory Vamana builds inside `mapPartitions`. */
+    * in-memory Vamana builds inside `mapPartitions` ([[buildShards]]). */
   private[graft] def buildAssigned(
       assigned: DataFrame, params: VamanaParams, numShards: Int): Dataset[IndexRow] = {
     val s = assigned.sparkSession
     import s.implicits._
     placeByShard(assigned, numShards)
       .as[(Long, Array[Float], Int)]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        rows.groupBy(_._3).iterator.flatMap { case (shard, group) =>
-          val sorted = group.sortBy(_._1) // deterministic local ordering
-          val n = sorted.length
-          val dim = if (n == 0) 0 else sorted(0)._2.length
-          val flat = new Array[Float](n * dim)
-          var i = 0
-          while (i < n) { System.arraycopy(sorted(i)._2, 0, flat, i * dim, dim); i += 1 }
-          val g = new VamanaGraph(flat, dim, n, params).build()
-          sorted.indices.iterator.map { li =>
-            IndexRow(sorted(li)._1, sorted(li)._2, shard,
-              g.graph(li).map(l => sorted(l)._1))
-          }
-        }
-      }
+      .mapPartitions(buildShards(_, params)(_._3, _._1, _._2)(
+        (r, nbrs) => IndexRow(r._1, r._2, r._3, nbrs)))
   }
+
+  /** The one per-shard build of a partition's rows, behind
+    * [[buildAssigned]] and [[StitchedIndex.build]]: each shard's rows
+    * in vec_id order ([[ShardServe.localize]]) build one [[VamanaGraph]],
+    * and `out` makes each row's output from the row and its neighbours
+    * as global ids. Generic over the row type, so a row can carry
+    * what an [[IndexRow]] has no slot for (the stitched label). */
+  private[graft] def buildShards[R: ClassTag, O](rows: Iterator[R], params: VamanaParams)(
+      shard: R => Int, id: R => Long, vec: R => Array[Float])(
+      out: (R, Array[Long]) => O): Iterator[O] =
+    rows.toArray.groupBy(shard).iterator.flatMap { case (_, group) =>
+      val (sorted, dim, flat, _) = ShardServe.localize(group)(id, vec)
+      val g = new VamanaGraph(flat, dim, sorted.length, params).build()
+      sorted.indices.iterator.map(li => out(sorted(li), g.graph(li).map(l => id(sorted(l)))))
+    }
 
   // ---------------------------------------------------------------- persist
 

@@ -13,7 +13,7 @@ import graft.operators.{Dedup, TextAnalysis}
   *
   * Compiles are counted with `CodegenMetrics.METRIC_COMPILATION_TIME`,
   * a JVM-global counter: the count is this spec's own only because
-  * sbt runs the forked suites one at a time. */
+  * build.sbt's `testGrouping` forks it in a JVM of its own. */
 class CodegenCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkSpecBase.spark
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.{MmapIndex, SingleFileIndex, VamanaIndex, VamanaParams}
+import graft.index.{HnswGraph, HnswParams, MmapIndex, SingleFileIndex, VamanaIndex, VamanaParams}
 
 /** Every serving graph can be shared by many task threads: searching
   * ONE instance from 8 threads at once must return, for every query,
@@ -57,6 +57,7 @@ class ConcurrentSearchSpec extends AnyFunSuite {
     val qFrac = qInt.map { q => val c = q.clone(); c(0) += 0.5f; c }
 
     val (heap, heapIds, _) = SingleFileIndex.importLocal(cosFile)
+    val hnsw = new HnswGraph(f32.flatten, Dim, N, HnswParams(m = 8, efConstruction = 48)).build()
     val (g8, ids8, _) = SingleFileIndex.importLocalU8(u8File)
     val mmL2 = new MmapIndex(l2File)
     val mmCos = new MmapIndex(cosFile)
@@ -66,6 +67,7 @@ class ConcurrentSearchSpec extends AnyFunSuite {
       val (words, wpv, rot) = mmCos.buildBinaryState()
       val searchers: Seq[(String, Array[Array[Float]], Array[Float] => Seq[(Long, Double)])] = Seq(
         ("VamanaGraph", qF, q => heap.search(q, 10, 32).map { case (r, d) => (heapIds(r), d) }.toSeq),
+        ("HnswGraph", qF, q => hnsw.search(q, 10, 32).map { case (r, d) => (r.toLong, d) }.toSeq),
         ("U8Graph integer", qInt, q => g8.search(q, 10, 32).map { case (r, d) => (ids8(r), d) }.toSeq),
         ("U8Graph fractional", qFrac, q => g8.search(q, 10, 32).map { case (r, d) => (ids8(r), d) }.toSeq),
         ("MmapIndex f32-l2", qF, q => mmL2.search(q, 10, 32).toSeq),
